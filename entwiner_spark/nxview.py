@@ -7,18 +7,21 @@ outer_adjlists.py:14-57, inner_adjlists.py:13-51): any unmodified nx
 algorithm — ``nx.dijkstra_path(G, u, v, "length")`` — runs against the
 store.  This module closes that protocol gap for the Spark engine:
 ``G[n]``, ``n in G``, ``G.nodes``, ``G.edges``, ``G.pred`` are lazy
-mappings backed by ``successors()`` / ``predecessors()`` /
-``has_node()`` point lookups.
+mappings backed by filtered point lookups on the edge and node
+tables.
 
 Scale note (by design, same as the reference): this surface is
-inherently point-lookup-shaped — each adjacency read is one filtered
-DataFrame collect on the driver.  It exists so driver-side nx
-algorithms work unmodified on graphs whose edge tables live in Spark;
-bulk analytics should use the distributed SparkGraph methods
-(shortest_path, pagerank, connected_components, ...) instead.  Inner
-adjacency rows for a node are fetched in ONE collect and memoized
-(parity with the reference's items() fast path, "avoid two round
-trips", inner_adjlists.py:37-41), and an LRU bounds driver memory.
+inherently point-lookup-shaped.  A cold ``G[n]`` is ONE Spark job: the
+node's edges, filtered on the pre-exchange edge plan so the filter
+reaches the scan, unioned with its node-table row, which answers the
+existence test in the same collect (parity with the reference's
+items() fast path, "avoid two round trips", inner_adjlists.py:37-41).
+The result is memoized in an LRU that bounds driver memory; a cached
+``G[n]`` and ``n in G`` for a cached node run no job.  The view exists
+so driver-side nx algorithms work unmodified on graphs whose edge
+tables live in Spark; bulk analytics should use the distributed
+SparkGraph methods (shortest_path, pagerank, connected_components,
+...) instead.
 
 By default the view is read-only: mutation methods raise
 ImmutableGraphError (parity: DiGraphDBView + exceptions.py:20).  With
@@ -32,20 +35,25 @@ graphs/digraphdb/__init__.py:164-167 — broken there, functional here).
 Writes to the key columns (``_u``/``_v``) and ``fid`` silently do not
 stick, matching the reference's PK protection (test_digraphdb.py
 test_update_fid).  Each write replaces the backing DataFrame plan
-lazily and bumps a generation counter that invalidates the view's
-memoized adjacency; lineage is truncated with localCheckpoint every
-``_CHECKPOINT_EVERY`` writes.  Per-assignment writes are the
-reference's own perf model (one SQL UPDATE per ``d[k]=v``); for bulk
-mutation use ``update_edges``/``add_edges_from`` (one join per batch),
-and call ``flush(store_dir)`` to persist the mutated graph atomically.
+lazily.  A write that keeps the edge schema and writes values of the
+Python type Spark returns for their columns is written through to the
+cached edge attrs, so every cached read stays valid; any other write
+bumps a generation counter that drops the memoized adjacency.  Lineage
+is truncated with localCheckpoint every ``_CHECKPOINT_EVERY`` writes.
+Per-assignment writes are the reference's own perf model (one SQL
+UPDATE per ``d[k]=v``); for bulk mutation use ``update_edges`` /
+``add_edges_from`` (one join per batch), and call ``flush(store_dir)``
+to persist the mutated graph atomically.
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
 from collections.abc import Iterator, Mapping, MutableMapping
+from weakref import WeakValueDictionary
 
 import networkx as nx
+from pyspark.sql import functions as F
 
 from entwiner_spark.exceptions import EdgeNotFound, ImmutableGraphError
 
@@ -54,35 +62,72 @@ _CHECKPOINT_EVERY = 50
 #: columns a dict-protocol write may never touch (PK parity: the
 #: reference ignores fid writes, test_digraphdb.py test_update_fid)
 _PROTECTED_KEYS = frozenset({"_u", "_v", "fid"})
+#: marks the node-table row a cold adjacency read unions in
+_NODE_HIT = "__nxview_node_hit"
+#: column type -> the Python type Spark returns for it; a write of any
+#: other value type (or into any other column type) is not patched
+#: into the cache, because the stored value may differ from the written
+#: one (an int written into a double column reads back as a float)
+_PY_TYPES = {
+    "double": float,
+    "long": int,
+    "integer": int,
+    "string": str,
+    "boolean": bool,
+}
 
 
-def _edge_attrs(row, drop: tuple[str, str]) -> dict:
+def _edge_attrs(row, drop: tuple[str, ...]) -> dict:
     d = row.asDict(recursive=True)
     for k in drop:
         d.pop(k, None)
     return d
 
 
+def _column_types(df) -> dict:
+    return {f.name: f.dataType for f in df.schema.fields}
+
+
+def _patchable(before: dict, after: dict, patch: dict) -> bool:
+    """True when a write described by ``patch`` ({(u, v): {key:
+    value}}) can be applied to the cached attrs verbatim: the write
+    kept the schema's name -> type map, and every value is ``None`` or
+    already the Python type Spark returns for its column."""
+    if before != after:
+        return False
+    return all(
+        k in before
+        and (x is None or type(x) is _PY_TYPES.get(before[k].typeName()))
+        for kv in patch.values()
+        for k, x in kv.items()
+    )
+
+
 class _EdgeDict(MutableMapping):
     """Write-through edge-attr mapping for the mutable view (parity:
     EdgeDict, reference graphs/digraphdb/edges.py:7-39).
 
-    Reads come from a generation-stamped snapshot — same one-collect
-    fast path as the read-only view — and refresh automatically after
-    any write through the owning view.  ``d[k] = v`` routes to the
-    keyed mutation operators; ``del d[k]`` sets NULL (the reference's
-    delete semantics); protected keys silently do not stick.
+    The view keeps one live instance per edge, shared by ``G[u][v]``
+    and ``G.pred[v][u]``.  Reads come from a generation-stamped
+    snapshot seeded by the adjacency collect; writes through the view
+    patch it in place, and a write that drops the view's cache makes it
+    reload with one filtered collect.  ``d[k] = v`` routes to the keyed
+    mutation operators; ``del d[k]`` sets NULL (the reference's delete
+    semantics); protected keys silently do not stick.
     """
 
-    __slots__ = ("_view", "_u", "_v", "_attrs", "_gen")
+    __slots__ = ("_view", "_u", "_v", "_attrs", "_gen", "__weakref__")
 
-    def __init__(self, view, u: str, v: str, attrs: dict | None, gen: int):
+    def __init__(self, view, u: str, v: str):
         self._view, self._u, self._v = view, u, v
-        self._attrs, self._gen = attrs, gen
+        self._attrs, self._gen = None, -1
 
     def _load(self) -> dict:
-        if self._attrs is None or self._gen != self._view._generation:
-            self._attrs = self._view.sg.edge_attrs(self._u, self._v)
+        if not self._fresh():
+            rows = self._view._edge_scan(self._u, self._v).collect()
+            if not rows:
+                raise EdgeNotFound(f"({self._u}, {self._v})")
+            self._attrs = _edge_attrs(rows[0], ("_u", "_v"))
             self._gen = self._view._generation
         return self._attrs
 
@@ -97,8 +142,8 @@ class _EdgeDict(MutableMapping):
 
     def _fresh(self) -> bool:
         """True when the snapshot matches the view's current edge plan —
-        the edge provably exists, so the write can skip the existence
-        scan (one Spark job per assignment instead of two)."""
+        the edge provably exists, so a write can skip the existence
+        scan."""
         return (
             self._attrs is not None
             and self._gen == self._view._generation
@@ -107,9 +152,7 @@ class _EdgeDict(MutableMapping):
     def __setitem__(self, k: str, value) -> None:
         if k in _PROTECTED_KEYS:
             return  # PK columns never change via the dict protocol
-        self._view._write_edge_attr(
-            self._u, self._v, k, value, _known_exists=self._fresh()
-        )
+        self._view._write_edge_attr(self._u, self._v, k, value)
 
     def __delitem__(self, k: str) -> None:
         if k in _PROTECTED_KEYS:
@@ -118,9 +161,7 @@ class _EdgeDict(MutableMapping):
             # MutableMapping contract; also prevents a misspelled delete
             # from installing a permanent void-typed column
             raise KeyError(k)
-        self._view._write_edge_attr(
-            self._u, self._v, k, None, _known_exists=self._fresh()
-        )
+        self._view._write_edge_attr(self._u, self._v, k, None)
 
     def __repr__(self) -> str:
         return f"_EdgeDict({self._u!r}, {self._v!r}, {dict(self._load())!r})"
@@ -129,59 +170,32 @@ class _EdgeDict(MutableMapping):
 class _InnerAdj(Mapping):
     """``G._succ[n]`` / ``G._pred[n]``: neighbor -> edge-attr dict.
 
-    Construction is free (no I/O); the first read collects ALL
-    neighbor edges of ``n`` in one query and memoizes them.  On a
-    mutable view the values are write-through :class:`_EdgeDict`
-    instances seeded from the same single collect.
+    Built from the single collect of the cold ``G[n]`` read that also
+    proved ``n`` exists, so reading it runs no job.  On a mutable view
+    the values are the view's write-through :class:`_EdgeDict`
+    instances, seeded from that collect.
     """
 
-    __slots__ = ("_sg", "_n", "_succ", "_rows", "_view")
+    __slots__ = ("_n", "_succ", "_rows")
 
-    def __init__(self, sg, n: str, succ: bool, view=None):
-        self._sg, self._n, self._succ = sg, n, succ
-        self._rows: dict | None = None
-        self._view = view
-
-    def _load(self) -> dict:
-        if self._rows is None:
-            if self._succ:
-                rows = self._sg.successors(self._n).collect()
-                pairs = [(r["_v"], _edge_attrs(r, ("_u", "_v"))) for r in rows]
-            else:
-                rows = self._sg.predecessors(self._n).collect()
-                pairs = [(r["_u"], _edge_attrs(r, ("_u", "_v"))) for r in rows]
-            v = self._view
-            if v is not None and v._mutable:
-                gen = v._generation
-                self._rows = {
-                    k: _EdgeDict(
-                        v,
-                        self._n if self._succ else k,
-                        k if self._succ else self._n,
-                        attrs,
-                        gen,
-                    )
-                    for k, attrs in pairs
-                }
-            else:
-                self._rows = dict(pairs)
-        return self._rows
+    def __init__(self, n: str, succ: bool, rows: dict):
+        self._n, self._succ, self._rows = n, succ, rows
 
     def __getitem__(self, k: str):
-        return self._load()[k]
+        return self._rows[k]
 
     def __iter__(self) -> Iterator[str]:
-        return iter(self._load())
+        return iter(self._rows)
 
     def __len__(self) -> int:
-        return len(self._load())
+        return len(self._rows)
 
     def __repr__(self) -> str:
         return f"_InnerAdj({self._n!r}, succ={self._succ})"
 
 
 class _OuterAdj(Mapping):
-    """``G._succ`` / ``G._pred``: node -> lazy inner adjacency."""
+    """``G._succ`` / ``G._pred``: node -> inner adjacency, LRU-cached."""
 
     __slots__ = ("_sg", "_succ", "_lru", "_view")
 
@@ -191,17 +205,44 @@ class _OuterAdj(Mapping):
         self._view = view
 
     def __getitem__(self, n: str) -> _InnerAdj:
-        # nx treats missing nodes via KeyError from the adjacency
         if n in self._lru:
             self._lru.move_to_end(n)
             return self._lru[n]
-        if not self._sg.has_node(n):
-            raise KeyError(n)
-        view = _InnerAdj(self._sg, n, self._succ, view=self._view)
-        self._lru[n] = view
+        adj = _InnerAdj(n, self._succ, self._fetch(n))
+        self._lru[n] = adj
         if len(self._lru) > _LRU_SIZE:
             self._lru.popitem(last=False)
-        return view
+        return adj
+
+    def _fetch(self, n: str) -> dict:
+        """One job: the node's edges on the pre-exchange plan plus its
+        node-table row.  nx treats missing nodes via KeyError from the
+        adjacency, so a node absent from the node table raises."""
+        sg = self._sg
+        key, other = ("_u", "_v") if self._succ else ("_v", "_u")
+        rows = (
+            sg._edges_raw.filter(F.col(key) == n)
+            .unionByName(
+                sg.nodes.filter(F.col("_n") == n).select(
+                    F.lit(True).alias(_NODE_HIT)
+                ),
+                allowMissingColumns=True,
+            )
+            .collect()
+        )
+        if not any(r[_NODE_HIT] for r in rows):
+            raise KeyError(n)
+        view = self._view
+        out = {}
+        for r in rows:
+            if r[_NODE_HIT]:
+                continue
+            m, attrs = r[other], _edge_attrs(r, ("_u", "_v", _NODE_HIT))
+            if view is not None and view._mutable:
+                u, v = (n, m) if self._succ else (m, n)
+                attrs = view._edge_dict(u, v, attrs)
+            out[m] = attrs
+        return out
 
     def __contains__(self, n: object) -> bool:
         return n in self._lru or self._sg.has_node(n)
@@ -217,10 +258,10 @@ class _OuterAdj(Mapping):
 class _NodeDict(Mapping):
     """``G._node``: node id -> node-attr dict."""
 
-    __slots__ = ("_sg",)
+    __slots__ = ("_sg", "_adjs")
 
-    def __init__(self, sg):
-        self._sg = sg
+    def __init__(self, sg, adjs: tuple[_OuterAdj, ...]):
+        self._sg, self._adjs = sg, adjs
 
     def __getitem__(self, n: str) -> dict:
         rows = self._sg.get_node(n).limit(1).collect()
@@ -231,7 +272,8 @@ class _NodeDict(Mapping):
         return d
 
     def __contains__(self, n: object) -> bool:
-        return self._sg.has_node(n)
+        # a cached adjacency read proved the node exists
+        return any(n in a._lru for a in self._adjs) or self._sg.has_node(n)
 
     def __iter__(self) -> Iterator[str]:
         for r in self._sg.nodes.select("_n").toLocalIterator():
@@ -303,9 +345,12 @@ class LazyDiGraphView(nx.DiGraph):
         self._mutable = mutable
         self._generation = 0
         self._writes = 0
-        self._node = _NodeDict(spark_graph)
+        # (u, v) -> the one live _EdgeDict of the edge, while the LRU or
+        # a caller holds it: the set a write-through patch must reach
+        self._edge_dicts: WeakValueDictionary = WeakValueDictionary()
         self._succ = _OuterAdj(spark_graph, succ=True, view=self)
         self._pred = _OuterAdj(spark_graph, succ=False, view=self)
+        self._node = _NodeDict(spark_graph, (self._succ, self._pred))
         self.__networkx_cache__ = {}
         # Guard the nx-internal wiring assumption: on nx >= 3.x the
         # _succ descriptor aliases _adj; if a networkx release changes
@@ -359,62 +404,109 @@ class LazyDiGraphView(nx.DiGraph):
 
     # ---- write plumbing (mutable views only) --------------------------
 
-    def _swap_edges(self, new_edges) -> None:
-        """Install a mutated edge plan and invalidate every memoized
-        read.  Lineage is truncated periodically so thousands of
-        incremental writes cannot build an unbounded plan tree."""
+    def _swap_edges(self, new_edges, patch: dict | None = None) -> None:
+        """Install a mutated edge plan and keep the read cache coherent.
+
+        Write-through rule: ``patch`` ({(u, v): {key: value}}) is the
+        write as its semantics leave the row.  When the write keeps the
+        edge schema's name -> type map and every value is ``None`` or
+        already the Python type Spark returns for its column, the
+        cached attrs of the touched edges are patched in place and
+        every other cached read stays valid; an edge absent from the
+        cache is left to its next read.  Any other write (no patch, a
+        new column, a widened type, a value Spark would convert) drops
+        every memoized read.  Lineage is truncated periodically so
+        thousands of incremental writes cannot build an unbounded plan
+        tree."""
+        if patch is not None and not _patchable(
+            _column_types(self.sg.edges), _column_types(new_edges), patch
+        ):
+            patch = None
         self._writes += 1
         if self._writes % _CHECKPOINT_EVERY == 0:
             new_edges = new_edges.localCheckpoint(eager=True)
         self.sg.edges = new_edges
         self.sg._edges_raw = new_edges
         self.sg._invalidate_size_caches()
-        self._generation += 1
-        self._succ._lru.clear()
-        self._pred._lru.clear()
         self.__networkx_cache__.clear()
+        if patch is None:
+            self._generation += 1
+            self._succ._lru.clear()
+            self._pred._lru.clear()
+            return
+        for edge, kv in patch.items():
+            d = self._edge_dicts.get(edge)
+            if d is not None and d._fresh():
+                d._attrs.update(kv)
 
-    def _write_edge_attr(
-        self, u: str, v: str, key: str, value, _known_exists: bool = False
-    ) -> None:
+    def _edge_dict(self, u: str, v: str, attrs: dict) -> _EdgeDict:
+        """The live :class:`_EdgeDict` of ``(u, v)``, reseeded with
+        ``attrs`` read from the current edge plan."""
+        d = self._edge_dicts.get((u, v))
+        if d is None:
+            d = self._edge_dicts[(u, v)] = _EdgeDict(self, u, v)
+        d._attrs, d._gen = attrs, self._generation
+        return d
+
+    def _edge_scan(self, u: str, v: str):
+        """Edge ``(u, v)`` filtered on the pre-exchange plan, so the
+        filter reaches the scan and a collect is one job."""
+        return self.sg._edges_raw.filter(
+            (F.col("_u") == u) & (F.col("_v") == v)
+        )
+
+    def _has_edge(self, u: str, v: str) -> bool:
+        """Existence test; free when a fresh cached read proves it."""
+        d = self._edge_dicts.get((u, v))
+        if d is not None and d._fresh():
+            return True
+        return bool(self._edge_scan(u, v).select("_u").collect())
+
+    def _write_edge_attr(self, u: str, v: str, key: str, value) -> None:
         from entwiner_spark.operators.mutations import set_edge_attr
 
-        if not _known_exists and not self.sg.get_edge(u, v).limit(1).count():
+        if not self._has_edge(u, v):
             raise EdgeNotFound(f"({u}, {v})")
-        self._swap_edges(set_edge_attr(self.sg.edges, u, v, key, value))
+        self._swap_edges(
+            set_edge_attr(self.sg.edges, u, v, key, value),
+            {(u, v): {key: value}},
+        )
 
     def _impl_update_edges(self, ebunch) -> None:
         """Batched keyed update — the path the reference intends with
         DiGraphDB.update_edges (graphs/digraphdb/__init__.py:164-167).
         One broadcast join per call, however many edges are in the
-        batch; unknown attr columns are added (schema evolution)."""
+        batch; unknown attr columns are added (schema evolution).
+
+        A ``None`` value keeps the old one (update_columns' sparse
+        semantics).  Rows for the same ``(u, v)`` are merged on the
+        driver in batch order, so the result is the one sequential
+        writes would leave, not whichever duplicate the join keeps."""
         from entwiner_spark.operators.mutations import update_columns
 
-        edges = _normalize_ebunch(ebunch, {})
-        if not edges:
+        # Dropping None values also drops keys whose values are all
+        # None: schema inference cannot type them
+        # (CANNOT_DETERMINE_TYPE), and under the sparse semantics they
+        # are a no-op anyway (per-edge NULL-clearing goes through
+        # del G[u][v][k], reference delete semantics).
+        merged: dict[tuple[str, str], dict] = {}
+        for u, v, d in _normalize_ebunch(ebunch, {}):
+            merged.setdefault((u, v), {}).update(
+                (k, x)
+                for k, x in d.items()
+                if k not in _PROTECTED_KEYS and x is not None
+            )
+        merged = {e: d for e, d in merged.items() if d}
+        if not merged:
             return
-        # Drop keys whose values are all None: schema inference cannot
-        # type them (CANNOT_DETERMINE_TYPE), and under update_columns'
-        # sparse-update semantics a NULL update keeps the old value, so
-        # an all-None column is a no-op anyway (per-edge NULL-clearing
-        # goes through del G[u][v][k], reference delete semantics).
-        keys = sorted(
-            {
-                k
-                for _, _, d in edges
-                for k in d
-                if k not in _PROTECTED_KEYS and d[k] is not None
-            }
-        )
-        if not keys:
-            return
+        keys = sorted({k for d in merged.values() for k in d})
         rows = [
             {"_u": u, "_v": v, **{k: d.get(k) for k in keys}}
-            for u, v, d in edges
+            for (u, v), d in merged.items()
         ]
         updates = self.sg.spark.createDataFrame(rows)
         self._swap_edges(
-            update_columns(self.sg.edges, updates, ["_u", "_v"])
+            update_columns(self.sg.edges, updates, ["_u", "_v"]), merged
         )
 
     def _impl_add_edges_from(self, ebunch, **attr) -> None:
@@ -467,7 +559,7 @@ class LazyDiGraphView(nx.DiGraph):
         self._swap_edges(delete_keys(self.sg.edges, keys_df, ["_u", "_v"]))
 
     def _impl_remove_edge(self, u, v) -> None:
-        if not self.sg.get_edge(u, v).limit(1).count():
+        if not self._has_edge(u, v):
             raise nx.NetworkXError(f"The edge {u}-{v} is not in the graph.")
         self._impl_remove_edges_from([(u, v)])
 

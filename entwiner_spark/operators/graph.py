@@ -203,7 +203,9 @@ class SparkGraph:
         return self.nodes.filter(F.col("_n") == n)
 
     def has_node(self, n: str) -> bool:
-        return bool(self.nodes.filter(F.col("_n") == n).limit(1).count())
+        # a filtered projection collect is one job at any partition
+        # count; limit(1).count() plans a GlobalLimit exchange (two)
+        return bool(self.nodes.filter(F.col("_n") == n).select("_n").collect())
 
     def node_attrs(self, n: str) -> dict:
         """Strict node lookup -> attribute dict; raises NodeNotFound on

@@ -257,3 +257,174 @@ def test_create_graph_empty_then_mutable(spark, tmp_path):
     assert G.size() == 0
     G.add_edges_from([("a", "b", {"cost": 1.0}), ("b", "c", {"cost": 2.0})])
     assert G.size() == 2 and G["a"]["b"]["cost"] == 1.0
+
+
+# ---- read cache: job counts and coherence across the view's writes ----
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs."""
+    before = _last_job_id(spark)
+    fn()
+    return _last_job_id(spark) - before
+
+
+def _typed(d) -> dict:
+    # 3 == 3.0, so compare types too: a cached int where Spark returns
+    # a float is a stale read
+    return {k: (type(x), x) for k, x in dict(d).items()}
+
+
+def _adjacency(G, nodes) -> dict:
+    return {
+        (side, n): {m: _typed(d) for m, d in adj[n].items()}
+        for side, adj in (("succ", G.succ), ("pred", G.pred))
+        for n in nodes
+    }
+
+
+def _assert_coherent(spark, G) -> int:
+    """Every ``G[u][v]`` and ``G.pred[v][u]`` equals a read from a fresh
+    view over ``G.sg``.  Returns the jobs the reads through ``G`` ran."""
+    nodes = sorted(r["_n"] for r in G.sg.nodes.select("_n").collect())
+    want = _adjacency(LazyDiGraphView(G.sg), nodes)
+    got = {}
+    jobs = _jobs(spark, lambda: got.update(_adjacency(G, nodes)))
+    assert got == want
+    return jobs
+
+
+def _edge_keys(G) -> list[tuple[str, str]]:
+    return sorted((r["_u"], r["_v"]) for r in G.sg.edges.select("_u", "_v").collect())
+
+
+@pytest.fixture()
+def Gcost(Gmut):
+    """Mutable view whose edges all carry double ``cost`` and ``w``
+    columns, with every adjacency already read."""
+    Gmut.update_edges([(u, v, {"cost": 1.0, "w": 1.0}) for u, v in _edge_keys(Gmut)])
+    _adjacency(Gmut, list(Gmut))
+    return Gmut
+
+
+def _same_type_update(G, u, v):
+    G.update_edges([(u, v, {"cost": 2.5})])
+
+
+def _int_into_double(G, u, v):
+    G[u][v]["cost"] = 3
+
+
+def _new_column(G, u, v):
+    G[u][v]["extra"] = "x"
+
+
+def _delete_key(G, u, v):
+    del G[u][v]["cost"]
+
+
+def _duplicate_key_batch(G, u, v):
+    G.update_edges([(u, v, {"cost": 1.5, "w": 5.0}), (u, v, {"cost": 2.0})])
+
+
+def _add_edge(G, u, v):
+    G.add_edge(u, "9.9, 9.9", cost=4.0)
+
+
+def _remove_edge(G, u, v):
+    G.remove_edge(u, v)
+
+
+@pytest.mark.parametrize(
+    "write, patched",
+    [
+        (_same_type_update, True),
+        (_int_into_double, False),
+        (_new_column, False),
+        (_delete_key, True),
+        (_duplicate_key_batch, True),
+        (_add_edge, False),
+        (_remove_edge, False),
+    ],
+)
+def test_cache_coherent_after_write(spark, Gcost, write, patched):
+    """The cache stays equal to a fresh read after each kind of write.
+    Writes the cache can take verbatim are patched in place, so the
+    re-read runs no job; the others drop the cache."""
+    G = Gcost
+    u, v = N1, N2
+    assert (u, v) in _edge_keys(G)
+    write(G, u, v)
+    jobs = _assert_coherent(spark, G)
+    if patched:
+        assert jobs == 0
+
+
+def test_held_edge_dict_coherent_after_eviction(Gmut, monkeypatch):
+    """An edge dict the caller still holds after its node left the LRU
+    sees later writes, patched or not."""
+    import entwiner_spark.nxview as nxview
+
+    G = Gmut
+    monkeypatch.setattr(nxview, "_LRU_SIZE", 1)
+    G.update_edges([(u, v, {"cost": 1.0}) for u, v in _edge_keys(G)])
+    d = G[N1][N2]
+    G[N2]  # evicts N1
+    assert N1 not in G._succ._lru
+    G.update_edges([(N1, N2, {"cost": 7.0})])
+    assert _typed(d) == _typed(LazyDiGraphView(G.sg)[N1][N2])
+    assert d["cost"] == 7.0
+    d["cost"] = 8  # int into double: drops the cache, d reloads
+    assert _typed(d) == _typed(LazyDiGraphView(G.sg)[N1][N2])
+    assert type(d["cost"]) is float
+
+
+def test_update_edges_duplicate_keys_merge_in_order(Gcost):
+    """Rows for the same edge in one batch act like sequential writes:
+    later values win, None keeps the earlier value."""
+    G = Gcost
+    G.update_edges(
+        [(N1, N2, {"cost": 1.5, "w": 5.0}), (N1, N2, {"cost": 2.0, "w": None})]
+    )
+    stored = LazyDiGraphView(G.sg)[N1][N2]
+    assert (stored["cost"], stored["w"]) == (2.0, 5.0)
+    assert (G[N1][N2]["cost"], G[N1][N2]["w"]) == (2.0, 5.0)
+
+
+def test_view_job_counts(spark, tmp_path, tiny_edges, tiny_nodes):
+    """A cold adjacency read is one job on a parquet store; cached reads,
+    membership of a read node, and a same-type write followed by a route
+    over nodes already read run none."""
+    from entwiner_spark.sources.parquet_store import (
+        read_graph_tables,
+        write_graph_tables,
+    )
+
+    store = str(tmp_path / "store")
+    write_graph_tables(tiny_edges, tiny_nodes, store, partitions=4)
+    e, n = read_graph_tables(spark, store)
+    G = LazyDiGraphView(SparkGraph(n, e, partitions=4), mutable=True)
+    assert _jobs(spark, lambda: G.sg.has_node(N1)) == 1
+    assert _jobs(spark, lambda: G[N2]) == 1
+    assert _jobs(spark, lambda: G.pred[N2]) == 1
+    assert _jobs(spark, lambda: G[N2]) == 0
+    assert _jobs(spark, lambda: N2 in G) == 0
+
+    keys = _edge_keys(G)
+    G.update_edges([(u, v, {"cost": 1.0}) for u, v in keys])
+    nodes = list(G)
+    for x in nodes:
+        G[x]
+
+    def write_then_route():
+        G.update_edges([(u, v, {"cost": 2.0}) for u, v in keys[:3]])
+        G[N1][N2]["cost"] = 3.0
+        return nx.dijkstra_path(G, nodes[0], nodes[-1], weight="cost")
+
+    assert _jobs(spark, write_then_route) == 0

@@ -24,24 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "j2_revenue_by_nation",
-    "a2_orders_per_customer",
-    "o1_top10_orders",
-    "u2_last_write_wins",
-    "w1_top3_per_customer",
-    "geo_f6_haversine_within",
-    "g_j1_sssp_weighted",
-    "t1_doc_stats",
-    "d2_minhash_signatures",
-    "d3_minhash_lsh_pairs",
-    "d4_simhash",
-    "s2_cosine_top10",
-    "s4_lsh_buckets",
-    "e1_tumbling_hourly",
-    "e3_sessionize",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
