@@ -31,7 +31,8 @@ CH literature uses, expressed as DataFrame fixpoints:
   the core was contracted, so no shortcut is missing).
 * **query** — bidirectional upward search: ONE state frame with a
   ``side`` column (fwd rows expand over rank-increasing edges,
-  bwd rows walk rank-increasing edges backwards), ONE fused
+  bwd rows walk rank-increasing edges backwards), ONE broadcast join
+  per round against a side-tagged expansion table, ONE fused
   union+groupBy merge per round (the SSSP shape), and a probe that
   stops both sides once no frontier f-value can undercut the best
   meeting cost μ.  Below ``LOCAL_THRESHOLD`` search edges the query
@@ -98,6 +99,17 @@ def _min_edges(edges: DataFrame) -> DataFrame:
         )
         .select("_u", "_v", F.col("b.w").alias("w"), F.col("b.mid").alias("mid"))
     )
+
+
+def _pred_walk(pred: dict, node) -> list:
+    """``node`` followed by its predecessors back to the search
+    origin (whose pred is None)."""
+    out = [node]
+    cur = pred.get(node)
+    while cur is not None:
+        out.append(cur)
+        cur = pred.get(cur)
+    return out
 
 
 class ContractionHierarchy:
@@ -1121,12 +1133,11 @@ class ContractionHierarchy:
             F.col("_rv") > self.rounds
         )
         top_rows = arcs.filter(top_pred).collect()
-        rank = {
-            r["_n"]: r["rank"]
-            for r in self.ranks.filter(
-                F.col("rank") > self.rounds
-            ).collect()
-        }
+        # a top node without a top arc relaxes nothing, so the ranks
+        # the top arcs carry are all the relaxation needs
+        rank = {}
+        for r in top_rows:
+            rank[r["_u"]], rank[r["_v"]] = r["_ru"], r["_rv"]
         w = {}
         mid = {}
         inn: dict = {}
@@ -1300,21 +1311,9 @@ class ContractionHierarchy:
         target,
         strategy: str = "auto",
         max_iterations: int = 200,
-        hops_per_round: int = 1,
     ) -> tuple[list, float] | None:
         """Bidirectional upward search + shortcut unpacking: the raw
-        node path and exact cost, or None if unreachable.
-
-        ``hops_per_round=2`` chains a second frontier expansion into
-        each distributed round (one extra broadcast join per side) to
-        halve the round count.  MEASURED SLOWER on local[32] (r14
-        interleaved warm A/B, 64x64 grid, 4 routes: 1-hop 71.7-76.1 s
-        total vs 2-hop 102.2-102.5 s, with and without a per-hop
-        reduce) — single-JVM rounds are cheap enough that the extra
-        per-round joins dominate, so the default stays 1.  On a real
-        multi-executor cluster with 100 ms+ barrier latency the trade
-        may reverse; the knob and the probe (tools/probe_ch_xl.py)
-        exist to re-measure there."""
+        node path and exact cost, or None if unreachable."""
         if source == target:
             return [source], 0.0
         local = strategy == "local" or (
@@ -1322,9 +1321,7 @@ class ContractionHierarchy:
         )
         if local:
             return self._route_local(source, target)
-        return self._route_pregel(
-            source, target, max_iterations, hops_per_round
-        )
+        return self._route_pregel(source, target, max_iterations)
 
     @_scaled_shuffle
     def distance_matrix(
@@ -1362,97 +1359,18 @@ class ContractionHierarchy:
         )
         if local:
             return self._distance_matrix_local(sources, targets)
-        up, down = self._up_down()
-        upk = up.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        downk = down.select(
-            F.col("_v").alias("_k"), F.col("_u").alias("_t"), "w"
-        ).persist()
-        idt = self.ranks.schema["_n"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("side", T.StringType(), False),
-                T.StructField("origin", idt, False),
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-        )
         init = [("f", s, s, 0.0) for s in dict.fromkeys(sources)] + [
             ("b", t, t, 0.0) for t in dict.fromkeys(targets)
         ]
-        dist = self.spark.createDataFrame(init, schema)
-        frontier = dist
-        for _ in range(max_iterations):
-            fr = frontier.select(
-                "side",
-                "origin",
-                F.col("_n").alias("_k"),
-                F.col("dist").alias("_fd"),
-            ).hint("broadcast")
-            msgs = (
-                fr.filter(F.col("side") == "f")
-                .join(upk, "_k")
-                .select(
-                    F.lit("f").alias("side"),
-                    "origin",
-                    F.col("_t").alias("_n"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                )
-                .unionByName(
-                    fr.filter(F.col("side") == "b")
-                    .join(downk, "_k")
-                    .select(
-                        F.lit("b").alias("side"),
-                        "origin",
-                        F.col("_t").alias("_n"),
-                        (F.col("_fd") + F.col("w")).alias("dist"),
-                    )
-                )
-            )
-            merged = (
-                dist.select(
-                    "side", "origin", "_n", "dist", F.lit(False).alias("_new")
-                )
-                .unionByName(
-                    msgs.select(
-                        "side",
-                        "origin",
-                        "_n",
-                        "dist",
-                        F.lit(True).alias("_new"),
-                    )
-                )
-                .groupBy("side", "origin", "_n")
-                .agg(F.min(F.struct("dist", "_new")).alias("b"))
-                .select(
-                    "side",
-                    "origin",
-                    "_n",
-                    F.col("b.dist").alias("dist"),
-                    F.col("b._new").alias("_imp"),
-                )
-                # LAZY checkpoint: the probe count below computes every
-                # partition of this frame anyway (the filter is narrow),
-                # so one job both materializes the round AND answers the
-                # convergence probe — the eager+limit(1) form paid two
-                # scheduled jobs per round for the same work (r17, guide
-                # §1.2 remove driver round-trips)
-                .localCheckpoint(eager=False)
-            )
-            dist = merged.select("side", "origin", "_n", "dist")
-            frontier = merged.filter(F.col("_imp")).select(
-                "side", "origin", "_n", "dist"
-            )
-            if frontier.count() == 0:
-                break
-        else:
-            upk.unpersist()
-            downk.unpersist()
-            raise RuntimeError(
-                "distance_matrix hit the iteration cap before the "
-                "upward cones were exhausted; raise max_iterations"
-            )
+        dist, _st = self._bidirectional(
+            init,
+            batched=True,
+            pred=False,
+            probe=self._cones_exhausted,
+            probe_every=1,
+            max_iterations=max_iterations,
+            what="distance_matrix",
+        )
         fwd = dist.filter(F.col("side") == "f").select(
             F.col("origin").alias("src"), "_n", F.col("dist").alias("_df")
         )
@@ -1464,8 +1382,6 @@ class ContractionHierarchy:
             .groupBy("src", "dst")
             .agg(F.min(F.col("_df") + F.col("_db")).alias("dist"))
         )
-        upk.unpersist()
-        downk.unpersist()
         return out
 
     #: leveled down-sweep guard: one pass PER DISTINCT LEVEL is only a
@@ -1841,106 +1757,19 @@ class ContractionHierarchy:
                 sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
                 out_schema,
             )
-        up, down = self._up_down()
-        upk = up.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        downk = down.select(
-            F.col("_v").alias("_k"), F.col("_u").alias("_t"), "w"
-        ).persist()
-        schema = T.StructType(
-            [
-                T.StructField("side", T.StringType(), False),
-                T.StructField("origin", idt, False),
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-                T.StructField("pred", idt, True),
-            ]
-        )
         init = [
             ("f", s, s, 0.0, None) for s in dict.fromkeys(sources)
         ] + [("b", t, t, 0.0, None) for t in dict.fromkeys(targets)]
-        dist = self.spark.createDataFrame(init, schema)
-        frontier = dist
-        for _ in range(max_iterations):
-            fr = frontier.select(
-                "side",
-                "origin",
-                F.col("_n").alias("_k"),
-                F.col("dist").alias("_fd"),
-            ).hint("broadcast")
-            msgs = (
-                fr.filter(F.col("side") == "f")
-                .join(upk, "_k")
-                .select(
-                    F.lit("f").alias("side"),
-                    "origin",
-                    F.col("_t").alias("_n"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                    F.col("_k").alias("pred"),
-                )
-                .unionByName(
-                    fr.filter(F.col("side") == "b")
-                    .join(downk, "_k")
-                    .select(
-                        F.lit("b").alias("side"),
-                        "origin",
-                        F.col("_t").alias("_n"),
-                        (F.col("_fd") + F.col("w")).alias("dist"),
-                        F.col("_k").alias("pred"),
-                    )
-                )
-            )
-            merged = (
-                dist.select(
-                    "side",
-                    "origin",
-                    "_n",
-                    "dist",
-                    F.lit(False).alias("_new"),
-                    "pred",
-                )
-                .unionByName(
-                    msgs.select(
-                        "side",
-                        "origin",
-                        "_n",
-                        "dist",
-                        F.lit(True).alias("_new"),
-                        "pred",
-                    )
-                )
-                .groupBy("side", "origin", "_n")
-                .agg(F.min(F.struct("dist", "_new", "pred")).alias("b"))
-                .select(
-                    "side",
-                    "origin",
-                    "_n",
-                    F.col("b.dist").alias("dist"),
-                    F.col("b.pred").alias("pred"),
-                    F.col("b._new").alias("_imp"),
-                )
-                # lazy checkpoint + full-count probe: one scheduled job
-                # per round (see distance_matrix)
-                .localCheckpoint(eager=False)
-            )
-            dist = merged.select("side", "origin", "_n", "dist", "pred")
-            frontier = merged.filter(F.col("_imp")).select(
-                "side", "origin", "_n", "dist"
-            )
-            if frontier.count() == 0:
-                break
-        else:
-            upk.unpersist()
-            downk.unpersist()
-            raise RuntimeError(
-                "route_matrix hit the iteration cap before the upward "
-                "cones were exhausted; raise max_iterations"
-            )
-        n_settled = dist.limit(self._TRACE_COLLECT_CAP + 1).count()
-        if n_settled > self._TRACE_COLLECT_CAP:
-            upk.unpersist()
-            downk.unpersist()
+        dist, st = self._bidirectional(
+            init,
+            batched=True,
+            pred=True,
+            probe=self._cones_exhausted,
+            probe_every=1,
+            max_iterations=max_iterations,
+            what="route_matrix",
+        )
+        if st["n_settled"] > self._TRACE_COLLECT_CAP:
             raise RuntimeError(
                 "route_matrix settled state exceeds the driver cap "
                 f"({self._TRACE_COLLECT_CAP} rows) — degenerate "
@@ -1951,37 +1780,24 @@ class ContractionHierarchy:
         bwd: dict = {}
         for r in dist.collect():
             side_map = fwd if r["side"] == "f" else bwd
-            side_map.setdefault(r["origin"], {})[r["_n"]] = (
-                r["dist"],
-                r["pred"],
-            )
-        upk.unpersist()
-        downk.unpersist()
+            d, p = side_map.setdefault(r["origin"], ({}, {}))
+            d[r["_n"]], p[r["_n"]] = r["dist"], r["pred"]
         pairs_out = []
         all_pairs: set = set()
         for s in dict.fromkeys(sources):
-            df = fwd.get(s, {})
+            df, pf = fwd.get(s, ({}, {}))
             for t in dict.fromkeys(targets):
-                db = bwd.get(t, {})
+                db, pb = bwd.get(t, ({}, {}))
                 meet, mu = None, None
                 for n in df.keys() & db.keys():
-                    c = df[n][0] + db[n][0]
+                    c = df[n] + db[n]
                     if mu is None or c < mu or (
                         c == mu and str(n) < str(meet)
                     ):
                         meet, mu = n, c
                 if meet is None:
                     continue
-                walk = [meet]
-                cur = df[meet][1]
-                while cur is not None:
-                    walk.append(cur)
-                    cur = df[cur][1]
-                walk.reverse()
-                cur = db[meet][1]
-                while cur is not None:
-                    walk.append(cur)
-                    cur = db[cur][1]
+                walk = _pred_walk(pf, meet)[::-1] + _pred_walk(pb, meet)[1:]
                 pairs_out.append((s, t, mu, walk))
                 all_pairs.update(zip(walk, walk[1:]))
         resolved = self._resolve_mids(all_pairs) if all_pairs else {}
@@ -2137,199 +1953,203 @@ class ContractionHierarchy:
         return out
 
     # -------------------------------------------------- distributed
-    def _route_pregel(
-        self, source, target, max_iterations, hops_per_round=1
-    ):
+    def _expansion(self) -> DataFrame:
+        """Side-tagged expansion table ``(side, _k, _t, w)`` shared by
+        the bidirectional searches: forward rows are ``up`` arcs keyed
+        by their tail, backward rows are ``down`` arcs keyed by their
+        head.  A round joins the broadcast frontier to it ONCE on
+        ``(side, _k)`` — per-side ``filter`` + join pairs get the side
+        filter pushed under the broadcast hint, so the frontier would be
+        broadcast once per side."""
         up, down = self._up_down()
-        # key the expansion tables once: fwd by _u, bwd by _v
-        upk = up.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        downk = down.select(
-            F.col("_v").alias("_k"), F.col("_u").alias("_t"), "w"
-        ).persist()
-        schema = T.StructType(
-            [
-                T.StructField("side", T.StringType(), False),
-                T.StructField("_n", self.ranks.schema["_n"].dataType, False),
-                T.StructField("dist", T.DoubleType(), False),
-                T.StructField("pred", self.ranks.schema["_n"].dataType, True),
-            ]
-        )
-        dist = self.spark.createDataFrame(
-            [("f", source, 0.0, None), ("b", target, 0.0, None)], schema
-        )
-        frontier = dist
-        mu = None
-        done = False
-        for it in range(max_iterations):
-            probe = (it + 1) % 2 == 0 or it == max_iterations - 1
-            fr = frontier.select(
-                "side",
-                F.col("_n").alias("_k"),
-                F.col("dist").alias("_fd"),
-            ).hint("broadcast")
-            msgs_f = fr.filter(F.col("side") == "f").join(upk, "_k").select(
+        return (
+            up.select(
                 F.lit("f").alias("side"),
-                F.col("_t").alias("_n"),
-                (F.col("_fd") + F.col("w")).alias("dist"),
-                F.col("_k").alias("pred"),
+                F.col("_u").alias("_k"),
+                F.col("_v").alias("_t"),
+                "w",
             )
-            msgs_b = fr.filter(F.col("side") == "b").join(downk, "_k").select(
-                F.lit("b").alias("side"),
-                F.col("_t").alias("_n"),
-                (F.col("_fd") + F.col("w")).alias("dist"),
-                F.col("_k").alias("pred"),
+            .unionByName(
+                down.select(
+                    F.lit("b").alias("side"),
+                    F.col("_v").alias("_k"),
+                    F.col("_u").alias("_t"),
+                    "w",
+                )
             )
+            .persist()
+        )
 
-            # second hop in the SAME round (r13-verdict task #4: route
-            # wall is per-round Spark latency on cone-sized frontiers,
-            # not data volume — one extra broadcast join halves the
-            # round count).  The 2-hop message's pred is the
-            # intermediate node, which receives its own 1-hop message
-            # this round at exactly the chained distance, so the pred
-            # walk stays consistent; any stale 2-hop value is repaired
-            # by later 1-hop relaxations (the Dijkstra invariant the
-            # convergence probe already certifies).
-            def second_hop(msgs, adjk, side_lit):
-                # no per-hop reduce: duplicate messages (several 1-hop
-                # paths into the same intermediate) are tolerated —
-                # the round's single merge groupBy dedups them anyway,
-                # and skipping the reduce keeps the hop shuffle-free
-                # (frontiers are cone-sized, so the fan-out is small)
-                h1 = msgs.select(
-                    F.col("_n").alias("_k"),
-                    F.col("dist").alias("_fd"),
+    def _bidirectional(
+        self, init, batched, pred, probe, probe_every, max_iterations, what
+    ):
+        """Run both upward searches as ONE state frame ``(side,
+        [origin,] _n, dist[, pred])`` until ``probe`` reports
+        convergence.  ``batched`` adds the ``origin`` key (the
+        many-to-many searches), ``pred`` carries the predecessor
+        through the merge.  Each round is one broadcast join against
+        :meth:`_expansion` and one fused union+groupBy merge.  Every
+        ``probe_every``-th round checkpoints LAZILY and ``probe(merged)``
+        runs on it: its aggregate scans every partition, so its one job
+        both materializes the round and answers the probe (other rounds
+        checkpoint eagerly).  ``probe`` returns None to continue, or a
+        result row, returned with the settled state."""
+        idt = self.ranks.schema["_n"].dataType
+        keys = ["side"] + (["origin"] if batched else [])
+        vals = ["dist"] + (["pred"] if pred else [])
+        schema = T.StructType(
+            [T.StructField("side", T.StringType(), False)]
+            + ([T.StructField("origin", idt, False)] if batched else [])
+            + [
+                T.StructField("_n", idt, False),
+                T.StructField("dist", T.DoubleType(), False),
+            ]
+            + ([T.StructField("pred", idt, True)] if pred else [])
+        )
+        expk = self._expansion()
+        try:
+            dist = self.spark.createDataFrame(init, schema)
+            frontier = dist
+            for it in range(max_iterations):
+                probed = (it + 1) % probe_every == 0 or it == max_iterations - 1
+                fr = frontier.select(
+                    *keys, F.col("_n").alias("_k"), F.col("dist").alias("_fd")
                 ).hint("broadcast")
-                return h1.join(adjk, "_k").select(
-                    F.lit(side_lit).alias("side"),
+                msgs = fr.join(expk, ["side", "_k"]).select(
+                    *keys,
                     F.col("_t").alias("_n"),
                     (F.col("_fd") + F.col("w")).alias("dist"),
-                    F.col("_k").alias("pred"),
+                    *([F.col("_k").alias("pred")] if pred else []),
                 )
-
-            msgs = msgs_f.unionByName(msgs_b)
-            if hops_per_round >= 2:
-                msgs = msgs.unionByName(
-                    second_hop(msgs_f, upk, "f")
-                ).unionByName(second_hop(msgs_b, downk, "b"))
-            merged = (
-                dist.select(
-                    "side", "_n", "dist", F.lit(False).alias("_new"), "pred"
-                )
-                .unionByName(
-                    msgs.select(
-                        "side", "_n", "dist", F.lit(True).alias("_new"), "pred"
+                merged = (
+                    dist.withColumn("_new", F.lit(False))
+                    .unionByName(msgs.withColumn("_new", F.lit(True)))
+                    .groupBy(*keys, "_n")
+                    .agg(F.min(F.struct("dist", "_new", *vals[1:])).alias("b"))
+                    .select(
+                        *keys,
+                        "_n",
+                        *(F.col(f"b.{c}").alias(c) for c in vals),
+                        F.col("b._new").alias("_imp"),
                     )
+                    .localCheckpoint(eager=not probed)
                 )
-                .groupBy("side", "_n")
-                .agg(F.min(F.struct("dist", "_new", "pred")).alias("b"))
-                .select(
-                    "side",
-                    "_n",
-                    F.col("b.dist").alias("dist"),
-                    F.col("b.pred").alias("pred"),
-                    F.col("b._new").alias("_imp"),
+                dist = merged.drop("_imp")
+                frontier = merged.filter(F.col("_imp")).select(
+                    *keys, "_n", "dist"
                 )
-                # probe rounds: LAZY checkpoint — the probe's aggregate
-                # below scans every partition of this frame, so its one
-                # job both materializes the round and answers the probe
-                # (non-probe rounds keep the eager materialization)
-                .localCheckpoint(eager=not probe)
-            )
-            dist = merged.select("side", "_n", "dist", "pred")
-            frontier = merged.filter(F.col("_imp")).select(
-                "side", "_n", "dist"
-            )
-            if probe:
-                st = merged.groupBy("_n").agg(
-                    F.min(F.when(F.col("side") == "f", F.col("dist"))).alias(
-                        "_df"
-                    ),
-                    F.min(F.when(F.col("side") == "b", F.col("dist"))).alias(
-                        "_db"
-                    ),
-                    F.coalesce(
-                        F.sum(F.when(F.col("_imp"), 1)), F.lit(0)
-                    ).alias("_nf"),
-                    F.min(F.when(F.col("_imp"), F.col("dist"))).alias(
-                        "_fmin"
-                    ),
-                ).agg(
-                    F.min(F.col("_df") + F.col("_db")).alias("mu"),
-                    F.sum("_nf").alias("n_front"),
-                    F.min("_fmin").alias("f_min"),
-                ).collect()[0]
-                mu = st["mu"]
-                if st["n_front"] == 0 or (
-                    mu is not None
-                    and st["f_min"] is not None
-                    and st["f_min"] >= mu
-                ):
-                    done = True
-                    break
-        upk.unpersist()
-        downk.unpersist()
-        if not done:
-            raise RuntimeError(
-                "CH route hit the iteration cap without converging; "
-                "raise max_iterations"
-            )
-        if mu is None:
-            return None
-        # pick the meeting node deterministically (min cost, then id)
-        meet_rows = (
-            dist.groupBy("_n")
+                if probed:
+                    st = probe(merged)
+                    if st is not None:
+                        return dist, st
+        finally:
+            expk.unpersist()
+        raise RuntimeError(
+            f"{what} hit the iteration cap without converging; "
+            "raise max_iterations"
+        )
+
+    @staticmethod
+    def _cones_exhausted(merged):
+        """Batched-search probe: done once no row improved; also
+        reports the settled row count for the driver cap."""
+        st = merged.agg(
+            F.count(F.when(F.col("_imp"), 1)).alias("n_front"),
+            F.count(F.lit(1)).alias("n_settled"),
+        ).collect()[0]
+        return st if st["n_front"] == 0 else None
+
+    @staticmethod
+    def _route_probe(merged):
+        """Route probe: stop once the frontier is empty or no frontier
+        f-value can undercut the best meeting cost μ.  The same job
+        returns the meeting node (min cost, then id as a string — the
+        deterministic tie-break) and the settled row count, so the
+        epilogue needs no further query for either."""
+        cost = F.col("_df") + F.col("_db")
+        st = (
+            merged.groupBy("_n")
             .agg(
                 F.min(F.when(F.col("side") == "f", F.col("dist"))).alias("_df"),
                 F.min(F.when(F.col("side") == "b", F.col("dist"))).alias("_db"),
+                F.count(F.lit(1)).alias("_rows"),
+                F.count(F.when(F.col("_imp"), 1)).alias("_nf"),
+                F.min(F.when(F.col("_imp"), F.col("dist"))).alias("_fmin"),
             )
-            .filter(F.col("_df").isNotNull() & F.col("_db").isNotNull())
-            .select("_n", (F.col("_df") + F.col("_db")).alias("_c"))
-            .orderBy("_c", F.col("_n").cast("string"))
-            .limit(1)
-            .collect()
+            .agg(
+                F.min(
+                    F.when(
+                        cost.isNotNull(),
+                        F.struct(
+                            cost.alias("mu"),
+                            F.col("_n").cast("string").alias("_s"),
+                            "_n",
+                        ),
+                    )
+                ).alias("meet"),
+                F.sum("_nf").alias("n_front"),
+                F.min("_fmin").alias("f_min"),
+                F.sum("_rows").alias("n_settled"),
+            )
+            .collect()[0]
         )
-        meet = meet_rows[0]["_n"]
-        fwd_nodes = self._trace(dist, "f", meet)
-        bwd_nodes = self._trace(dist, "b", meet)
+        meet = st["meet"]
+        if st["n_front"] == 0 or (
+            meet is not None
+            and st["f_min"] is not None
+            and st["f_min"] >= meet["mu"]
+        ):
+            return st
+        return None
+
+    def _route_pregel(self, source, target, max_iterations):
+        dist, st = self._bidirectional(
+            [("f", source, 0.0, None), ("b", target, 0.0, None)],
+            batched=False,
+            pred=True,
+            probe=self._route_probe,
+            probe_every=2,
+            max_iterations=max_iterations,
+            what="CH route",
+        )
+        if st["meet"] is None:
+            return None
+        mu, meet = st["meet"]["mu"], st["meet"]["_n"]
+        if st["n_settled"] <= self._TRACE_COLLECT_CAP:
+            preds: dict = {"f": {}, "b": {}}
+            for r in dist.select("side", "_n", "pred").collect():
+                preds[r["side"]][r["_n"]] = r["pred"]
+            fwd_nodes = _pred_walk(preds["f"], meet)
+            bwd_nodes = _pred_walk(preds["b"], meet)
+        else:
+            fwd_nodes = self._trace(dist, "f", meet, st["n_settled"])
+            bwd_nodes = self._trace(dist, "b", meet, st["n_settled"])
         path = fwd_nodes[::-1] + bwd_nodes[1:]
         return self._unpack_distributed(path), mu
 
-    # full-side collect allowed below this settled count; above it the
-    # trace falls back to a filtered per-hop walk so the driver never
-    # holds more than the cap even on degenerate hierarchies
+    # settled row count up to which a route's epilogue collects the
+    # whole state; above it the pred walk falls back to filtered
+    # per-hop collects so the driver never holds more than the cap even
+    # on degenerate hierarchies (route_matrix raises instead)
     _TRACE_COLLECT_CAP = 200_000
 
-    def _trace(self, dist, side, meet):
-        """Walk preds driver-side.  Fast path: collect the settled side
-        (cone-sized by CH theory).  If the settled set exceeds the cap
-        (degenerate contraction order), fall back to hop-batched
-        filtered collects — bounded driver memory, one Spark job per
-        hop, path length bounded by hierarchy height."""
+    def _trace(self, dist, side, meet, limit):
+        """Walk one side's preds from ``meet`` with one filtered
+        collect per hop: bounded driver memory, path length bounded by
+        hierarchy height.  ``limit`` is the settled row count, which no
+        pred chain can exceed."""
+        # a zero-weight tie in the min-struct merge can in principle
+        # produce a pred CYCLE — track visited and raise loudly instead
+        # of looping one Spark job per hop forever.  Filter with a
+        # typed literal (not string casts): cast-to-string formatting
+        # need not match Python's str() for every id type (e.g.
+        # floats), and the typed comparison keeps the parquet min/max
+        # pruning on _n.
         side_df = dist.filter(F.col("side") == side).select("_n", "pred")
-        if side_df.limit(self._TRACE_COLLECT_CAP + 1).count() <= (
-            self._TRACE_COLLECT_CAP
-        ):
-            rows = {r["_n"]: r["pred"] for r in side_df.collect()}
-            out = [meet]
-            cur = rows.get(meet)
-            while cur is not None:
-                out.append(cur)
-                cur = rows.get(cur)
-            return out
-        # bounded walk: a pred chain can never exceed the settled-side
-        # row count, and a zero-weight tie in the min-struct merge can
-        # in principle produce a pred CYCLE — track visited and raise
-        # loudly instead of looping one Spark job per hop forever.
-        # Filter with a typed literal (not string casts): cast-to-
-        # string formatting need not match Python's str() for every
-        # id type (e.g. floats), and the typed comparison keeps the
-        # parquet min/max pruning on _n.
         out = [meet]
         seen = {meet}
         cur = meet
-        for _ in range(self._TRACE_COLLECT_CAP):
+        for _ in range(limit):
             hop = side_df.filter(F.col("_n") == F.lit(cur)).collect()
             nxt = hop[0]["pred"] if hop else None
             if nxt is None:
@@ -2343,8 +2163,8 @@ class ContractionHierarchy:
             seen.add(nxt)
             cur = nxt
         raise RuntimeError(
-            "_trace: pred walk exceeded the settled-side cap "
-            f"({self._TRACE_COLLECT_CAP}) without reaching the origin"
+            f"_trace: pred walk exceeded the settled row count ({limit}) "
+            "without reaching the origin"
         )
 
     def _unpack_distributed(self, path):

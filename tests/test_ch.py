@@ -150,6 +150,92 @@ def test_ch_local_equals_pregel(grid6):
     assert len(pp) >= 2
 
 
+# exact pregel routes on the junction-grid parity pairs: pins the meet
+# tie-break (min cost, then id as a string) and the pred walk
+GRID6_PREGEL_PATHS = {
+    ("0:0", "5:5"): (
+        ["0:0", "1:0", "1:1", "2:1", "3:1", "3:2", "3:3", "4:3", "4:4",
+         "4:5", "5:5"],
+        5.78,
+    ),
+    ("0:5", "5:0"): (
+        ["0:5", "0:4", "1:4", "2:4", "2:3", "3:3", "4:3", "4:2", "5:2",
+         "5:1", "5:0"],
+        5.67,
+    ),
+    ("2:3", "4:1"): (["2:3", "3:3", "4:3", "4:2", "4:1"], 2.11),
+    ("0:0", "0:1"): (["0:0", "0:1"], 1.67),
+}
+
+
+def test_ch_pregel_route_golden_paths(grid6):
+    _g, ch, _adj = grid6
+    for (src, dst), (want_path, want_cost) in GRID6_PREGEL_PATHS.items():
+        path, cost = ch.route(src, dst, strategy="pregel")
+        assert path == want_path, (src, dst)
+        assert cost == pytest.approx(want_cost, rel=1e-12), (src, dst)
+
+
+def test_ch_settled_cap_fallback(grid6, monkeypatch):
+    """Above the settled-row cap a route walks its preds with per-hop
+    collects (same path), and route_matrix refuses."""
+    _g, ch, _adj = grid6
+    traced = []
+    real_trace = ContractionHierarchy._trace
+
+    def spy(self, dist, side, meet, limit):
+        traced.append(side)
+        return real_trace(self, dist, side, meet, limit)
+
+    monkeypatch.setattr(ContractionHierarchy, "_TRACE_COLLECT_CAP", 1)
+    monkeypatch.setattr(ContractionHierarchy, "_trace", spy)
+    src, dst = "0:0", "5:5"
+    path, cost = ch.route(src, dst, strategy="pregel")
+    assert sorted(traced) == ["b", "f"]
+    assert (path, cost) == (
+        GRID6_PREGEL_PATHS[(src, dst)][0],
+        pytest.approx(GRID6_PREGEL_PATHS[(src, dst)][1], rel=1e-12),
+    )
+    with pytest.raises(RuntimeError, match="driver cap"):
+        ch.route_matrix([src], [dst], strategy="pregel")
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs."""
+    before = _last_job_id(spark)
+    fn()
+    return _last_job_id(spark) - before
+
+
+def test_ch_query_job_counts(spark):
+    """Distributed query job budgets on one fixed 4x4 grid: a round is
+    one frontier broadcast plus one merge, a route's meeting node and
+    settled count come from its probe, and its pred walk is one
+    collect.  A second broadcast per round or an extra epilogue query
+    fails here."""
+    g = _grid_graph(spark, 4)
+    ch = ContractionHierarchy.build(
+        g, weight="w", strategy="pregel", local_finish=4, customizable=True
+    )
+    srcs, tgts = ["0:0", "3:0"], ["3:3", "0:3"]
+    assert _jobs(spark, lambda: ch.route("0:0", "3:3", strategy="pregel")) == 18
+    assert _jobs(
+        spark, lambda: ch.route_matrix(srcs, tgts, strategy="pregel").collect()
+    ) == 26
+    assert _jobs(
+        spark,
+        lambda: ch.distance_matrix(srcs, tgts, strategy="pregel").collect(),
+    ) == 26
+    new = g.edges.select("_u", "_v", "w")
+    assert _jobs(spark, lambda: ch.customize(new, strategy="pregel")) == 35
+
+
 def test_ch_core_cutoff_stays_exact(spark, grid6):
     """max_rounds=1 leaves most of the grid as an uncontracted core —
     queries must STILL be exact (core edges are bidirectionally
