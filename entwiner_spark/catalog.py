@@ -74,9 +74,16 @@ def _session_key(spark: SparkSession) -> str:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (_session_key(spark), sf_dir, name)
+    skey = _session_key(spark)
+    key = (skey, sf_dir, name)
     df = _TABLE_HANDLES.get(key)
     if df is None:
+        # a miss is where a new session shows up: drop the handles and
+        # fanout decisions of every other (stopped) session, which
+        # would otherwise pin dead DataFrames for the process lifetime
+        for cache in (_TABLE_HANDLES, _FANOUT_DECISIONS):
+            for k in [k for k in cache if k[0] != skey]:
+                del cache[k]
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         _TABLE_HANDLES[key] = df
     return df

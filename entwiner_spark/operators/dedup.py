@@ -116,7 +116,14 @@ def band_keys(k: int, bands: int) -> list:
     """The LSH band-key expressions over signature columns m0..m{k-1}:
     ``bands`` concatenated slices of k/bands rows each.  Shared by the
     batch pair join and the streaming twin so both derive bit-identical
-    bucket keys."""
+    bucket keys.
+
+    With ``k // bands <= 2`` the keys are packed BIGINTs; older builds
+    used ``concat_ws`` strings for every band width.  The
+    ``stream_lsh_pairs`` join keys its state store on the band key, so
+    a streaming query restarted from a checkpoint written with string
+    keys fails the state-schema check: start it from a fresh
+    checkpoint."""
     if k % bands != 0:
         raise ValueError(
             f"k={k} not divisible by bands={bands}: trailing signature "

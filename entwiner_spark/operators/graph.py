@@ -24,10 +24,13 @@ implementation uses the semantically correct columns.
 
 from __future__ import annotations
 
+import heapq
 import inspect
 import re
 import time
 
+import networkx as nx
+from networkx.utils import UnionFind
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -156,6 +159,45 @@ def layer_cost(
     for name, m in sorted(multipliers.items()):
         expr = F.when(F.col(layer_col) == name, F.lit(float(m))).otherwise(expr)
     return (b.cast("double") * expr).alias("_layer_cost")
+
+
+def _dijkstra(g, source, target=None, blocked=(), removed=()):
+    """Heap Dijkstra over ``g``'s ``"weight"`` arcs: ``(dist, pred)``,
+    ``dist`` in first-discovery order.  Hand-rolled rather than
+    networkx for two orders nx does not reproduce: equal-cost ties go
+    to the first predecessor settled in ``(dist, id)`` heap order (the
+    Pregel path's choice), and closeness sums ``dist`` in discovery
+    order.  Stops once ``target`` settles; ``blocked`` nodes and
+    ``removed`` arcs are skipped (Yen's spur restrictions)."""
+    dist = {source: 0.0}
+    pred = {source: None}
+    pq = [(0.0, source)]
+    while pq:
+        d, u = heapq.heappop(pq)
+        if d > dist.get(u, float("inf")):
+            continue
+        if u == target:
+            break
+        for v, attr in (g.succ[u] if u in g else {}).items():
+            if v in blocked or (u, v) in removed:
+                continue
+            nd = d + attr["weight"]
+            if nd < dist.get(v, float("inf")):
+                dist[v], pred[v] = nd, u
+                heapq.heappush(pq, (nd, v))
+    return dist, pred
+
+
+def _dijkstra_route(g, source, target, blocked=(), removed=()):
+    """``(path, cost)`` from ``source`` to ``target``, or None."""
+    dist, pred = _dijkstra(g, source, target, blocked, removed)
+    if target not in dist:
+        return None
+    path, cur = [], target
+    while cur is not None:
+        path.append(cur)
+        cur = pred[cur]
+    return path[::-1], dist[target]
 
 
 class SparkGraph:
@@ -591,7 +633,9 @@ class SparkGraph:
         """Drop memoized size/triple state after an in-place edge swap
         (mutable nx views) so dispatch and local twins never read a
         stale snapshot."""
-        for attr in ("_cached_edge_count", "_nonlocal_verdict", "_triples_cache"):
+        for attr in (
+            "_cached_edge_count", "_nonlocal_verdict", "_triples_cache", "_nx_cache"
+        ):
             self.__dict__.pop(attr, None)
 
     def _use_local(self, strategy: str, weight=None) -> bool:
@@ -652,33 +696,49 @@ class SparkGraph:
             cache[key] = triples
         return triples
 
-    def _local_sssp(self, source: str, weight: str | None) -> DataFrame:
-        """Driver-side Dijkstra — identical additions to the Pregel
-        path (dist[u] + w along the shortest path), so results are
-        bit-equal."""
-        import heapq
-
-        adj: dict[str, list[tuple[str, float]]] = {}
+    def _nx_digraph(self, weight) -> nx.DiGraph:
+        """The collected edge set as an ``nx.DiGraph`` for the
+        driver-local twins: parallel arcs keep their minimum weight
+        (attribute ``"weight"``), self-loops stay.  Memoized beside the
+        triple list it is built from, so repeated calls (the
+        per-landmark SSSPs) pay the build once; callers must not
+        mutate it."""
+        key = self._triples_key(weight)
+        cache = self.__dict__.setdefault("_nx_cache", {})
+        if key in cache:
+            return cache[key]
+        g = nx.DiGraph()
         for u, v, w in self._collect_triples(weight):
-            adj.setdefault(u, []).append((v, w))
-        dist: dict[str, float] = {source: 0.0}
-        pq = [(0.0, source)]
-        while pq:
-            d, u = heapq.heappop(pq)
-            if d > dist.get(u, float("inf")):
-                continue
-            for v, w in adj.get(u, []):
-                nd = d + w
-                if nd < dist.get(v, float("inf")):
-                    dist[v] = nd
-                    heapq.heappush(pq, (nd, v))
+            if not g.has_edge(u, v) or w < g[u][v]["weight"]:
+                g.add_edge(u, v, weight=w)
+        if key in self._triples_cache:
+            cache[key] = g
+        return g
+
+    def _local_dists(self, source, weight) -> dict:
+        """Driver-side Dijkstra distances from ``source`` (itself at 0
+        even when it has no arcs) — the same additions as the Pregel
+        path (dist[u] + w along the shortest path), so bit-equal."""
+        g = self._nx_digraph(weight)
+        if source not in g:
+            return {source: 0.0}
+        return nx.single_source_dijkstra_path_length(g, source)
+
+    def _local_sssp(self, source: str, weight: str | None) -> DataFrame:
         schema = T.StructType(
             [
                 T.StructField("_n", self._id_type(), False),
                 T.StructField("dist", T.DoubleType(), False),
             ]
         )
-        return self.spark.createDataFrame(list(dist.items()), schema)
+        rows = [(n, float(d)) for n, d in self._local_dists(source, weight).items()]
+        return self.spark.createDataFrame(rows, schema)
+
+    def _nx_simple_graph(self) -> nx.Graph:
+        """Undirected, self-loop-free view of the hop digraph (the
+        kcore/ktruss twins): the distributed paths' distinct
+        ``(least, greatest)`` non-loop pairs."""
+        return nx.Graph((u, v) for u, v in self._nx_digraph(None).edges if u != v)
 
     # ---- public message-passing primitives (§2.11 extension surface) --
     def _edge_triplet_base(self) -> DataFrame:
@@ -1202,6 +1262,9 @@ class SparkGraph:
         bound applies — pass ``strategy="pregel"`` to force the A*
         path).
 
+        The local branch keeps its own Dijkstra (``_dijkstra``):
+        networkx breaks equal-cost ties to a different predecessor.
+
         Path reconstruction collects only O(path length) rows.  Both
         strategies assume non-negative weights (local is Dijkstra; the
         Pregel loop goal-stops once the frontier cannot improve the
@@ -1284,30 +1347,7 @@ class SparkGraph:
                 f"via must be 'raw', 'contracted' or 'ch', got {via!r}"
             )
         if self._use_local(strategy, weight):
-            import heapq
-
-            adj: dict[str, list[tuple[str, float]]] = {}
-            for u, v, w in self._collect_triples(weight):
-                adj.setdefault(u, []).append((v, w))
-            dist: dict[str, float] = {source: 0.0}
-            pred: dict[str, str | None] = {source: None}
-            pq = [(0.0, source)]
-            while pq:
-                d, u = heapq.heappop(pq)
-                if d > dist.get(u, float("inf")):
-                    continue
-                for v, w in adj.get(u, []):
-                    nd = d + w
-                    if nd < dist.get(v, float("inf")):
-                        dist[v], pred[v] = nd, u
-                        heapq.heappush(pq, (nd, v))
-            if target not in dist:
-                return None
-            path, cur = [], target
-            while cur is not None:
-                path.append(cur)
-                cur = pred[cur]
-            return path[::-1], dist[target]
+            return _dijkstra_route(self._nx_digraph(weight), source, target)
         bounded_by_caller = max_iterations is not None
         if max_iterations is None:
             max_iterations = 200
@@ -1541,8 +1581,6 @@ class SparkGraph:
         )
         if first is None:
             return []
-        import heapq
-
         wcol = self._weight_col(weight)
         base = self.edges.select("_u", "_v", wcol.alias("_w"))
         idt = self._id_type()
@@ -1634,44 +1672,10 @@ class SparkGraph:
         """Driver-local Yen twin: same loopless/spur/tie semantics as
         the distributed path (candidates ordered by (cost, node
         tuple); parallel edges collapse to their min), over one
-        collected adjacency."""
-        import heapq
-
-        emap: dict = {}
-        for u, v, w in self._collect_triples(weight):
-            kk = (u, v)
-            if kk not in emap or w < emap[kk]:
-                emap[kk] = w
-        adj: dict = {}
-        for (u, v), w in emap.items():
-            adj.setdefault(u, []).append((v, w))
-
-        def dijkstra(src, blocked, removed):
-            dist = {src: 0.0}
-            pred = {src: None}
-            pq = [(0.0, src)]
-            while pq:
-                d, u = heapq.heappop(pq)
-                if d > dist.get(u, float("inf")):
-                    continue
-                if u == target:
-                    break
-                for v, w in adj.get(u, []):
-                    if v in blocked or (u, v) in removed:
-                        continue
-                    nd = d + w
-                    if nd < dist.get(v, float("inf")):
-                        dist[v], pred[v] = nd, u
-                        heapq.heappush(pq, (nd, v))
-            if target not in dist:
-                return None
-            path, cur = [], target
-            while cur is not None:
-                path.append(cur)
-                cur = pred[cur]
-            return path[::-1], dist[target]
-
-        first = dijkstra(source, frozenset(), frozenset())
+        collected adjacency.  ``nx.shortest_simple_paths`` does not
+        order equal-cost candidates by node tuple, so it stays."""
+        g = self._nx_digraph(weight)
+        first = _dijkstra_route(g, source, target)
         if first is None:
             return []
         A: list[tuple[list, float]] = [first]
@@ -1681,7 +1685,7 @@ class SparkGraph:
             prev = A[-1][0]
             prefix = [0.0]
             for a, b in zip(prev, prev[1:]):
-                prefix.append(prefix[-1] + emap[(a, b)])
+                prefix.append(prefix[-1] + g[a][b]["weight"])
             for i in range(len(prev) - 1):
                 spur = prev[i]
                 root = prev[: i + 1]
@@ -1691,7 +1695,7 @@ class SparkGraph:
                     if len(p) > i + 1 and p[: i + 1] == root
                 }
                 blocked = set(root[:-1])
-                r = dijkstra(spur, blocked, removed)
+                r = _dijkstra_route(g, spur, target, blocked, removed)
                 if r is None:
                     continue
                 spath, scost = r
@@ -1716,40 +1720,11 @@ class SparkGraph:
         rewiring — O(log^2 n) alternations independent of both graph
         diameter AND node-id order, so high-diameter road networks
         (the reference's domain) converge in ~15 rounds, not
-        thousands.  Small graphs use driver-side union-find (same
-        min-label semantics).
+        thousands.  Small graphs use networkx's weakly connected
+        components (same min-label semantics).
         """
         if self._use_local(strategy):
-            parent: dict[str, str] = {
-                r["_n"]: r["_n"] for r in self.nodes.select("_n").collect()
-            }
-
-            def find(x: str) -> str:
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for u, v, _ in self._collect_triples(None):
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[max(ru, rv)] = min(ru, rv)
-            # min label per component (the union order above keeps the
-            # min root, but a second pass is cheap and unconditional)
-            comp_min: dict[str, str] = {}
-            for n in parent:
-                r = find(n)
-                comp_min[r] = min(comp_min.get(r, n), n)
-            schema = T.StructType(
-                [
-                    T.StructField("_n", self._id_type(), False),
-                    T.StructField("component", self._id_type(), False),
-                ]
-            )
-            rows = [(n, comp_min[find(n)]) for n in parent]
-            return self.spark.createDataFrame(rows, schema)
+            return self._local_component_labels(nx.weakly_connected_components)
         # ---- alternating large-star / small-star (Kiveris et al.,
         # "Connected Components in MapReduce and Beyond") ----
         # Canonical undirected pair set; each round rewires edges
@@ -1829,6 +1804,25 @@ class SparkGraph:
                 ),
             )
         )
+
+    def _local_component_labels(self, components) -> DataFrame:
+        """``(_n, component)`` for the driver-local CC/SCC twins:
+        ``components`` (an nx component generator) runs on the collected
+        digraph, each component is labeled by its min node id, and
+        node-table-only nodes are singletons."""
+        g = self._nx_digraph(None)
+        label: dict = {}
+        for comp in components(g):
+            label.update(dict.fromkeys(comp, min(comp)))
+        ids = [r["_n"] for r in self.nodes.select("_n").collect()]
+        schema = T.StructType(
+            [
+                T.StructField("_n", self._id_type(), False),
+                T.StructField("component", self._id_type(), False),
+            ]
+        )
+        rows = [(n, label.get(n, n)) for n in dict.fromkeys(ids + list(g))]
+        return self.spark.createDataFrame(rows, schema)
 
     def _chain_fold(
         self,
@@ -2386,8 +2380,7 @@ class SparkGraph:
         through trim instead of consuming ``max_iterations`` FW-BW
         rounds, and ``max_iterations`` effectively bounds only the
         NONTRIVIAL condensation depth.  Small graphs (every reference
-        workload) use driver-side iterative Kosaraju with identical
-        min-label output.
+        workload) use networkx's SCCs with identical min-label output.
 
         ``strategy="fwbw"`` selects the recursive-FW-BW path
         (``_scc_fwbw``): random-pivot divide-and-conquer with all
@@ -2420,54 +2413,7 @@ class SparkGraph:
         if strategy == "fwbw":
             return self._scc_fwbw(max_levels=max_iterations, stats=stats)
         if self._use_local(strategy):
-            adj: dict[str, list[str]] = {}
-            radj: dict[str, list[str]] = {}
-            for r in self.nodes.select("_n").collect():
-                adj.setdefault(r["_n"], [])
-                radj.setdefault(r["_n"], [])
-            for u, v, _ in self._collect_triples(None):
-                adj.setdefault(u, []).append(v)
-                radj.setdefault(v, []).append(u)
-                adj.setdefault(v, [])
-                radj.setdefault(u, [])
-            # pass 1: iterative DFS finish order
-            order: list[str] = []
-            seen: set[str] = set()
-            for s in adj:
-                if s in seen:
-                    continue
-                seen.add(s)
-                stack: list[tuple[str, object]] = [(s, iter(adj[s]))]
-                while stack:
-                    n, it = stack[-1]
-                    nxt = next(it, None)
-                    if nxt is None:
-                        order.append(n)
-                        stack.pop()
-                    elif nxt not in seen:
-                        seen.add(nxt)
-                        stack.append((nxt, iter(adj[nxt])))
-            # pass 2: reverse-graph sweeps in reverse finish order
-            comp: dict[str, str] = {}
-            for s in reversed(order):
-                if s in comp:
-                    continue
-                members = [s]
-                comp[s] = s
-                dfs = [s]
-                while dfs:
-                    n = dfs.pop()
-                    for m in radj.get(n, []):
-                        if m not in comp:
-                            comp[m] = s
-                            members.append(m)
-                            dfs.append(m)
-                label = min(members)
-                for m in members:
-                    comp[m] = label
-            return self.spark.createDataFrame(
-                [(n, comp[n]) for n in comp], schema
-            )
+            return self._local_component_labels(nx.strongly_connected_components)
 
         edges = (
             self.edges.select("_u", "_v")
@@ -2732,34 +2678,20 @@ class SparkGraph:
         per round to truncate lineage.  Each round removes at least
         one node or converges, so rounds <= peel depth (the graph
         degeneracy ordering length), never O(nodes) in practice:
-        cores collapse in waves.  Small graphs use the same peel
+        cores collapse in waves.  Small graphs use ``nx.k_core``
         driver-side.
         """
         if k < 1:
             raise ValueError("kcore requires k >= 1")
         if self._use_local(strategy):
-            ue = set()
-            for u, v, _ in self._collect_triples(None):
-                if u != v:
-                    ue.add((min(u, v), max(u, v)))
-            alive = {n for pair in ue for n in pair}
-            while True:
-                deg: dict[str, int] = {}
-                for a, b in ue:
-                    if a in alive and b in alive:
-                        deg[a] = deg.get(a, 0) + 1
-                        deg[b] = deg.get(b, 0) + 1
-                new = {n for n in alive if deg.get(n, 0) >= k}
-                if new == alive:
-                    break
-                alive = new
+            core = nx.k_core(self._nx_simple_graph(), k)
             schema = T.StructType(
                 [
                     T.StructField("_n", self._id_type(), False),
                     T.StructField("core_degree", T.LongType(), False),
                 ]
             )
-            rows = [(n, deg[n]) for n in sorted(alive)]
+            rows = [(n, core.degree(n)) for n in sorted(core)]
             return self.spark.createDataFrame(rows, schema)
         ue = (
             self.edges.select(
@@ -2807,7 +2739,8 @@ class SparkGraph:
         undirected neighbors, ties broken by minimum label string,
         for a FIXED number of iterations (async/random-order LPA is
         run-dependent, which would make results unverifiable).
-        Returns ``(_n, label)``.
+        Returns ``(_n, label)``.  networkx has no synchronous
+        min-label-tie variant, so the local twin stays hand-written.
 
         ``strategy``: the standard auto/local/pregel split (r15
         CHECK_TIMES watch item — LPA's many-tiny-rounds shape pays
@@ -2829,23 +2762,15 @@ class SparkGraph:
         if self._use_local(strategy):
             from collections import Counter
 
-            pairs = {
-                (min(r["_u"], r["_v"]), max(r["_u"], r["_v"]))
-                for r in self.edges.select("_u", "_v").collect()
-                if r["_u"] != r["_v"]
-            }
+            und = self._nx_simple_graph()
             node_ids = [r["_n"] for r in self.nodes.select("_n").collect()]
-            adj: dict = {}
-            for u, v in pairs:
-                adj.setdefault(u, []).append(v)
-                adj.setdefault(v, []).append(u)
             labels = {n: n for n in node_ids}
             for _ in range(iterations):
                 new = {}
                 for n in node_ids:
                     # endpoints absent from the nodes table send no
                     # message (matches the superstep's state join)
-                    neigh = [m for m in adj.get(n, ()) if m in labels]
+                    neigh = [m for m in und.adj.get(n, ()) if m in labels]
                     if not neigh:
                         new[n] = labels[n]
                         continue
@@ -2905,6 +2830,9 @@ class SparkGraph:
         PageRank, the standard graph-ML relevance/recommendation
         feature: ranks measure proximity to the sources instead of
         global importance.
+
+        The local branch is not ``nx.pagerank``: its convergence test
+        and dangling-mass handling differ from the distributed loop's.
         """
         S = set(personalized) if personalized else None
         k = len(S) if S else None
@@ -3104,37 +3032,22 @@ class SparkGraph:
         count (parity with the reference's "centrality metrics" claim,
         README.md:67).
 
-        Small graphs: driver-side Dijkstra per source.  Large graphs:
-        this is |V| SSSP runs — run per-landmark sampling instead
-        (call shortest_path_lengths for a landmark subset).
+        Small graphs: driver-side ``_dijkstra`` per source (not
+        networkx: its settle order sums float distances in a different
+        order, so totals differ in the last ulp).  Large graphs: this
+        is |V| SSSP runs — run per-landmark sampling instead (call
+        shortest_path_lengths for a landmark subset).
         """
         if not self._use_local(strategy, weight):
             raise ValueError(
                 "exact all-pairs closeness is O(V) SSSP runs; at scale "
                 "sample landmarks via shortest_path_lengths instead"
             )
-        import heapq
-
-        adj: dict[str, list[tuple[str, float]]] = {}
-        for u, v, w in self._collect_triples(weight):
-            adj.setdefault(u, []).append((v, w))
-        sources = [r["_n"] for r in self.nodes.select("_n").collect()]
+        g = self._nx_digraph(weight)
         rows = []
-        for s in sources:
-            dist = {s: 0.0}
-            pq = [(0.0, s)]
-            while pq:
-                d, u = heapq.heappop(pq)
-                if d > dist.get(u, float("inf")):
-                    continue
-                for v, w in adj.get(u, []):
-                    nd = d + w
-                    if nd < dist.get(v, float("inf")):
-                        dist[v] = nd
-                        heapq.heappush(pq, (nd, v))
-            reach = len(dist) - 1
-            total = sum(dist.values())
-            rows.append((s, float(total), reach))
+        for s in [r["_n"] for r in self.nodes.select("_n").collect()]:
+            dist, _ = _dijkstra(g, s)
+            rows.append((s, float(sum(dist.values())), len(dist) - 1))
         schema = T.StructType(
             [
                 T.StructField("_n", self._id_type(), False),
@@ -3162,24 +3075,9 @@ class SparkGraph:
                 "exact all-pairs harmonic centrality is O(V) SSSP runs; "
                 "at scale sample landmarks via closeness_landmarks"
             )
-        import heapq
-
-        adj: dict[str, list[tuple[str, float]]] = {}
-        for u, v, w in self._collect_triples(weight):
-            adj.setdefault(u, []).append((v, w))
         rows = []
         for s in [r["_n"] for r in self.nodes.select("_n").collect()]:
-            dist = {s: 0.0}
-            pq = [(0.0, s)]
-            while pq:
-                d, u = heapq.heappop(pq)
-                if d > dist.get(u, float("inf")):
-                    continue
-                for v, w in adj.get(u, []):
-                    nd = d + w
-                    if nd < dist.get(v, float("inf")):
-                        dist[v] = nd
-                        heapq.heappush(pq, (nd, v))
+            dist = self._local_dists(s, weight)
             h = sum(1.0 / d for m, d in dist.items() if m != s and d > 0)
             rows.append((s, float(h)))
         schema = T.StructType(
@@ -3211,7 +3109,7 @@ class SparkGraph:
         (left-semi prune + localCheckpoint).  Rounds = DAG depth, each
         a partitioned join — same peel discipline as kcore; at 100 TB
         depth, not node count, is the wall-clock driver.  Small graphs
-        use driver-side Kahn with identical levels.
+        use ``nx.topological_generations`` with identical levels.
         """
         schema = T.StructType(
             [
@@ -3220,34 +3118,17 @@ class SparkGraph:
             ]
         )
         if self._use_local(strategy):
-            adj: dict[str, list[str]] = {}
-            indeg: dict[str, int] = {}
-            for r in self.nodes.select("_n").collect():
-                adj.setdefault(r["_n"], [])
-                indeg.setdefault(r["_n"], 0)
-            for u, v, _ in self._collect_triples(None):
-                if u == v:
-                    raise ValueError("graph has a cycle (self-loop); "
-                                     "topological levels undefined")
-                adj.setdefault(u, []).append(v)
-                indeg[v] = indeg.get(v, 0) + 1
-                indeg.setdefault(u, 0)
-            level = {}
-            frontier = sorted(n for n, d in indeg.items() if d == 0)
-            lv = 0
-            while frontier:
-                nxt = []
-                for n in frontier:
-                    level[n] = lv
-                    for m in adj.get(n, []):
-                        indeg[m] -= 1
-                        if indeg[m] == 0:
-                            nxt.append(m)
-                frontier = sorted(nxt)
-                lv += 1
-            if len(level) != len(indeg):
+            g = self._nx_digraph(None)
+            if nx.number_of_selfloops(g):
+                raise ValueError("graph has a cycle (self-loop); "
+                                 "topological levels undefined")
+            level = {r["_n"]: 0 for r in self.nodes.select("_n").collect()}
+            try:
+                for lv, gen in enumerate(nx.topological_generations(g)):
+                    level.update(dict.fromkeys(gen, lv))
+            except nx.NetworkXUnfeasible:
                 raise ValueError("graph has a cycle; topological levels "
-                                 "undefined")
+                                 "undefined") from None
             return self.spark.createDataFrame(list(level.items()), schema)
 
         edges = (
@@ -3344,39 +3225,27 @@ class SparkGraph:
         self, max_hops: int, stats: dict | None = None
     ) -> DataFrame:
         """Driver-side exact twin of ``neighborhood_function(
-        method="exact")`` — per-node truncated BFS over the collected
-        distinct edge set; identical pair counts by construction (same
-        dedup, same self-loop exclusion, same ≤max_hops truncation).
+        method="exact")`` — per-node ``nx`` BFS truncated at
+        ``max_hops`` over the collected digraph; identical pair counts
+        by construction (same dedup, same self-loop exclusion).
         Small graphs only (the _use_local gate): the distributed exact
         path costs ~3 driver actions per hop, which dominates at
         catalog scale."""
-        from collections import deque
-
-        adj: dict[str, set] = {}
+        g = self._nx_digraph(None)
         nodes = {r["_n"] for r in self.nodes.select("_n").collect()}
-        for r in self.edges.select("_u", "_v").collect():
-            u, v = r["_u"], r["_v"]
-            if u != v:
-                # endpoints join the node set only from NON-self-loop
-                # rows — the distributed path filters self-loops before
-                # unioning endpoints, so a node appearing only as a
-                # self-loop endpoint (and absent from self.nodes) must
-                # not be counted here either (ADVICE r11)
-                nodes.add(u)
-                nodes.add(v)
-                adj.setdefault(u, set()).add(v)
+        # endpoints join the node set only from NON-self-loop arcs —
+        # the distributed path filters self-loops before unioning
+        # endpoints, so a node appearing only as a self-loop endpoint
+        # (and absent from self.nodes) must not be counted here either
+        # (ADVICE r11)
+        nodes.update(n for u, v in g.edges if u != v for n in (u, v))
         counts = [0] * (max_hops + 1)
         for s in nodes:
-            dist = {s: 0}
-            q = deque([s])
-            while q:
-                u = q.popleft()
-                if dist[u] == max_hops:
-                    continue
-                for m in adj.get(u, ()):
-                    if m not in dist:
-                        dist[m] = dist[u] + 1
-                        q.append(m)
+            dist = (
+                nx.single_source_shortest_path_length(g, s, cutoff=max_hops)
+                if s in g
+                else {s: 0}
+            )
             hist = [0] * (max_hops + 1)
             for d in dist.values():
                 hist[d] += 1
@@ -3610,7 +3479,7 @@ class SparkGraph:
         instead of sum-of-deg — hub skew capped), then exploded to its
         three edges and counted; edges below ``k-2`` drop,
         localCheckpoint truncates lineage; rounds are bounded by the
-        peel depth exactly like kcore.  Small graphs run the same peel
+        peel depth exactly like kcore.  Small graphs run ``nx.k_truss``
         driver-side.
         """
         if k < 3:
@@ -3623,19 +3492,7 @@ class SparkGraph:
             .distinct()
         )
         if self._use_local(strategy):
-            edges = {(r["a"], r["b"]) for r in und.collect()}
-            while True:
-                nbrs: dict[str, set] = {}
-                for a, b in edges:
-                    nbrs.setdefault(a, set()).add(b)
-                    nbrs.setdefault(b, set()).add(a)
-                sup = {
-                    (a, b): len(nbrs[a] & nbrs[b]) for a, b in edges
-                }
-                keep = {e for e in edges if sup[e] >= k - 2}
-                if keep == edges:
-                    break
-                edges = keep
+            truss = nx.k_truss(self._nx_simple_graph(), k)
             schema = T.StructType(
                 [
                     T.StructField("u", self._id_type(), False),
@@ -3643,9 +3500,11 @@ class SparkGraph:
                     T.StructField("support", T.LongType(), False),
                 ]
             )
-            return self.spark.createDataFrame(
-                [(a, b, sup[(a, b)]) for a, b in edges], schema
-            )
+            rows = [
+                (min(a, b), max(a, b), len(set(truss[a]) & set(truss[b])))
+                for a, b in truss.edges
+            ]
+            return self.spark.createDataFrame(rows, schema)
 
         # lazy + count fold (one job materializes and probes)
         live = und.localCheckpoint(eager=False)
@@ -3770,22 +3629,15 @@ class SparkGraph:
             .agg(F.min("w").alias("w"))
         )
         if self._use_local(strategy, weight):
-            parent: dict[str, str] = {}
-
-            def find(x: str) -> str:
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
+            # nx.minimum_spanning_edges breaks equal-weight ties in a
+            # different order, so Kruskal keeps the (w, u, v) scan
+            uf = UnionFind()
             forest = []
             for r in sorted(
                 und.collect(), key=lambda r: (r["w"], r["u"], r["v"])
             ):
-                ru, rv = find(r["u"]), find(r["v"])
-                if ru != rv:
-                    parent[ru] = rv
+                if uf[r["u"]] != uf[r["v"]]:
+                    uf.union(r["u"], r["v"])
                     forest.append((r["u"], r["v"], float(r["w"])))
             schema = T.StructType(
                 [
@@ -4328,8 +4180,8 @@ class SparkGraph:
         return self._betweenness_pregel(sources)
 
     def _betweenness_local(self, sources, weight) -> DataFrame:
-        import heapq
-
+        """Driver-side Brandes.  Not networkx: parallel arcs count as
+        distinct shortest paths here, and nx collapses them."""
         adj: dict[str, list[tuple[str, float]]] = {}
         nodes: set[str] = {r["_n"] for r in self.nodes.select("_n").collect()}
         for u, v, w in self._collect_triples(weight):
@@ -4835,7 +4687,8 @@ class SparkGraph:
         head edge, pure chain cycles emitted unchanged, absorbed
         interiors dropped from nodes.  The distributed path costs
         ~2 driver actions per doubling round; below the threshold the
-        whole walk is microseconds on the driver."""
+        whole walk is microseconds on the driver.  networkx has no
+        chain-contraction equivalent."""
         wexpr = self._weight_col(weight)
         triples = [
             (r["_u"], r["_v"], r["_w"])
@@ -5338,8 +5191,6 @@ class SparkGraph:
 
     def to_networkx(self):
         """Collect to an nx.DiGraph — small graphs only (driver-side)."""
-        import networkx as nx  # optional dependency
-
         g = nx.DiGraph()
         for row in self.nodes.collect():
             d = row.asDict()

@@ -50,7 +50,10 @@ def stream_lsh_pairs(
     each other; each pair exactly once (append output mode).  Band keys
     are derived with the same expressions as the batch
     ``lsh_candidate_pairs``, so a pair the stream emits is exactly a
-    pair the batch job would find on the same data.
+    pair the batch job would find on the same data.  Checkpoints from
+    builds that used string band keys for ``k // bands <= 2`` are not
+    state-compatible (see ``band_keys``); restart such a query from a
+    fresh checkpoint.
 
     ``ts`` on the output row is the lower-id side's arrival time (kept
     verbatim so it remains the event-time column for downstream

@@ -155,3 +155,26 @@ def test_table_handle_key_survives_session_identity_reuse():
     b = _Sess("app-2", 222)  # same id() slot in principle; new context
     assert _session_key(a) != _session_key(b)
     assert _session_key(a) == _session_key(_Sess("app-1", 111))
+
+
+def test_table_handle_miss_evicts_other_sessions(spark):
+    """The per-session handle caches drop a stopped session's entries
+    on the next miss instead of holding them for the process lifetime.
+    A fake session key stands in for the stopped session, so the
+    shared fixture keeps running."""
+    from entwiner_spark.catalog import (
+        _FANOUT_DECISIONS,
+        _TABLE_HANDLES,
+        _session_key,
+        _t,
+    )
+
+    dead = ("app-stopped:0", SF, "region")
+    live = (_session_key(spark), SF, "region")
+    _TABLE_HANDLES.pop(live, None)  # force the miss
+    _TABLE_HANDLES[dead] = object()
+    _FANOUT_DECISIONS[dead] = True
+    df = _t(spark, SF, "region")
+    assert dead not in _TABLE_HANDLES and dead not in _FANOUT_DECISIONS
+    assert _TABLE_HANDLES[live] is df
+    assert all(k[0] == live[0] for k in (*_TABLE_HANDLES, *_FANOUT_DECISIONS))

@@ -137,19 +137,54 @@ def test_unreachable_returns_none(G):
     assert G.shortest_path(N1, "999, 999") is None
 
 
-def test_local_matches_pregel(uwG):
-    """The small-graph fast path and the distributed loop agree."""
-    src = uwG.edges.limit(1).collect()[0]["_u"]
-    loc = {r["_n"]: r["dist"] for r in
-           uwG.shortest_path_lengths(src, weight="_length", strategy="local").collect()}
-    pre = {r["_n"]: r["dist"] for r in
-           uwG.shortest_path_lengths(src, weight="_length", strategy="pregel").collect()}
-    assert loc == pre
+def _assert_local_matches_pregel(g, src, weight):
+    """The small-graph fast path and the distributed loop agree on
+    SSSP (``weight`` and hop counts) and weakly connected components."""
+    for w in (weight, None):
+        loc = {r["_n"]: r["dist"] for r in
+               g.shortest_path_lengths(src, weight=w, strategy="local").collect()}
+        pre = {r["_n"]: r["dist"] for r in
+               g.shortest_path_lengths(src, weight=w, strategy="pregel").collect()}
+        assert loc == pre, w
     cc_l = {r["_n"]: r["component"] for r in
-            uwG.connected_components(strategy="local").collect()}
+            g.connected_components(strategy="local").collect()}
     cc_p = {r["_n"]: r["component"] for r in
-            uwG.connected_components(strategy="pregel").collect()}
+            g.connected_components(strategy="pregel").collect()}
     assert cc_l == cc_p
+
+
+def test_local_matches_pregel(uwG):
+    src = uwG.edges.limit(1).collect()[0]["_u"]
+    _assert_local_matches_pregel(uwG, src, "_length")
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_local_matches_pregel_random_digraphs(spark, seed):
+    """Seeded random digraphs with non-dyadic weights, parallel arcs of
+    different weights, a self-loop, a zero-weight arc and a node that
+    only the node table names."""
+    import random
+
+    rng = random.Random(seed)
+    ids = [f"n{i:02d}" for i in range(12)]
+    triples = [
+        (rng.choice(ids), rng.choice(ids), round(rng.uniform(0.1, 5.0), 3))
+        for _ in range(30)
+    ]
+    u, v, w = triples[0]
+    triples += [
+        (u, v, w + 1.7),
+        (u, v, round(w / 3, 3)),
+        ("n03", "n03", 1.5),
+        ("n00", "n01", 0.0),
+        ("n00", rng.choice(ids), 2.7),
+    ]
+    edges = spark.createDataFrame(triples, "_u string, _v string, w double")
+    nodes = spark.createDataFrame(
+        [(n,) for n in sorted({*ids, "only_in_nodes"})], "_n string"
+    )
+    g = SparkGraph(nodes, edges, partitions=4)
+    _assert_local_matches_pregel(g, "n00", "w")
 
 
 def test_weight_as_column_expression(uwG):
@@ -2522,3 +2557,44 @@ def test_landmarks_explicit_validation(uwG):
         uwG.closeness_landmarks(
             weight="_length", landmarks=[lm, "999.0, 999.0"]
         ).collect()
+
+
+# ---- job-count pins for the auto-dispatched local twins -------------
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs."""
+    before = _last_job_id(spark)
+    fn()
+    return _last_job_id(spark) - before
+
+
+@pytest.mark.parametrize(
+    "op, expected",
+    [
+        (lambda g: g.shortest_path_lengths("a", weight="w"), 3),
+        (lambda g: g.connected_components(), 4),
+        (lambda g: g.strongly_connected_components(), 4),
+        (lambda g: g.kcore(2), 3),
+        (lambda g: g.topological_levels(), 4),
+    ],
+    ids=["sssp", "cc", "scc", "kcore", "topo"],
+)
+def test_local_twin_job_counts(spark, op, expected):
+    """An auto-dispatched small-graph operator on a fresh graph runs
+    the same jobs as before its twin became a networkx call: building
+    the networkx graph from the probed rows costs no Spark job."""
+    edges = spark.createDataFrame(
+        [("a", "b", 1.0), ("a", "b", 3.0), ("b", "c", 2.0), ("a", "c", 5.0),
+         ("c", "d", 0.0), ("e", "d", 1.0), ("b", "d", 1.5)],
+        "_u string, _v string, w double",
+    )
+    nodes = spark.createDataFrame([(n,) for n in "abcdef"], "_n string")
+    g = SparkGraph(nodes, edges, partitions=4)
+    assert _jobs(spark, lambda: op(g).collect()) == expected
