@@ -83,7 +83,11 @@ def map_match(
     adjacent/jump model can mis-rank candidates at junction-dense
     spots (a CONNECTED side road is one cheap adjacency hop away even
     when reaching it requires doubling back); route distances expose
-    that detour.  Pairs whose route exceeds the hop window fall back
+    that detour.  Under ``transition="simple"`` the two directed twins
+    of a two-way segment tie (same distance, same endpoint set) and the
+    smaller edge key is returned; only ``transition="route"``, whose
+    route distance is directed, resolves the direction of travel.
+    Pairs whose route exceeds the hop window fall back
     to ``trans_jump``.  Scale shape: along-offsets ride the candidate
     join (one HOF column), network distances are ONE bounded
     multi-source relaxation (``hop_window`` broadcast-joined rounds

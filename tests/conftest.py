@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
+from typing import NamedTuple
 
 import pytest
 
@@ -26,6 +28,46 @@ TINY_FC = {
         for c in TINY_COORDS
     ],
 }
+
+
+# The reference's real sidewalk network (FIXTURES.md §2), read where the
+# reference repository is checked out beside this one; elsewhere the
+# committed seeded stand-in written by tests/data/make_sidewalks.py.
+UW_GEOJSON = Path(__file__).resolve().parents[2] / "reference/tests/data/uw.geojson"
+SIDEWALKS_GEOJSON = Path(__file__).with_name("data") / "sidewalks.geojson"
+
+
+class GraphCounts(NamedTuple):
+    nodes: int
+    edges: int
+
+
+@pytest.fixture(scope="session")
+def uw_geojson():
+    """Path of the uw sidewalk network the graph tests run on."""
+    return str(UW_GEOJSON if UW_GEOJSON.is_file() else SIDEWALKS_GEOJSON)
+
+
+@pytest.fixture(scope="session")
+def uw_counts(uw_geojson):
+    """Node and edge counts that ingest must give for ``uw_geojson``,
+    worked out in pure Python: distinct endpoint ids by the FIXTURES.md
+    §3 rule (``round(c, 7)``, Python ``str``), and distinct directed
+    ``(_u, _v)`` pairs over forward plus reverse edges.  77 and 226 on
+    uw.geojson."""
+    with open(uw_geojson) as fh:
+        features = json.load(fh)["features"]
+
+    def node(c):
+        return ", ".join(str(round(x, 7)) for x in c[:2])
+
+    pairs = set()
+    for f in features:
+        geom = f.get("geometry") or {}
+        if geom.get("type") == "LineString":
+            u, v = node(geom["coordinates"][0]), node(geom["coordinates"][-1])
+            pairs |= {(u, v), (v, u)}
+    return GraphCounts(len({n for p in pairs for n in p}), len(pairs))
 
 
 @pytest.fixture(scope="session")

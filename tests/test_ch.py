@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import heapq
 
+import networkx as nx
 import pytest
 from pyspark.sql import functions as F
 
@@ -294,7 +295,7 @@ def test_shortest_path_via_ch(grid6):
     assert c2 == pytest.approx(want, rel=1e-12) and p2[0] == "0:0"
 
 
-def test_ch_on_uw_matches_raw_sssp(spark):
+def test_ch_on_uw_matches_raw_sssp(spark, uw_geojson):
     """Street-graph parity: CH route cost == raw shortest_path on the
     uw sidewalk network, path expands to raw nodes."""
     from entwiner_spark.sources.geojson import (
@@ -303,13 +304,16 @@ def test_ch_on_uw_matches_raw_sssp(spark):
     )
 
     edges = edges_from_geojson(
-        spark, "/root/reference/tests/data/uw.geojson", with_length=True
+        spark, uw_geojson, with_length=True
     ).localCheckpoint()
     g = SparkGraph(nodes_from_edges(edges), edges)
     ch = ContractionHierarchy.build(g, weight="_length")
-    # min-id -> probed farthest node (~838 m; uw is fully connected)
+    # min-id -> probed farthest node (~838 m on uw; uw is fully connected)
     src = min(r["_n"] for r in g.nodes.select("_n").collect())
-    dst = "-122.31659, 47.6567855"
+    far = nx.single_source_dijkstra_path_length(
+        g.to_networkx(), src, weight="_length"
+    )
+    dst = max(far, key=far.get)
     raw = g.shortest_path(src, dst, weight="_length", strategy="local")
     assert raw is not None
     got = ch.route(src, dst)

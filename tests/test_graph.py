@@ -25,10 +25,8 @@ def G(spark, tiny_edges, tiny_nodes):
 
 
 @pytest.fixture(scope="module")
-def uwG(spark):
-    edges = edges_from_geojson(
-        spark, "/root/reference/tests/data/uw.geojson", with_length=True
-    )
+def uwG(spark, uw_geojson):
+    edges = edges_from_geojson(spark, uw_geojson, with_length=True)
     return SparkGraph(nodes_from_edges(edges), edges).to_in_memory()
 
 
@@ -120,9 +118,9 @@ def test_bfs_hops(G):
     assert max(hops.values()) == 2.0  # everything within 2 hops via hub
 
 
-def test_connected_components(uwG):
+def test_connected_components(uwG, uw_counts):
     cc = uwG.connected_components(strategy="pregel")
-    assert cc.count() == 77
+    assert cc.count() == uw_counts.nodes
     assert cc.select("component").distinct().count() == 1
 
 

@@ -9,12 +9,12 @@ from pyspark.sql import functions as F
 from entwiner_spark import SparkGraph, edges_from_geojson, nodes_from_edges
 from entwiner_spark.sources.gtfs import stop_link_edges, stops_from_gtfs
 
-UW = "/root/reference/tests/data/uw.geojson"
-
 
 @pytest.fixture(scope="module")
-def uw_edges(spark):
-    return edges_from_geojson(spark, UW, with_length=True).localCheckpoint()
+def uw_edges(spark, uw_geojson):
+    return edges_from_geojson(
+        spark, uw_geojson, with_length=True
+    ).localCheckpoint()
 
 
 def _write_stops(tmp_path, rows):

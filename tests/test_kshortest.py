@@ -4,6 +4,7 @@ looplessness, exhaustion semantics, CH-lite composition, uw sanity."""
 
 from __future__ import annotations
 
+import networkx as nx
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,20 +97,23 @@ def test_yen_composes_with_contracted(spark):
     ]
 
 
-def test_yen_on_uw(spark):
+def test_yen_on_uw(spark, uw_geojson):
     from entwiner_spark.sources.geojson import (
         edges_from_geojson,
         nodes_from_edges,
     )
 
     edges = edges_from_geojson(
-        spark, "/root/reference/tests/data/uw.geojson", with_length=True
+        spark, uw_geojson, with_length=True
     ).localCheckpoint()
     g = SparkGraph(nodes_from_edges(edges), edges)
-    # uw is fully connected (77/77 reachable); route min-id -> the
-    # probed farthest node (~838 m away, plenty of alternatives)
+    # uw is fully connected (every node reachable); route min-id -> the
+    # probed farthest node (~838 m away on uw, plenty of alternatives)
     src = min(r["_n"] for r in g.nodes.select("_n").collect())
-    dst = "-122.31659, 47.6567855"
+    far = nx.single_source_dijkstra_path_length(
+        g.to_networkx(), src, weight="_length"
+    )
+    dst = max(far, key=far.get)
     best = g.shortest_path(src, dst, weight="_length", strategy="local")
     assert best is not None
     alts = g.k_shortest_paths(src, dst, k=3, weight="_length")

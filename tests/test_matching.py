@@ -115,15 +115,15 @@ def test_multiple_traces_stay_independent(spark):
     assert all(got[("b", s)] == f"N{s}" for s, _x, _y in _TRACE)
 
 
-def test_uw_trace_recovers_edge_sequence(spark):
+def test_uw_trace_recovers_edge_sequence(spark, uw_geojson):
     """A noisy walk along a real uw sidewalk chain must come back as
-    exactly that chain (the r12-verdict acceptance shape)."""
+    that chain (the r12-verdict acceptance shape): under the default
+    transition each fix matches the chain edge or its reverse twin, and
+    under ``transition="route"`` exactly the chain edge."""
     from entwiner_spark.sources.geojson import edges_from_geojson
 
     uw = (
-        edges_from_geojson(
-            spark, "/root/reference/tests/data/uw.geojson", with_length=True
-        )
+        edges_from_geojson(spark, uw_geojson, with_length=True)
         .select(
             "fid",
             "_u",
@@ -160,14 +160,26 @@ def test_uw_trace_recovers_edge_sequence(spark):
     trace = spark.createDataFrame(
         pts, "trace_id string, seq long, lon double, lat double"
     )
-    got = {
-        r["seq"]: r["fid"]
-        for r in map_match(
-            trace, uw, max_dist_m=25.0, sigma_m=5.0, k_candidates=4
-        ).collect()
-    }
+
+    def match(**kw):
+        return {
+            r["seq"]: r["fid"]
+            for r in map_match(
+                trace, uw, max_dist_m=25.0, sigma_m=5.0, k_candidates=4, **kw
+            ).collect()
+        }
+
     want = {i: e[2] for i, e in enumerate(seq_edges)}
-    assert got == want
+    # the simple model cannot tell a two-way segment's directed twins
+    # apart (same _dist, same endpoint set; the smaller fid wins)
+    twins = {
+        i: {fid, rows[(v, u)][0]} for i, (u, v, fid, _c) in enumerate(seq_edges)
+    }
+    got = match()
+    assert set(got) == set(want)
+    assert all(got[i] in twins[i] for i in want), (got, want)
+    # the route model's network distance is directed: exactly the chain
+    assert match(transition="route") == want
 
 
 def test_route_transition_recovers_oneway_bypass_flip(spark):

@@ -30,10 +30,8 @@ def G(sg):
 
 
 @pytest.fixture(scope="module")
-def uw(spark):
-    edges = edges_from_geojson(
-        spark, "/root/reference/tests/data/uw.geojson", with_length=True
-    )
+def uw(spark, uw_geojson):
+    edges = edges_from_geojson(spark, uw_geojson, with_length=True)
     return SparkGraph(nodes_from_edges(edges), edges).to_in_memory()
 
 

@@ -64,12 +64,12 @@ def test_node_id_matches_python_bulk(spark):
     assert not mismatches, mismatches[:10]
 
 
-def test_uw_property_type_inference(spark):
+def test_uw_property_type_inference(spark, uw_geojson):
     """F9: dynamic schema inference over uw.geojson's 12 property keys
     matches the types the reference stores (FIXTURES.md §2)."""
     from entwiner_spark.sources.geojson import edges_from_geojson
 
-    edges = edges_from_geojson(spark, "/root/reference/tests/data/uw.geojson")
+    edges = edges_from_geojson(spark, uw_geojson)
     types = dict(edges.dtypes)
     assert types["description"] == "string"
     assert types["footway"] == "string"

@@ -285,7 +285,9 @@ def test_layer_partitioned_store(spark, tiny_edges, tiny_nodes, tmp_path):
     assert "PartitionFilters" in plan and "_layer" in plan.split("PartitionFilters")[1][:200]
 
 
-def test_spatial_cell_partitioned_store_prunes_and_matches(spark, tmp_path):
+def test_spatial_cell_partitioned_store_prunes_and_matches(
+    spark, tmp_path, uw_geojson
+):
     """spatial_cell_deg directory-partitions edges on the bbox
     min-corner grid cell: read_edges_dwithin must (a) return exactly
     the plain dwithin answer and (b) hit the cell range as a partition
@@ -299,7 +301,7 @@ def test_spatial_cell_partitioned_store_prunes_and_matches(spark, tmp_path):
         write_graph_tables,
     )
 
-    edges = edges_from_geojson(spark, "/root/reference/tests/data/uw.geojson")
+    edges = edges_from_geojson(spark, uw_geojson)
     store = str(tmp_path / "spatial")
     write_graph_tables(edges, None, store, partitions=2, spatial_cell_deg=0.001)
 
