@@ -1446,9 +1446,11 @@ def _ktruss_sql(k: int = 4, rounds: int = 3) -> str:
       FROM nation WHERE n_nationkey >= 5 AND n_nationkey <= 7
     ),"""
     ]
+    # MATERIALIZED: sym{t} is joined twice per round and e{t} feeds
+    # three CTEs, so an inlined chain repeats every earlier round
     for t in range(1, rounds + 1):
         parts.append(
-            f"sym{t - 1} AS (SELECT a, b FROM e{t - 1}"
+            f"sym{t - 1} AS MATERIALIZED (SELECT a, b FROM e{t - 1}"
             f" UNION ALL SELECT b, a FROM e{t - 1}),"
         )
         parts.append(
@@ -1458,7 +1460,7 @@ def _ktruss_sql(k: int = 4, rounds: int = 3) -> str:
             f" GROUP BY e.a, e.b),"
         )
         parts.append(
-            f"e{t} AS (SELECT e.a, e.b FROM e{t - 1} e"
+            f"e{t} AS MATERIALIZED (SELECT e.a, e.b FROM e{t - 1} e"
             f" JOIN sup{t} s ON s.a = e.a AND s.b = e.b WHERE s.c >= {k - 2}),"
         )
     parts.append(
@@ -1794,9 +1796,11 @@ def _kcore_sql(k: int, peels: int) -> str:
         "sym AS (SELECT a, b FROM ue UNION ALL SELECT b, a FROM ue),",
         "alive0 AS (SELECT DISTINCT a AS node FROM sym),",
     ]
+    # MATERIALIZED: each peel references the previous one twice, so an
+    # inlined chain would expand to 2**peels copies of alive0
     for i in range(1, peels + 1):
         parts.append(
-            f"alive{i} AS (SELECT s.a AS node FROM sym s"
+            f"alive{i} AS MATERIALIZED (SELECT s.a AS node FROM sym s"
             f" JOIN alive{i - 1} x ON x.node = s.a"
             f" JOIN alive{i - 1} y ON y.node = s.b"
             f" GROUP BY s.a HAVING count(*) >= {k}),"

@@ -48,11 +48,16 @@ from __future__ import annotations
 
 import functools
 
+import networkx as nx
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from entwiner_spark.operators.graph import rebase_checkpoint
+from entwiner_spark.operators.graph import (
+    _dist_schema,
+    _relax_wavefront,
+    rebase_checkpoint,
+)
 from entwiner_spark.session import scoped_shuffle_partitions
 
 
@@ -72,6 +77,23 @@ def _scaled_shuffle(fn):
             return fn(self, *args, **kwargs)
 
     return wrapper
+
+def _nx_dijkstra(g, source) -> tuple[dict, dict]:
+    """``(pred, dist)`` of networkx Dijkstra over ``g``'s ``"weight"``
+    arcs; ``pred[source]`` is None.  A source outside ``g`` reaches
+    only itself.  ``pred`` keeps the predecessor of each node's last
+    strict improvement, with equal-distance heap entries popped in
+    push order — what a hand-rolled ``(dist, counter, node)`` heap
+    Dijkstra picks too."""
+    if source not in g:
+        return {source: None}, {source: 0.0}
+    preds, dist = nx.dijkstra_predecessor_and_distance(g, source)
+    # networkx reports the source as int 0, and lists a zero-weight
+    # arc back into it as one more predecessor
+    pred = {n: p[0] for n, p in preds.items() if p}
+    pred[source], dist[source] = None, 0.0
+    return pred, dist
+
 
 #: Rank assigned to every uncontracted core node (top of hierarchy).
 CORE_RANK = 1 << 62
@@ -1485,82 +1507,16 @@ class ContractionHierarchy:
         the probed fixpoint (measured: 525 levels → leveled 346 s vs
         fixpoint 20.8 s on the XL grid).  Pass ``stats={}`` to
         receive ``down_rounds`` / ``down_mode``.  Returns
-        ``(_n, dist)`` for every reachable node."""
+        ``(_n, dist)`` for every reachable node: the one-source case
+        of :meth:`sssp_multi`."""
         local = strategy == "local" or (
             strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
         )
         if local:
             return self._sssp_local(source)
-        up, down = self._up_down()
-        upk = up.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        # down edges traversed FORWARD (unlike the bidirectional
-        # route's backward keying): key by the tail
-        downf = down.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        idt = self.ranks.schema["_n"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
+        return self._phast([source], max_iterations, stats, "sssp").select(
+            "_n", "dist"
         )
-        dist = self.spark.createDataFrame([(source, 0.0)], schema)
-
-        def fixpoint(dist, adjk, phase):
-            frontier = dist
-            for _ in range(max_iterations):
-                fr = frontier.select(
-                    F.col("_n").alias("_k"), F.col("dist").alias("_fd")
-                ).hint("broadcast")
-                msgs = fr.join(adjk, "_k").select(
-                    F.col("_t").alias("_n"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                )
-                merged = (
-                    dist.select("_n", "dist", F.lit(False).alias("_new"))
-                    .unionByName(
-                        msgs.select(
-                            "_n", "dist", F.lit(True).alias("_new")
-                        )
-                    )
-                    .groupBy("_n")
-                    .agg(F.min(F.struct("dist", "_new")).alias("b"))
-                    .select(
-                        "_n",
-                        F.col("b.dist").alias("dist"),
-                        F.col("b._new").alias("_imp"),
-                    )
-                    # lazy checkpoint + full-count probe: one scheduled
-                    # job per round (see distance_matrix)
-                    .localCheckpoint(eager=False)
-                )
-                dist = merged.select("_n", "dist")
-                frontier = merged.filter(F.col("_imp")).select("_n", "dist")
-                if frontier.count() == 0:
-                    return dist
-            raise RuntimeError(
-                f"sssp {phase} phase hit the iteration cap; raise "
-                "max_iterations"
-            )
-
-        try:
-            dist = fixpoint(dist, upk, "upward")
-            levels = self._down_levels(down)
-            if self._use_leveled(levels):
-                dist = self._down_sweep_leveled(
-                    dist, down, [], stats, levels=levels
-                )
-            else:
-                dist = fixpoint(dist, downf, "down-sweep")
-                if stats is not None:
-                    stats["down_mode"] = "fixpoint"
-        finally:
-            upk.unpersist()
-            downf.unpersist()
-        return dist
 
     @_scaled_shuffle
     def sssp_multi(
@@ -1585,126 +1541,78 @@ class ContractionHierarchy:
         local = strategy == "local" or (
             strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
         )
-        idt = self.ranks.schema["_n"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("src", idt, False),
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-        )
-        if local:
-            rows = []
-            for s in sources:
-                for r in self._sssp_local(s).collect():
-                    rows.append((s, r["_n"], r["dist"]))
-            return self.spark.createDataFrame(
-                sorted(rows, key=lambda r: (str(r[0]), str(r[1]))), schema
-            )
-        up, down = self._up_down()
-        upk = up.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        downf = down.select(
-            F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        dist = self.spark.createDataFrame(
-            [(s, s, 0.0) for s in sources], schema
+        if not local:
+            return self._phast(sources, max_iterations, stats, "sssp_multi")
+        rows = []
+        for s in sources:
+            for r in self._sssp_local(s).collect():
+                rows.append((s, r["_n"], r["dist"]))
+        return self.spark.createDataFrame(
+            sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
+            _dist_schema(self.ranks.schema["_n"].dataType, keys=["src"]),
         )
 
-        def fixpoint(dist, adjk, phase):
-            frontier = dist
-            for _ in range(max_iterations):
-                fr = frontier.select(
-                    "src",
-                    F.col("_n").alias("_k"),
-                    F.col("dist").alias("_fd"),
-                ).hint("broadcast")
-                msgs = fr.join(adjk, "_k").select(
-                    "src",
-                    F.col("_t").alias("_n"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                )
-                merged = (
-                    dist.select(
-                        "src", "_n", "dist", F.lit(False).alias("_new")
-                    )
-                    .unionByName(
-                        msgs.select(
-                            "src", "_n", "dist", F.lit(True).alias("_new")
-                        )
-                    )
-                    .groupBy("src", "_n")
-                    .agg(F.min(F.struct("dist", "_new")).alias("b"))
-                    .select(
-                        "src",
-                        "_n",
-                        F.col("b.dist").alias("dist"),
-                        F.col("b._new").alias("_imp"),
-                    )
-                    # lazy checkpoint + full-count probe: one scheduled
-                    # job per round (see distance_matrix)
-                    .localCheckpoint(eager=False)
-                )
-                dist = merged.select("src", "_n", "dist")
-                frontier = merged.filter(F.col("_imp")).select(
-                    "src", "_n", "dist"
-                )
-                if frontier.count() == 0:
-                    return dist
-            raise RuntimeError(
-                f"sssp_multi {phase} phase hit the iteration cap; "
-                "raise max_iterations"
+    def _phast(self, sources, max_iterations, stats, caller) -> DataFrame:
+        """Distributed PHAST from ``sources``: ``(src, _n, dist)``.
+        The upward search and the fixpoint down-sweep are wavefront
+        searches keyed by ``src`` (:func:`_relax_wavefront`), probed
+        every round; ``caller`` names the method in the iteration-cap
+        error."""
+        up, down = self._up_down()
+        # down edges traversed FORWARD (unlike the bidirectional
+        # route's backward keying): key by the tail
+        up_adj, down_adj = (
+            e.select("_u", "_v", F.col("w").alias("_w")).persist()
+            for e in (up, down)
+        )
+        seed = self.spark.createDataFrame(
+            [(s, s, 0.0) for s in sources],
+            _dist_schema(self.ranks.schema["_n"].dataType, keys=["src"]),
+        )
+
+        def relax(dist, adj, phase):
+            dist, converged = _relax_wavefront(
+                adj,
+                dist,
+                keys=["src"],
+                max_iterations=max_iterations,
+                check_every=1,
             )
+            if not converged:
+                raise RuntimeError(
+                    f"{caller} {phase} phase hit the iteration cap; "
+                    "raise max_iterations"
+                )
+            return dist
 
         try:
-            dist = fixpoint(dist, upk, "upward")
+            dist = relax(seed, up_adj, "upward")
             levels = self._down_levels(down)
             if self._use_leveled(levels):
                 dist = self._down_sweep_leveled(
                     dist, down, ["src"], stats, levels=levels
                 )
             else:
-                dist = fixpoint(dist, downf, "down-sweep")
+                dist = relax(dist, down_adj, "down-sweep")
                 if stats is not None:
                     stats["down_mode"] = "fixpoint"
         finally:
-            upk.unpersist()
-            downf.unpersist()
+            up_adj.unpersist()
+            down_adj.unpersist()
         return dist
 
     def _sssp_local(self, source) -> DataFrame:
-        """Driver twin: Dijkstra over ALL search edges — every search
-        edge is a real path of its weight (original or shortcut), so
-        search-graph distances equal original-graph distances."""
-        import heapq
-
+        """Driver twin: networkx Dijkstra over ALL search edges — every
+        search edge is a real path of its weight (original or
+        shortcut), so search-graph distances equal original-graph
+        distances."""
         _up, _down, edges = self._collect_local()
-        adj: dict = {}
-        for (u, v), (w, _mid) in edges.items():
-            adj.setdefault(u, []).append((v, w))
-        d = {source: 0.0}
-        pq = [(0.0, 0, source)]
-        order = 0
-        while pq:
-            dd, _o, u = heapq.heappop(pq)
-            if dd > d.get(u, float("inf")):
-                continue
-            for v, w in adj.get(u, []):
-                nd = dd + w
-                if nd < d.get(v, float("inf")):
-                    order += 1
-                    d[v] = nd
-                    heapq.heappush(pq, (nd, order, v))
-        idt = self.ranks.schema["_n"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-        )
+        g = nx.DiGraph()
+        g.add_weighted_edges_from((u, v, w) for (u, v), (w, _mid) in edges.items())
+        _pred, d = _nx_dijkstra(g, source)
         return self.spark.createDataFrame(
-            sorted(d.items(), key=lambda kv: str(kv[0])), schema
+            sorted(d.items(), key=lambda kv: str(kv[0])),
+            _dist_schema(self.ranks.schema["_n"].dataType),
         )
 
     @_scaled_shuffle
@@ -1826,28 +1734,9 @@ class ContractionHierarchy:
         )
 
     def _distance_matrix_local(self, sources, targets) -> DataFrame:
-        import heapq
-
         up, down, _edges = self._collect_local()
-
-        def dijkstra(adj, src):
-            d = {src: 0.0}
-            pq = [(0.0, 0, src)]
-            order = 0
-            while pq:
-                dd, _o, u = heapq.heappop(pq)
-                if dd > d.get(u, float("inf")):
-                    continue
-                for v, w in adj.get(u, []):
-                    nd = dd + w
-                    if nd < d.get(v, float("inf")):
-                        order += 1
-                        d[v] = nd
-                        heapq.heappush(pq, (nd, order, v))
-            return d
-
-        fwd = {s: dijkstra(up, s) for s in dict.fromkeys(sources)}
-        bwd = {t: dijkstra(down, t) for t in dict.fromkeys(targets)}
+        fwd = {s: _nx_dijkstra(up, s)[1] for s in dict.fromkeys(sources)}
+        bwd = {t: _nx_dijkstra(down, t)[1] for t in dict.fromkeys(targets)}
         rows = []
         for s, df in fwd.items():
             for t, db in bwd.items():
@@ -1870,46 +1759,27 @@ class ContractionHierarchy:
 
     # ------------------------------------------------------ local twin
     def _collect_local(self):
+        """The search graph on the driver, collected once: networkx
+        DiGraphs of the upward arcs and of the downward arcs REVERSED
+        (the backward search's direction), and ``{(u, v): (w, mid)}``."""
         if self._local_cache is None:
-            up: dict = {}
-            down: dict = {}
-            edges: dict = {}
+            up, down, edges = nx.DiGraph(), nx.DiGraph(), {}
             for r in self.search.collect():
                 u, v, w, mid = r["_u"], r["_v"], r["w"], r["mid"]
                 edges[(u, v)] = (w, mid)
                 ru, rv = r["_ru"], r["_rv"]
                 both_core = ru == CORE_RANK and rv == CORE_RANK
                 if ru < rv or both_core:
-                    up.setdefault(u, []).append((v, w))
+                    up.add_edge(u, v, weight=w)
                 if ru > rv or both_core:
-                    down.setdefault(v, []).append((u, w))
+                    down.add_edge(v, u, weight=w)
             self._local_cache = (up, down, edges)
         return self._local_cache
 
     def _route_local(self, source, target):
-        import heapq
-
         up, down, edges = self._collect_local()
-
-        def dijkstra(adj, src):
-            dist = {src: 0.0}
-            pred: dict = {src: None}
-            pq = [(0.0, 0, src)]
-            order = 0
-            while pq:
-                d, _o, u = heapq.heappop(pq)
-                if d > dist.get(u, float("inf")):
-                    continue
-                for v, w in adj.get(u, []):
-                    nd = d + w
-                    if nd < dist.get(v, float("inf")):
-                        order += 1
-                        dist[v], pred[v] = nd, u
-                        heapq.heappush(pq, (nd, order, v))
-            return dist, pred
-
-        df, pf = dijkstra(up, source)
-        db, pb = dijkstra(down, target)
+        pf, df = _nx_dijkstra(up, source)
+        pb, db = _nx_dijkstra(down, target)
         meet, mu = None, None
         for n in df.keys() & db.keys():
             c = df[n] + db[n]

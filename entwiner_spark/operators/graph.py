@@ -13,8 +13,12 @@ Scale notes:
   big side per iteration);
 - lineage is truncated with ``localCheckpoint`` every few iterations
   (iterative-plan blowup is the classic Spark failure mode here);
-- convergence = count of improved vertices, one lightweight action per
-  iteration.
+- the distributed Bellman-Ford searches (SSSP lengths, point-to-point
+  and A* routes, the CH PHAST upward and fixpoint down sweeps) run
+  their rounds in one helper, ``_relax_wavefront``: one expand join
+  plus one merge shuffle per round, and a convergence probe (one
+  aggregate counting the improved vertices) every ``check_every``
+  rounds, not every round.
 
 Known reference quirks NOT replicated (SURVEY.md §7): swapped
 successor/predecessor wiring in OuterAdjlistView defaults and
@@ -37,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from entwiner_spark.operators import spatial
+from entwiner_spark.session import scoped_shuffle_partitions
 
 
 def rebase_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -198,6 +203,143 @@ def _dijkstra_route(g, source, target, blocked=(), removed=()):
         path.append(cur)
         cur = pred[cur]
     return path[::-1], dist[target]
+
+
+def _dist_schema(id_type, keys=(), carry=()) -> T.StructType:
+    """State schema of a wavefront search, ``(*keys, _n, dist,
+    *carry)``: keys and ``_n`` are ``id_type`` ids, ``carry`` columns
+    nullable ``id_type`` ids (a predecessor)."""
+    return T.StructType(
+        [T.StructField(c, id_type, False) for c in [*keys, "_n"]]
+        + [T.StructField("dist", T.DoubleType(), False)]
+        + [T.StructField(c, id_type, True) for c in carry]
+    )
+
+
+def _relax_wavefront(
+    adj: DataFrame,
+    dist: DataFrame,
+    *,
+    keys=(),
+    carry: dict | None = None,
+    max_iterations: int,
+    check_every: int,
+    stats: dict | None = None,
+    probe_aggs=(),
+    on_probe=None,
+) -> tuple[DataFrame, bool]:
+    """Bellman-Ford wavefront rounds, shared by the distributed SSSP
+    searches: each round is ONE expand join plus ONE merge shuffle.
+
+    ``adj``: arcs ``(_u, _v, _w)``, persisted by the caller — a cached
+    plan keeps its hashpartitioning(_u) visible, so the frontier join
+    never moves the adjacency (a checkpoint would erase it).  ``dist``:
+    the seed state ``(*keys, _n, dist, *carry)``; every seed row is in
+    the first frontier.  ``keys`` split the state into independent
+    searches (``["src"]`` for a batched multi-source sweep).
+    ``carry``: ``{name: Column}`` extra state columns; a message sets
+    each from its expand row (frontier ``_u`` and ``_fd``, arc ``_v``
+    and ``_w``), and the merge keeps the values of the winning row.
+
+    Convergence is probed every ``check_every`` rounds (and on the
+    last): between probes the rounds stay lazy, so a D-hop search
+    costs ~D/check_every probe jobs; an empty frontier only produces
+    empty frontiers, so the extra rounds are no-ops.  The probe is one
+    aggregate over the merged state (``_imp`` marks the improved rows):
+    the frontier size, plus ``probe_aggs``.  ``on_probe(row)`` returns
+    ``(stop, prune)``: ``stop`` ends the search as converged, and
+    ``prune`` (a Column or None) filters every later frontier before
+    its expand.  ``stats["rounds"]`` gets ``{"it", "frontier", "sec"}``
+    per probe (seconds since the previous probe).
+
+    Returns ``(dist, converged)``; ``converged`` is False when
+    ``max_iterations`` rounds ran without an empty frontier or a stop.
+    """
+    keys = list(keys)
+    carry = carry or {}
+    state_cols = [*keys, "_n", "dist", *carry]
+    # Join-strategy hint, from the last probed frontier size.  The
+    # checkpointed frontier has UNKNOWN stats, so the static planner
+    # otherwise broadcasts the cached ADJACENCY — the whole edge table
+    # to every executor every round (measured ~1 s/round at 200k
+    # edges; at cluster scale it would OOM).  A small frontier is
+    # broadcast instead: the join runs map-side over adj's cached
+    # partitioning with zero exchanges (0.2-0.4 s/round vs 1-3 s).
+    # Above the row cap the frontier is shuffle-hashed; adj still never
+    # moves.
+    broadcast_frontier_rows = 2_000_000
+    frontier_small = True
+    frontier, prune = dist, None
+    if stats is not None:
+        stats["rounds"] = []
+        t_probe = time.time()
+    for it in range(max_iterations):
+        probe = (it + 1) % check_every == 0 or it == max_iterations - 1
+        # the round body builds as FEW DataFrames as possible: at small
+        # frontiers the loop is driver-bound, and each one pays a py4j
+        # hop plus an analysis pass (r16: fusing the renames into the
+        # join and union cut plan construction from 1.4 s to 0.8 s
+        # over 12 rounds)
+        msgs = (
+            frontier.select(*keys, F.col("_n").alias("_u"), F.col("dist").alias("_fd"))
+            .hint("broadcast" if frontier_small else "shuffle_hash")
+            .join(adj, "_u")
+            .select(
+                *keys,
+                F.col("_v").alias("_n"),
+                (F.col("_fd") + F.col("_w")).alias("dist"),
+                F.lit(True).alias("_new"),
+                *[c.alias(name) for name, c in carry.items()],
+            )
+        )
+        # ONE union+groupBy merges the messages into the state AND
+        # derives the improved flag: struct-min over (dist, _new, ...)
+        # takes the best distance and, on an exact tie, the OLD row
+        # (false < true), so an equal-cost rediscovery is no
+        # improvement and the frontier cannot oscillate.  Map-side
+        # partial aggregation combines messages before the exchange.
+        # ONE checkpoint per round severs lineage; it is lazy on probe
+        # rounds, whose aggregate both materializes the round and
+        # answers the probe (eager rounds between probes: lazy windows
+        # recompute 2^k subtrees, measured 4x worse).
+        merged = (
+            dist.select(*keys, "_n", "dist", F.lit(False).alias("_new"), *carry)
+            .unionByName(msgs)
+            .groupBy(*keys, "_n")
+            .agg(F.min(F.struct("dist", "_new", *carry)).alias("_b"))
+            .select(
+                *keys,
+                "_n",
+                *[F.col(f"_b.{c}").alias(c) for c in ["dist", *carry]],
+                F.col("_b._new").alias("_imp"),
+            )
+            .localCheckpoint(eager=not probe)
+        )
+        dist = merged.select(*state_cols)
+        frontier = merged.filter(F.col("_imp"))
+        if prune is not None:
+            frontier = frontier.filter(prune)
+        if not probe:
+            continue
+        row = merged.agg(
+            F.coalesce(F.sum(F.when(F.col("_imp"), 1)), F.lit(0)).alias("_front"),
+            *probe_aggs,
+        ).collect()[0]
+        n_front = row["_front"]
+        if stats is not None:
+            now = time.time()
+            stats["rounds"].append(
+                {"it": it, "frontier": n_front, "sec": round(now - t_probe, 2)}
+            )
+            t_probe = now
+        frontier_small = n_front < broadcast_frontier_rows
+        if n_front == 0:
+            return dist, True
+        if on_probe is not None:
+            stop, prune = on_probe(row)
+            if stop:
+                return dist, True
+    return dist, False
 
 
 class SparkGraph:
@@ -725,14 +867,8 @@ class SparkGraph:
         return nx.single_source_dijkstra_path_length(g, source)
 
     def _local_sssp(self, source: str, weight: str | None) -> DataFrame:
-        schema = T.StructType(
-            [
-                T.StructField("_n", self._id_type(), False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-        )
         rows = [(n, float(d)) for n, d in self._local_dists(source, weight).items()]
-        return self.spark.createDataFrame(rows, schema)
+        return self.spark.createDataFrame(rows, _dist_schema(self._id_type()))
 
     def _nx_simple_graph(self) -> nx.Graph:
         """Undirected, self-loop-free view of the hop digraph (the
@@ -1046,186 +1182,56 @@ class SparkGraph:
                 # truncated BFS == k-hop neighborhood
                 out = out.filter(F.col("dist") <= float(max_iterations))
             return out
-        bounded_by_caller = max_iterations is not None
-        if max_iterations is None:
-            max_iterations = 200
+        adj = self._sssp_adj(weight)
+        try:
+            # Size the loop's per-round shuffle from the DATA, not the
+            # session constant (guide §2.2: partitions should track
+            # bytes).  The state spine is <=|V|<=2|E| tiny rows; at 32
+            # session partitions a 100k-node graph pays 32 map outputs
+            # + AQE coalesce planning PER ROUND for partitions holding
+            # a few thousand rows each (measured 200k-edge/12-round
+            # loop: 3.7 s session-default vs 2.7 s size-derived).  The
+            # count also prefills the adj cache, a job round 1
+            # otherwise pays.  At scale ceil(|E|/25k) exceeds the
+            # session setting and this is a no-op; values are
+            # partition-invariant (min-merge).
+            with scoped_shuffle_partitions(self.spark, adj.count()):
+                return self._pregel_lengths(
+                    source, adj, max_iterations, check_every, stats
+                )
+        finally:
+            adj.unpersist()
+
+    def _sssp_adj(self, weight) -> DataFrame:
+        """The persisted ``(_u, _v, _w)`` arcs a wavefront search
+        expands over (see :func:`_relax_wavefront`).  Re-caching it at
+        the size-derived shuffle width was A/B-measured in r16 and NOT
+        adopted: a graph CONSTRUCTED at the derived width is ~20%
+        faster per query, but resizing inside the operator pays a
+        cache-to-cache copy per call that eats the savings; the
+        construction-time ``partitions=`` knob is the place for that
+        choice."""
         w = self._weight_col(weight)
-        # cache (not checkpoint) the projected adjacency: a checkpoint
-        # erases the plan's output partitioning, so every iteration's
-        # frontier join would re-shuffle the full edge table; the
-        # cached plan keeps its hashpartitioning(_u) visible and the
-        # big side never exchanges again
-        adj = self.edges.select(F.col("_u"), F.col("_v"), w.alias("_w")).persist()
-        # Size the loop's per-round shuffle from the DATA, not the
-        # session constant (guide §2.2: partitions should track bytes).
-        # The state spine is <=|V|<=2|E| tiny rows; at 32 session
-        # partitions a 100k-node graph pays 32 map outputs + AQE
-        # coalesce planning PER ROUND for partitions holding a few
-        # thousand rows each (measured 200k-edge/12-round loop: 3.7 s
-        # session-default vs 2.7 s size-derived).  The count also
-        # prefills the adj cache, a job round 1 otherwise pays.  At
-        # scale ceil(|E|/25k) exceeds the session setting and this is
-        # a no-op; values are partition-invariant (min-merge).
-        n_edges = adj.count()
-        # Re-caching adj at the size-derived width (fewer scan tasks
-        # per round when the frontier is tiny) was A/B-measured in r16
-        # and NOT adopted: a graph CONSTRUCTED at the derived width is
-        # ~20% faster per query (4.3 s vs 5.0 s, 12 bounded rounds at
-        # 200k edges), but resizing INSIDE the operator pays a
-        # cache-to-cache copy per call that eats the savings (quiet
-        # medians 4.33 s resized vs 3.76 s leaving the 32-partition
-        # cache alone).  The construction-time `partitions=` knob is
-        # the right place for that choice.
+        return self.edges.select("_u", "_v", w.alias("_w")).persist()
 
-        schema = T.StructType(
-            [
-                T.StructField("_n", self._id_type(), False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
+    def _pregel_lengths(
+        self, source, adj, max_iterations=None, check_every=3, stats=None
+    ) -> DataFrame:
+        """Distributed SSSP over the persisted ``adj``: ``(_n, dist)``."""
+        dist, converged = _relax_wavefront(
+            adj,
+            self.spark.createDataFrame([(source, 0.0)], _dist_schema(self._id_type())),
+            max_iterations=200 if max_iterations is None else max_iterations,
+            check_every=check_every,
+            stats=stats,
         )
-        dist = self.spark.createDataFrame([(source, 0.0)], schema)
-        frontier = dist
-
-        converged = False
-        if stats is not None:
-            stats["rounds"] = []
-            _t_probe = time.time()
-        # single-source start: the frontier is exactly one row, so the
-        # first window always broadcasts; probes re-decide per window
-        frontier_small = True
-        broadcast_frontier_rows = 2_000_000
-        from entwiner_spark.session import scoped_shuffle_partitions
-
-        with scoped_shuffle_partitions(self.spark, n_edges):
-            converged = self._sssp_pregel_loop(
-                adj,
-                dist,
-                frontier,
-                max_iterations,
-                check_every,
-                frontier_small,
-                broadcast_frontier_rows,
-                stats,
-            )
-        dist = converged["dist"]
-        converged = converged["converged"]
-        adj.unpersist()
-        if not converged and not bounded_by_caller:
+        if not converged and max_iterations is None:
             raise RuntimeError(
                 "SSSP hit the 200-iteration safety cap without "
                 "converging; pass max_iterations explicitly for a "
                 "bounded (k-hop) result or raise the cap"
             )
         return dist
-
-    def _sssp_pregel_loop(
-        self,
-        adj,
-        dist,
-        frontier,
-        max_iterations: int,
-        check_every: int,
-        frontier_small: bool,
-        broadcast_frontier_rows: int,
-        stats: dict | None,
-    ) -> dict:
-        """Body of the distributed SSSP iteration (split out so the
-        caller can scope the size-derived shuffle-partition setting
-        with a try/finally around exactly the rounds that shuffle)."""
-        converged = False
-        if stats is not None:
-            _t_probe = time.time()
-        for it in range(max_iterations):
-            probe = (it + 1) % check_every == 0 or it == max_iterations - 1
-            # Join-strategy hint, decided from the last probed
-            # frontier size.  The checkpointed frontier has UNKNOWN
-            # stats, so the static planner otherwise broadcasts the
-            # cached ADJACENCY — re-serializing the entire edge table
-            # to every executor every round (measured ~1 s/round at
-            # 200k edges; at cluster scale it would simply OOM).
-            # While the frontier is small (the common wavefront case)
-            # we broadcast IT: the join runs map-side over adj's
-            # cached hashpartitioning(_u) with zero exchanges
-            # (measured 0.2-0.4 s/round vs 1-3 s).  If a probe sees
-            # the frontier above the row cap, fall back to
-            # shuffle_hash built on the frontier: adj still never
-            # moves, only the frontier shuffles.
-            hint = "broadcast" if frontier_small else "shuffle_hash"
-            # Round body deliberately built with as FEW DataFrame
-            # creations as possible: at small frontiers the loop is
-            # driver-bound, and each intermediate DataFrame pays a
-            # py4j hop plus an eager Catalyst analysis pass — fusing
-            # the rename/select steps into the join and union cut the
-            # measured plan-construction time from 1.4 s to 0.8 s over
-            # 12 rounds (r16, §1.5 measure-first; job time unchanged).
-            msgs = frontier.hint(hint).join(adj, frontier["_n"] == F.col("_u")).select(
-                F.col("_v").alias("_n"),
-                (frontier["dist"] + F.col("_w")).alias("dist"),
-                F.lit(True).alias("_new"),
-            )
-            # ONE union+groupBy both merges messages into dist AND
-            # derives the improved-flag — a single shuffle per round
-            # (r1 used groupBy-min on msgs PLUS a full_outer merge
-            # join: two shuffles and double the stages).  Improvement
-            # detection: min over pre-merge rows only (_new=false);
-            # a node improved iff it had no old dist or the global
-            # min beats it — ties are NOT improvements, so equal-cost
-            # paths can't re-expand forever.  Map-side partial agg
-            # combines messages before the exchange, so at scale the
-            # shuffle carries ~|V| rows, not |msgs|.
-            merged = (
-                dist.withColumn("_new", F.lit(False))
-                .unionByName(msgs)
-                .groupBy("_n")
-                .agg(
-                    F.min("dist").alias("dist"),
-                    F.min(F.when(~F.col("_new"), F.col("dist"))).alias("_old"),
-                )
-                .select(
-                    "_n",
-                    "dist",
-                    (F.col("_old").isNull() | (F.col("dist") < F.col("_old"))).alias("_imp"),
-                )
-            )
-            # ONE checkpoint per round materializes the merge and
-            # severs lineage, keeping every iteration's plan flat.
-            # Two lazier cadences were measured and REJECTED on the
-            # 200k-edge stress: lazy-uncached windows recompute 2^k
-            # subtrees (4x worse), and persist()-ed windows with a
-            # probe-boundary checkpoint pay memory-store overhead for
-            # no job savings (25% worse than eager).  On PROBE rounds
-            # the checkpoint is LAZY: the probe's frontier.count()
-            # scans every partition of the merge anyway, so one
-            # scheduled job both materializes the round and answers
-            # the probe (r17 fold; non-probe rounds stay eager).
-            merged = merged.localCheckpoint(eager=not probe)
-            dist = merged.select("_n", "dist")
-            frontier = merged.filter(F.col("_imp")).select("_n", "dist")
-            if probe:
-                # convergence probe batched: an empty frontier only
-                # produces empty frontiers, so probing every k-th round
-                # trades ≤k-1 cheap no-op rounds for k-1 fewer driver
-                # actions; bounded (k-hop) runs still expand exactly
-                # max_iterations times regardless of probe cadence.
-                # count() (not isEmpty) doubles as the size signal for
-                # the next window's join-strategy choice — it scans a
-                # just-materialized checkpoint, no shuffle.
-                n_front = frontier.count()
-                if stats is not None:
-                    now = time.time()
-                    stats["rounds"].append(
-                        {
-                            "it": it,
-                            "frontier": n_front,
-                            "sec": round(now - _t_probe, 2),
-                        }
-                    )
-                    _t_probe = now
-                frontier_small = n_front < broadcast_frontier_rows
-                if n_front == 0:
-                    converged = True
-                    break
-        return {"dist": dist, "converged": converged}
 
     def shortest_path(
         self,
@@ -1348,105 +1354,45 @@ class SparkGraph:
             )
         if self._use_local(strategy, weight):
             return _dijkstra_route(self._nx_digraph(weight), source, target)
-        bounded_by_caller = max_iterations is not None
-        if max_iterations is None:
-            max_iterations = 200
-        w = self._weight_col(weight)
-        # persist (not checkpoint): keeps hashpartitioning(_u) visible
-        # so the per-round join never moves the adjacency (see
-        # shortest_path_lengths for the measured rationale)
-        adj = self.edges.select(F.col("_u"), F.col("_v"), w.alias("_w")).persist()
-        schema = T.StructType(
-            [
-                T.StructField("_n", self._id_type(), False),
-                T.StructField("dist", T.DoubleType(), False),
-                T.StructField("pred", self._id_type(), True),
-            ]
-        )
-        dist = self.spark.createDataFrame([(source, 0.0, None)], schema)
-        frontier = dist
-        converged = False
-        frontier_small = True
-        broadcast_frontier_rows = 2_000_000
-        t_best = None  # best target distance seen at a probe (A* prune bound)
-        for it in range(max_iterations):
-            probe = (it + 1) % 3 == 0 or it == max_iterations - 1
-            hint = "broadcast" if frontier_small else "shuffle_hash"
-            fr = frontier.select(F.col("_n").alias("_fn"), F.col("dist").alias("_fd")).hint(hint)
-            msgs = fr.join(adj, F.col("_fn") == F.col("_u")).select(
-                F.col("_v").alias("_n"),
-                (F.col("_fd") + F.col("_w")).alias("dist"),
-                F.col("_fn").alias("pred"),
-            )
-            # fused union+groupBy merge (one shuffle — see
-            # shortest_path_lengths): struct-min over (dist, _new,
-            # pred) picks the best distance and, on exact dist ties,
-            # prefers the OLD row (false < true), so equal-cost
-            # re-discoveries never flag as improvements and the
-            # frontier can't oscillate
-            merged = (
-                dist.select("_n", "dist", F.lit(False).alias("_new"), "pred")
-                .unionByName(msgs.select("_n", "dist", F.lit(True).alias("_new"), "pred"))
-                .groupBy("_n")
-                .agg(F.min(F.struct("dist", "_new", "pred")).alias("best"))
-                .select(
-                    "_n",
-                    F.col("best.dist").alias("dist"),
-                    F.col("best.pred").alias("pred"),
-                    F.col("best._new").alias("_imp"),
-                )
-                # probe rounds: lazy — the probe aggregate below both
-                # materializes the round and answers the probe (fold)
-                .localCheckpoint(eager=not probe)
-            )
-            dist = merged.select("_n", "dist", "pred")
-            frontier = merged.filter(F.col("_imp")).select("_n", "dist")
-            if heuristic is not None and t_best is not None:
-                # A* prune: a frontier node whose settled distance plus
-                # the admissible remaining-cost bound cannot beat the
-                # best known target distance will never be on a better
-                # route — drop it BEFORE the expand join (the bound is
-                # the last probe's t_dist; pruning against a stale
-                # upper bound is conservative, never wrong)
-                frontier = frontier.filter(
-                    F.col("dist") + heuristic(F.col("_n")) < F.lit(t_best)
-                )
-            if probe:
-                # one aggregate over the just-materialized checkpoint
-                # yields the emptiness check, the broadcast-size
-                # signal, AND the goal-stopping test: with
-                # non-negative weights, once every frontier distance
-                # is >= the target's settled distance, no remaining
-                # expansion can improve the target — stop instead of
-                # flooding the rest of the graph (point-to-point
-                # routes touch a neighborhood, not the whole network)
-                fkey = (
-                    F.col("dist") + heuristic(F.col("_n"))
-                    if heuristic is not None
-                    else F.col("dist")
-                )
-                st = merged.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("_imp"), 1)), F.lit(0)
-                    ).alias("n_front"),
-                    # with a heuristic this is min(dist + h): the A*
-                    # goal-stop fires as soon as no frontier f-value
-                    # can undercut the target — rounds earlier than
-                    # the plain min(dist) test
+        schema = _dist_schema(self._id_type(), carry=["pred"])
+        fkey = F.col("dist")
+        if heuristic is not None:
+            fkey = fkey + heuristic(F.col("_n"))
+
+        def goal(st):
+            # goal-stop: with non-negative weights, once no frontier
+            # f-value (dist + h; plain dist without a heuristic) can
+            # undercut the target's settled distance, no remaining
+            # expansion can improve the target — stop instead of
+            # flooding the rest of the graph
+            t = st["t_dist"]
+            if t is None:
+                return False, None
+            # A* prune: a frontier node whose settled distance plus the
+            # admissible remaining-cost bound cannot beat the best
+            # known target distance is never on a better route — drop
+            # it BEFORE the expand join (pruning against the last
+            # probe's stale upper bound is conservative, never wrong)
+            prune = None if heuristic is None else fkey < F.lit(t)
+            return st["f_min"] >= t, prune
+
+        adj = self._sssp_adj(weight)
+        try:
+            dist, converged = _relax_wavefront(
+                adj,
+                self.spark.createDataFrame([(source, 0.0, None)], schema),
+                carry={"pred": F.col("_u")},
+                max_iterations=200 if max_iterations is None else max_iterations,
+                check_every=3,
+                probe_aggs=[
                     F.min(F.when(F.col("_imp"), fkey)).alias("f_min"),
-                    F.min(F.when(F.col("_n") == target, F.col("dist"))).alias(
-                        "t_dist"
-                    ),
-                ).collect()[0]
-                frontier_small = st["n_front"] < broadcast_frontier_rows
-                t_best = st["t_dist"]
-                if st["n_front"] == 0 or (
-                    st["t_dist"] is not None and st["f_min"] >= st["t_dist"]
-                ):
-                    converged = True
-                    break
-        adj.unpersist()
-        if not converged and not bounded_by_caller:
+                    F.min(F.when(F.col("_n") == target, F.col("dist"))).alias("t_dist"),
+                ],
+                on_probe=goal,
+            )
+        finally:
+            adj.unpersist()
+        if not converged and max_iterations is None:
             # mirror shortest_path_lengths: a silently truncated path
             # is worse than an error (ADVICE.md r1)
             raise RuntimeError(
@@ -1454,7 +1400,6 @@ class SparkGraph:
                 "without converging; pass max_iterations explicitly "
                 "to accept a bounded (possibly suboptimal) result"
             )
-
         return self._reconstruct_path(dist, target)
 
     def _reconstruct_path(
@@ -4123,29 +4068,42 @@ class SparkGraph:
             return contracted.sssp_multi(
                 landmarks, strategy=strategy
             ).select("_n", F.col("dist").alias("_d"))
-        # per-landmark SSSPs are independent — overlap them (guide
-        # §2.6; one landmark's tail rounds leave the scheduler idle for
-        # the next one's frontier expansion).  Parts union in landmark
-        # order, so the assembled frame matches the serial loop.  The
-        # scoped shuffle conf concurrent loops touch derives the same
-        # data-sized value and only affects partition counts of
-        # partition-invariant min-merges.
         from concurrent.futures import ThreadPoolExecutor
         from functools import reduce
 
-        def _one(lm):
-            d = self.shortest_path_lengths(lm, weight=weight, strategy=strategy)
+        def _part(d):
             return d.select("_n", F.col("dist").alias("_d")).localCheckpoint(
                 eager=False
             )
 
-        # overlap only when the SSSPs actually run the distributed
-        # loop: the driver-local twin is GIL-bound Python where threads
-        # add overhead without overlap (A/B: 59.8/61.0 s threaded vs
-        # 57.6/58.5 s serial on the all-landmarks local-twin test)
-        workers = 1 if self._use_local(strategy, weight) else 3
-        with ThreadPoolExecutor(max_workers=min(workers, max(1, len(landmarks)))) as pool:
-            parts = list(pool.map(_one, landmarks))
+        # Parts union in landmark order either way.  The driver-local
+        # twin is GIL-bound Python where threads add overhead without
+        # overlap (A/B: 59.8/61.0 s threaded vs 57.6/58.5 s serial on
+        # the all-landmarks local-twin test), so it runs serially.
+        if self._use_local(strategy, weight):
+            parts = [
+                _part(self.shortest_path_lengths(lm, weight=weight, strategy=strategy))
+                for lm in landmarks
+            ]
+            return reduce(lambda a, b: a.unionByName(b), parts)
+        # Distributed SSSPs are independent — overlap them (guide §2.6;
+        # one landmark's tail rounds leave the scheduler idle for the
+        # next one's frontier expansion).  The threads share ONE
+        # persisted adjacency and ONE scoped shuffle width, set before
+        # the first starts and undone after the last joins: with a
+        # persist per thread, the first landmark to finish would evict
+        # the cache entry its siblings still read, and conf scopes per
+        # thread would interleave their save and restore.
+        adj = self._sssp_adj(weight)
+        try:
+            with scoped_shuffle_partitions(self.spark, adj.count()), ThreadPoolExecutor(
+                max_workers=min(3, max(1, len(landmarks)))
+            ) as pool:
+                parts = list(
+                    pool.map(lambda lm: _part(self._pregel_lengths(lm, adj)), landmarks)
+                )
+        finally:
+            adj.unpersist()
         return reduce(lambda a, b: a.unionByName(b), parts)
 
     def betweenness(

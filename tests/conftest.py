@@ -77,6 +77,43 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_cost(spark):
+    """``cost(fn) -> (jobs, stages)``: the Spark jobs, and the stages
+    that ran (skipped ones not counted), started while ``fn()`` runs.
+    Under AQE each query stage runs as its own job, so a pin on both
+    tells a regrouping of stages into jobs apart from added work."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore().store()
+    stage_cls = sc._jvm.java.lang.Class.forName(
+        "org.apache.spark.status.StageDataWrapper"
+    )
+
+    def newest_stages():
+        it = store.view(stage_cls).reverse().iterator()
+        while it.hasNext():
+            yield it.next().info()
+
+    def mark():
+        jsc.listenerBus().waitUntilEmpty()
+        job = max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+        return job, next((s.stageId() for s in newest_stages()), -1)
+
+    def cost(fn):
+        job0, stage0 = mark()
+        fn()
+        job1, _ = mark()
+        stages = 0
+        for s in newest_stages():
+            if s.stageId() <= stage0:
+                break
+            stages += s.status().toString() != "SKIPPED"
+        return job1 - job0, stages
+
+    return cost
+
+
+@pytest.fixture(scope="session")
 def tiny_geojson(tmp_path_factory):
     path = tmp_path_factory.mktemp("data") / "tiny.geojson"
     path.write_text(json.dumps(TINY_FC))

@@ -886,3 +886,26 @@ def test_ch_customize_pregel_rejects_local_built(spark):
     with pytest.raises(ValueError, match="driver-locally"):
         ch.customize(new, strategy="pregel")
     assert ch.customize(new, strategy="local") is not None
+
+
+def test_phast_job_and_stage_counts(spark, spark_cost, monkeypatch):
+    """Forced-distributed PHAST on a fresh 6x6 grid hierarchy runs the
+    jobs and stages it ran before its rounds became the shared
+    wavefront helper, with the leveled down-sweep and with the probed
+    fixpoint down-sweep forced (the inflated-level-count fallback)."""
+    ch = ContractionHierarchy.build(_grid_graph(spark, 6), weight="w")
+
+    def costs():
+        return (
+            spark_cost(lambda: ch.sssp("0:0", strategy="pregel").collect()),
+            spark_cost(
+                lambda: ch.sssp_multi(
+                    ["0:0", "5:5", "2:4"], strategy="pregel"
+                ).collect()
+            ),
+        )
+
+    assert costs() == ((169, 169), (169, 169))
+    monkeypatch.setattr(ch, "_LEVELED_MIN_LEVELS", 0)
+    monkeypatch.setattr(ch, "rounds", 0)
+    assert costs() == ((53, 53), (77, 77))

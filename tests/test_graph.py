@@ -2596,3 +2596,106 @@ def test_local_twin_job_counts(spark, op, expected):
     nodes = spark.createDataFrame([(n,) for n in "abcdef"], "_n string")
     g = SparkGraph(nodes, edges, partitions=4)
     assert _jobs(spark, lambda: op(g).collect()) == expected
+
+
+# ---- job and stage pins for the distributed SSSP --------------------
+
+
+def _grid(spark, n=6):
+    """``n`` x ``n`` bidirectional grid of ``"x:y"`` nodes with fixed,
+    irregular arc weights in [1, 2)."""
+    rows = []
+    for x in range(n):
+        for y in range(n):
+            for dx, dy in ((1, 0), (0, 1)):
+                if x + dx < n and y + dy < n:
+                    a, b = f"{x}:{y}", f"{x + dx}:{y + dy}"
+                    w = 1.0 + (x * 31 + y * 17 + dx * 7) % 23 / 25
+                    rows += [(a, b, w), (b, a, w)]
+    edges = spark.createDataFrame(rows, "_u string, _v string, w double")
+    nodes = spark.createDataFrame(
+        [(f"{x}:{y}",) for x in range(n) for y in range(n)], "_n string"
+    )
+    return SparkGraph(nodes, edges, partitions=4)
+
+
+def _manhattan_to(tx, ty):
+    """Admissible A* bound on ``_grid``: every arc costs at least 1."""
+
+    def h(c):
+        xy = F.split(c, ":")
+        return (
+            F.abs(xy[0].cast("int") - tx) + F.abs(xy[1].cast("int") - ty)
+        ).cast("double")
+
+    return h
+
+
+@pytest.mark.parametrize(
+    "op, expected",
+    [
+        (
+            lambda g: g.shortest_path_lengths(
+                "0:0", weight="w", strategy="pregel"
+            ).collect(),
+            {(45, 45)},
+        ),
+        (
+            lambda g: g.shortest_path("0:0", "5:5", weight="w", strategy="pregel"),
+            {(93, 93), (94, 94)},
+        ),
+        (
+            lambda g: g.shortest_path(
+                "0:0", "5:5", weight="w", strategy="pregel",
+                heuristic=_manhattan_to(5, 5),
+            ),
+            {(93, 93), (94, 94)},
+        ),
+    ],
+    ids=["lengths", "path", "astar"],
+)
+def test_pregel_sssp_job_and_stage_counts(spark, spark_cost, op, expected):
+    """Forced-distributed SSSP on a fresh 6x6 grid runs the jobs and
+    stages it ran before its round became the shared wavefront helper.
+    A route's count moves by one between repeated runs, so the pin is
+    the observed set."""
+    g = _grid(spark)
+    assert spark_cost(lambda: op(g)) in expected
+
+
+def test_landmarks_share_one_adjacency_and_shuffle_width(spark, monkeypatch):
+    """The concurrent landmark SSSPs share one persisted adjacency and
+    one scoped shuffle width: the projection is persisted and
+    unpersisted exactly once around the pool, the session's shuffle
+    partitions are unchanged afterwards, and the distances match the
+    driver-local twin."""
+    g = _grid(spark)
+    calls = []
+    cls = type(g.edges)
+    for name in ("persist", "unpersist"):
+
+        def spy(self, *args, _real=getattr(cls, name), _name=name, **kwargs):
+            if self.columns == ["_u", "_v", "_w"]:
+                calls.append(_name)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, spy)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    lms = ["0:0", "5:5", "2:4"]
+
+    def closeness(strategy):
+        return {
+            r["_n"]: (r["total_dist"], r["n_landmarks"])
+            for r in g.closeness_landmarks(
+                weight="w", landmarks=lms, strategy=strategy
+            ).collect()
+        }
+
+    got = closeness("pregel")
+    assert calls == ["persist", "unpersist"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    want = closeness("local")
+    assert got.keys() == want.keys()
+    for n, (total, k) in want.items():
+        assert got[n][1] == k
+        assert got[n][0] == pytest.approx(total, rel=1e-12)
