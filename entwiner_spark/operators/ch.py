@@ -30,13 +30,13 @@ CH literature uses, expressed as DataFrame fixpoints:
   standard "core-CH" construction — exact, because nothing inside
   the core was contracted, so no shortcut is missing).
 * **query** — bidirectional upward search: ONE state frame with a
-  ``side`` column (fwd rows expand over rank-increasing edges,
-  bwd rows walk rank-increasing edges backwards), ONE broadcast join
-  per round against a side-tagged expansion table, ONE fused
-  union+groupBy merge per round (the SSSP shape), and a probe that
-  stops both sides once no frontier f-value can undercut the best
-  meeting cost μ.  Below ``LOCAL_THRESHOLD`` search edges the query
-  runs as driver-local bidirectional Dijkstra (same results,
+  ``side`` key (fwd rows expand over rank-increasing edges, bwd rows
+  walk rank-increasing edges backwards) run by the shared SSSP round,
+  ``graph._relax_wavefront``: ONE frontier broadcast joined to a
+  side-tagged arc table per round, ONE fused union+groupBy merge, and
+  a probe that stops both sides once no frontier f-value can undercut
+  the best meeting cost μ.  Below ``LOCAL_THRESHOLD`` search edges the
+  query runs as driver-local bidirectional Dijkstra (same results,
   pytest-pinned parity).
 
 Shortcut unpacking records the bypassed node (``mid``) per shortcut
@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from entwiner_spark.operators.graph import (
+    _count_frontier,
     _dist_schema,
     _relax_wavefront,
     rebase_checkpoint,
@@ -132,6 +133,75 @@ def _pred_walk(pred: dict, node) -> list:
         out.append(cur)
         cur = pred.get(cur)
     return out
+
+
+def _meet(df: dict, db: dict):
+    """The node where forward distances ``df`` and backward distances
+    ``db`` meet at least cost (ties: the smallest id as a string), or
+    None when the searches never meet."""
+    return min(
+        df.keys() & db.keys(), key=lambda n: (df[n] + db[n], str(n)), default=None
+    )
+
+
+def _unpack(path: list, mids: dict) -> list:
+    """Expand every shortcut on ``path`` through ``mids``, ``{(u, v):
+    bypassed node, or None for an original edge}``.  Iterative (an
+    explicit stack): shortcut nesting depth is unbounded on degenerate
+    contraction orders (a path graph contracted sequentially nests
+    linearly), so recursion would hit Python's limit."""
+    out = [path[0]]
+    for a, b in zip(path, path[1:]):
+        stack = [(a, b)]
+        while stack:
+            u, v = stack.pop()
+            mid = mids[(u, v)]
+            if mid is None:
+                out.append(v)
+            else:
+                stack += [(mid, v), (u, mid)]
+    return out
+
+
+def _path_cost(base: DataFrame, pairs: list) -> float:
+    """Sum of the ``base`` ``(_u, _v, w)`` weights over the arcs
+    ``pairs``, read with one collect."""
+    if not pairs:
+        return 0.0
+    rows = base.filter(
+        F.col("_u").isin([p[0] for p in pairs])
+        & F.col("_v").isin([p[1] for p in pairs])
+    ).collect()
+    w = {(r["_u"], r["_v"]): r["w"] for r in rows}
+    return sum(w[p] for p in pairs)
+
+
+def _penalized(base: DataFrame, counts: dict, penalty: float) -> DataFrame:
+    """The penalty method's re-metric: ``base`` ``(_u, _v, w)`` with the
+    weight of every arc in ``counts`` (``{(u, v): n}``) multiplied by
+    ``penalty`` ``n`` times."""
+    idt = base.schema["_u"].dataType
+    pen = base.sparkSession.createDataFrame(
+        sorted(
+            ((u, v, c) for (u, v), c in counts.items()),
+            key=lambda t: (str(t[0]), str(t[1])),
+        ),
+        T.StructType(
+            [
+                T.StructField("_u", idt, False),
+                T.StructField("_v", idt, False),
+                T.StructField("_pc", T.IntegerType(), False),
+            ]
+        ),
+    )
+    return base.join(F.broadcast(pen), ["_u", "_v"], "left").select(
+        "_u",
+        "_v",
+        (
+            F.col("w")
+            * F.pow(F.lit(float(penalty)), F.coalesce(F.col("_pc"), F.lit(0)))
+        ).alias("w"),
+    )
 
 
 class ContractionHierarchy:
@@ -955,10 +1025,7 @@ class ContractionHierarchy:
             .groupBy("_u", "_v")
             .agg(F.min("w").alias("w"))
         )
-        local = strategy == "local" or (
-            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
-        )
-        if local:
+        if self._local(strategy):
             return self._customize_local(base)
         if self.rounds > 1024:
             # a LOCAL-built hierarchy assigns every node its own rank
@@ -1256,13 +1323,11 @@ class ContractionHierarchy:
         if penalty <= 1.0:
             raise ValueError("penalty must be > 1")
         base = self.orig_edges
-        idt = self.ranks.schema["_n"].dataType
         pen_counts: dict = {}
         cur = self
         out: list[tuple[list, float]] = []
         seen: set = set()
-        limit = max_iter or (4 * k)
-        for _ in range(limit):
+        for _ in range(max_iter or (4 * k)):
             r = cur.route(source, target, strategy=strategy)
             if r is None:
                 break
@@ -1270,50 +1335,25 @@ class ContractionHierarchy:
             pairs = list(zip(path, path[1:]))
             if tuple(path) not in seen:
                 seen.add(tuple(path))
-                wrows = base.filter(
-                    F.col("_u").isin([p[0] for p in pairs])
-                    & F.col("_v").isin([p[1] for p in pairs])
-                ).collect()
-                wmap = {(x["_u"], x["_v"]): x["w"] for x in wrows}
-                cost = 0.0
-                for p in pairs:
-                    cost += wmap[p]
-                out.append((list(path), cost))
+                out.append((list(path), _path_cost(base, pairs)))
                 if len(out) >= k:
                     break
             for p in pairs:
                 pen_counts[p] = pen_counts.get(p, 0) + 1
-            pen_df = self.spark.createDataFrame(
-                sorted(
-                    ((u, v, c) for (u, v), c in pen_counts.items()),
-                    key=lambda t: (str(t[0]), str(t[1])),
-                ),
-                T.StructType(
-                    [
-                        T.StructField("_u", idt, False),
-                        T.StructField("_v", idt, False),
-                        T.StructField("_pc", T.IntegerType(), False),
-                    ]
-                ),
+            cur = self.customize(
+                _penalized(base, pen_counts, penalty), strategy=strategy
             )
-            new_w = (
-                base.join(F.broadcast(pen_df), ["_u", "_v"], "left")
-                .select(
-                    "_u",
-                    "_v",
-                    (
-                        F.col("w")
-                        * F.pow(
-                            F.lit(float(penalty)),
-                            F.coalesce(F.col("_pc"), F.lit(0)),
-                        )
-                    ).alias("w"),
-                )
-            )
-            cur = self.customize(new_w, strategy=strategy)
         return out
 
     # ----------------------------------------------------------- query
+    def _local(self, strategy: str) -> bool:
+        """Whether a query with ``strategy`` runs on the driver twin:
+        forced ``local``, or ``auto`` below ``LOCAL_THRESHOLD`` search
+        edges."""
+        return strategy == "local" or (
+            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
+        )
+
     def _up_down(self) -> tuple[DataFrame, DataFrame]:
         core = F.lit(CORE_RANK)
         up = self.search.filter(
@@ -1338,10 +1378,7 @@ class ContractionHierarchy:
         node path and exact cost, or None if unreachable."""
         if source == target:
             return [source], 0.0
-        local = strategy == "local" or (
-            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
-        )
-        if local:
+        if self._local(strategy):
             return self._route_local(source, target)
         return self._route_pregel(source, target, max_iterations)
 
@@ -1376,22 +1413,15 @@ class ContractionHierarchy:
         ``_n``."""
         if not sources or not targets:
             raise ValueError("sources and targets must be non-empty")
-        local = strategy == "local" or (
-            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
-        )
-        if local:
+        if self._local(strategy):
             return self._distance_matrix_local(sources, targets)
-        init = [("f", s, s, 0.0) for s in dict.fromkeys(sources)] + [
-            ("b", t, t, 0.0) for t in dict.fromkeys(targets)
-        ]
-        dist, _st = self._bidirectional(
-            init,
+        dist, _row = self._cones(
+            sources,
+            targets,
+            "distance_matrix",
             batched=True,
-            pred=False,
-            probe=self._cones_exhausted,
-            probe_every=1,
             max_iterations=max_iterations,
-            what="distance_matrix",
+            check_every=1,
         )
         fwd = dist.filter(F.col("side") == "f").select(
             F.col("origin").alias("src"), "_n", F.col("dist").alias("_df")
@@ -1406,87 +1436,12 @@ class ContractionHierarchy:
         )
         return out
 
-    #: leveled down-sweep guard: one pass PER DISTINCT LEVEL is only a
-    #: win when the level count tracks the distributed build rounds —
-    #: a local-finish block (or a fully local build) assigns one rank
-    #: per node, inflating the level count far beyond the down-DAG
-    #: DEPTH that the probed fixpoint actually pays (measured on the
-    #: 64x64 XL grid, local_finish=512: 525 levels -> leveled 346 s vs
-    #: fixpoint 20.8 s at ~25 depth-bound rounds).  The sweep is
-    #: chosen per query from the REAL level count: leveled only when
-    #: len(levels) <= max(_LEVELED_MIN_LEVELS, 2 * build rounds).
-    _LEVELED_MIN_LEVELS = 64
-
-    def _down_levels(self, down: DataFrame) -> list:
-        """Distinct tail-levels of the down-DAG, descending (driver-
-        sized: one tiny distinct per one-to-all query)."""
-        return sorted(
-            (r["_ru"] for r in down.select("_ru").distinct().collect()),
-            reverse=True,
-        )
-
-    def _use_leveled(self, levels: list) -> bool:
-        return len(levels) <= max(
-            self._LEVELED_MIN_LEVELS, 2 * self.rounds
-        )
-
-    def _down_sweep_leveled(
-        self,
-        dist: DataFrame,
-        down: DataFrame,
-        key_cols: list,
-        stats=None,
-        levels: list | None = None,
-    ) -> DataFrame:
-        """PHAST down-sweep in EXACTLY one relaxation pass per
-        contraction level, top-down (the r14/r15 standing idea,
-        r15-verdict task #7): down edges bucket by their TAIL's build
-        level, and because same-level nodes are never adjacent (the
-        pregel build's independent-set invariant) descending levels
-        are a topological order of the down-DAG — when level r fires,
-        every tail at r is already final (the core is settled by the
-        upward fixpoint, whose edge set includes the core-internal
-        arcs).  Replaces fixpoint-until-quiet: no empty-frontier probe
-        job per round, and the round count is the hierarchy height by
-        construction instead of discovered dynamically."""
-        if levels is None:
-            levels = self._down_levels(down)
-        downk = down.select(
-            "_ru", F.col("_u").alias("_k"), F.col("_v").alias("_t"), "w"
-        ).persist()
-        try:
-            for lvl in levels:
-                adjk = downk.filter(F.col("_ru") == lvl).drop("_ru")
-                fr = dist.select(
-                    *key_cols,
-                    F.col("_n").alias("_k"),
-                    F.col("dist").alias("_fd"),
-                )
-                msgs = fr.join(adjk.hint("shuffle_hash"), "_k").select(
-                    *key_cols,
-                    F.col("_t").alias("_n"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                )
-                dist = (
-                    dist.unionByName(msgs)
-                    .groupBy(*key_cols, "_n")
-                    .agg(F.min("dist").alias("dist"))
-                    .localCheckpoint(eager=True)
-                )
-        finally:
-            downk.unpersist()
-        if stats is not None:
-            stats["down_rounds"] = len(levels)
-            stats["down_mode"] = "leveled"
-        return dist
-
     @_scaled_shuffle
     def sssp(
         self,
         source,
         strategy: str = "auto",
         max_iterations: int = 400,
-        stats: dict | None = None,
     ) -> DataFrame:
         """One-to-ALL distances over the hierarchy — PHAST (Delling et
         al. 2011) in DataFrame form: (1) upward search from the source
@@ -1498,25 +1453,15 @@ class ContractionHierarchy:
         down-DAG depth (~build rounds, plus core diameter if a core
         exists), NOT the graph diameter that plain pregel SSSP pays
         (the 64×64 grid: ~21-level hierarchy vs ~126-hop diameter).
-        r16: the down-sweep runs LEVEL-BUCKETED — exactly one
-        relaxation pass per contraction level, no per-round
-        convergence probe (:meth:`_down_sweep_leveled`) — but ONLY
-        when the real level count tracks the distributed build rounds
-        (:meth:`_use_leveled`); hierarchies whose local-finish block
-        inflated the level count far beyond the down-DAG depth keep
-        the probed fixpoint (measured: 525 levels → leveled 346 s vs
-        fixpoint 20.8 s on the XL grid).  Pass ``stats={}`` to
-        receive ``down_rounds`` / ``down_mode``.  Returns
+        Both phases are probed every round, so each stops at its own
+        depth (an earlier down-sweep with one pass per contraction
+        level, unprobed, ran about three times the jobs on a 6×6
+        grid, and 17× the wall on a 525-level hierarchy).  Returns
         ``(_n, dist)`` for every reachable node: the one-source case
         of :meth:`sssp_multi`."""
-        local = strategy == "local" or (
-            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
-        )
-        if local:
+        if self._local(strategy):
             return self._sssp_local(source)
-        return self._phast([source], max_iterations, stats, "sssp").select(
-            "_n", "dist"
-        )
+        return self._phast([source], max_iterations, "sssp").select("_n", "dist")
 
     @_scaled_shuffle
     def sssp_multi(
@@ -1524,7 +1469,6 @@ class ContractionHierarchy:
         sources: list,
         strategy: str = "auto",
         max_iterations: int = 400,
-        stats: dict | None = None,
     ) -> DataFrame:
         """Batched PHAST — one-to-all from EVERY source in one pair of
         fixpoints, state keyed ``(src, _n)`` so each round's
@@ -1538,11 +1482,8 @@ class ContractionHierarchy:
         if not sources:
             raise ValueError("sources must be non-empty")
         sources = list(dict.fromkeys(sources))
-        local = strategy == "local" or (
-            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
-        )
-        if not local:
-            return self._phast(sources, max_iterations, stats, "sssp_multi")
+        if not self._local(strategy):
+            return self._phast(sources, max_iterations, "sssp_multi")
         rows = []
         for s in sources:
             for r in self._sssp_local(s).collect():
@@ -1552,53 +1493,25 @@ class ContractionHierarchy:
             _dist_schema(self.ranks.schema["_n"].dataType, keys=["src"]),
         )
 
-    def _phast(self, sources, max_iterations, stats, caller) -> DataFrame:
+    def _phast(self, sources, max_iterations, caller) -> DataFrame:
         """Distributed PHAST from ``sources``: ``(src, _n, dist)``.
-        The upward search and the fixpoint down-sweep are wavefront
-        searches keyed by ``src`` (:func:`_relax_wavefront`), probed
-        every round; ``caller`` names the method in the iteration-cap
-        error."""
-        up, down = self._up_down()
-        # down edges traversed FORWARD (unlike the bidirectional
-        # route's backward keying): key by the tail
-        up_adj, down_adj = (
-            e.select("_u", "_v", F.col("w").alias("_w")).persist()
-            for e in (up, down)
-        )
-        seed = self.spark.createDataFrame(
+        The upward search and the down-sweep (down arcs traversed
+        FORWARD, unlike the bidirectional route's backward side) are
+        wavefront searches keyed by ``src``, probed every round;
+        ``caller`` names the method in the iteration-cap error."""
+        dist = self.spark.createDataFrame(
             [(s, s, 0.0) for s in sources],
             _dist_schema(self.ranks.schema["_n"].dataType, keys=["src"]),
         )
-
-        def relax(dist, adj, phase):
-            dist, converged = _relax_wavefront(
-                adj,
+        for phase, arcs in zip(("upward", "down-sweep"), self._up_down()):
+            dist, _row = self._search(
+                arcs.select("_u", "_v", F.col("w").alias("_w")),
                 dist,
+                f"{caller} {phase} phase hit the iteration cap",
                 keys=["src"],
                 max_iterations=max_iterations,
                 check_every=1,
             )
-            if not converged:
-                raise RuntimeError(
-                    f"{caller} {phase} phase hit the iteration cap; "
-                    "raise max_iterations"
-                )
-            return dist
-
-        try:
-            dist = relax(seed, up_adj, "upward")
-            levels = self._down_levels(down)
-            if self._use_leveled(levels):
-                dist = self._down_sweep_leveled(
-                    dist, down, ["src"], stats, levels=levels
-                )
-            else:
-                dist = relax(dist, down_adj, "down-sweep")
-                if stats is not None:
-                    stats["down_mode"] = "fixpoint"
-        finally:
-            up_adj.unpersist()
-            down_adj.unpersist()
         return dist
 
     def _sssp_local(self, source) -> DataFrame:
@@ -1606,10 +1519,7 @@ class ContractionHierarchy:
         search edge is a real path of its weight (original or
         shortcut), so search-graph distances equal original-graph
         distances."""
-        _up, _down, edges = self._collect_local()
-        g = nx.DiGraph()
-        g.add_weighted_edges_from((u, v, w) for (u, v), (w, _mid) in edges.items())
-        _pred, d = _nx_dijkstra(g, source)
+        _pred, d = _nx_dijkstra(self._collect_local()[2], source)
         return self.spark.createDataFrame(
             sorted(d.items(), key=lambda kv: str(kv[0])),
             _dist_schema(self.ranks.schema["_n"].dataType),
@@ -1638,9 +1548,6 @@ class ContractionHierarchy:
         driver-side assembly is not a scale compromise."""
         if not sources or not targets:
             raise ValueError("sources and targets must be non-empty")
-        local = strategy == "local" or (
-            strategy == "auto" and self.n_search_edges < LOCAL_THRESHOLD
-        )
         idt = self.ranks.schema["_n"].dataType
         out_schema = T.StructType(
             [
@@ -1650,7 +1557,7 @@ class ContractionHierarchy:
                 T.StructField("path", T.ArrayType(idt), False),
             ]
         )
-        if local:
+        if self._local(strategy):
             rows = []
             for s in dict.fromkeys(sources):
                 for t in dict.fromkeys(targets):
@@ -1665,17 +1572,17 @@ class ContractionHierarchy:
                 sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
                 out_schema,
             )
-        init = [
-            ("f", s, s, 0.0, None) for s in dict.fromkeys(sources)
-        ] + [("b", t, t, 0.0, None) for t in dict.fromkeys(targets)]
-        dist, st = self._bidirectional(
-            init,
+        dist, st = self._cones(
+            sources,
+            targets,
+            "route_matrix",
             batched=True,
-            pred=True,
-            probe=self._cones_exhausted,
-            probe_every=1,
+            carry={"pred": F.col("_u")},
+            probe=lambda merged: _count_frontier(
+                merged, F.count(F.lit(1)).alias("n_settled")
+            ),
             max_iterations=max_iterations,
-            what="route_matrix",
+            check_every=1,
         )
         if st["n_settled"] > self._TRACE_COLLECT_CAP:
             raise RuntimeError(
@@ -1690,61 +1597,34 @@ class ContractionHierarchy:
             side_map = fwd if r["side"] == "f" else bwd
             d, p = side_map.setdefault(r["origin"], ({}, {}))
             d[r["_n"]], p[r["_n"]] = r["dist"], r["pred"]
-        pairs_out = []
-        all_pairs: set = set()
+        walks = []
         for s in dict.fromkeys(sources):
             df, pf = fwd.get(s, ({}, {}))
             for t in dict.fromkeys(targets):
                 db, pb = bwd.get(t, ({}, {}))
-                meet, mu = None, None
-                for n in df.keys() & db.keys():
-                    c = df[n] + db[n]
-                    if mu is None or c < mu or (
-                        c == mu and str(n) < str(meet)
-                    ):
-                        meet, mu = n, c
-                if meet is None:
-                    continue
-                walk = _pred_walk(pf, meet)[::-1] + _pred_walk(pb, meet)[1:]
-                pairs_out.append((s, t, mu, walk))
-                all_pairs.update(zip(walk, walk[1:]))
-        resolved = self._resolve_mids(all_pairs) if all_pairs else {}
-
-        def expand_all(walk):
-            out = [walk[0]]
-            for a, b in zip(walk, walk[1:]):
-                stack = [(a, b)]
-                while stack:
-                    u, v = stack.pop()
-                    mid = resolved[(u, v)]
-                    if mid is None:
-                        out.append(v)
-                    else:
-                        stack.append((mid, v))
-                        stack.append((u, mid))
-            return out
-
-        rows = [
-            (s, t, mu, expand_all(walk) if len(walk) > 1 else walk)
-            for s, t, mu, walk in pairs_out
-        ]
+                meet = _meet(df, db)
+                if meet is not None:
+                    walk = _pred_walk(pf, meet)[::-1] + _pred_walk(pb, meet)[1:]
+                    walks.append((s, t, df[meet] + db[meet], walk))
+        mids = self._resolve_mids(
+            {p for *_st, walk in walks for p in zip(walk, walk[1:])}
+        )
+        rows = [(s, t, mu, _unpack(walk, mids)) for s, t, mu, walk in walks]
         return self.spark.createDataFrame(
             sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
             out_schema,
         )
 
     def _distance_matrix_local(self, sources, targets) -> DataFrame:
-        up, down, _edges = self._collect_local()
+        up, down, _arcs, _mids = self._collect_local()
         fwd = {s: _nx_dijkstra(up, s)[1] for s in dict.fromkeys(sources)}
         bwd = {t: _nx_dijkstra(down, t)[1] for t in dict.fromkeys(targets)}
         rows = []
         for s, df in fwd.items():
             for t, db in bwd.items():
-                meet = df.keys() & db.keys()
-                if meet:
-                    rows.append(
-                        (s, t, min(df[n] + db[n] for n in meet))
-                    )
+                meet = _meet(df, db)
+                if meet is not None:
+                    rows.append((s, t, df[meet] + db[meet]))
         idt = self.ranks.schema["_n"].dataType
         schema = T.StructType(
             [
@@ -1760,184 +1640,103 @@ class ContractionHierarchy:
     # ------------------------------------------------------ local twin
     def _collect_local(self):
         """The search graph on the driver, collected once: networkx
-        DiGraphs of the upward arcs and of the downward arcs REVERSED
-        (the backward search's direction), and ``{(u, v): (w, mid)}``."""
+        DiGraphs of the upward arcs, of the downward arcs REVERSED (the
+        backward search's direction) and of every arc, and the
+        ``{(u, v): mid}`` map the shortcut unpacking reads."""
         if self._local_cache is None:
-            up, down, edges = nx.DiGraph(), nx.DiGraph(), {}
+            up, down, arcs, mids = nx.DiGraph(), nx.DiGraph(), nx.DiGraph(), {}
             for r in self.search.collect():
                 u, v, w, mid = r["_u"], r["_v"], r["w"], r["mid"]
-                edges[(u, v)] = (w, mid)
+                arcs.add_edge(u, v, weight=w)
+                mids[(u, v)] = mid
                 ru, rv = r["_ru"], r["_rv"]
                 both_core = ru == CORE_RANK and rv == CORE_RANK
                 if ru < rv or both_core:
                     up.add_edge(u, v, weight=w)
                 if ru > rv or both_core:
                     down.add_edge(v, u, weight=w)
-            self._local_cache = (up, down, edges)
+            self._local_cache = (up, down, arcs, mids)
         return self._local_cache
 
     def _route_local(self, source, target):
-        up, down, edges = self._collect_local()
+        up, down, _arcs, mids = self._collect_local()
         pf, df = _nx_dijkstra(up, source)
         pb, db = _nx_dijkstra(down, target)
-        meet, mu = None, None
-        for n in df.keys() & db.keys():
-            c = df[n] + db[n]
-            if mu is None or c < mu or (c == mu and str(n) < str(meet)):
-                meet, mu = n, c
+        meet = _meet(df, db)
         if meet is None:
             return None
-        fwd = []
-        cur = meet
-        while cur is not None:
-            fwd.append(cur)
-            cur = pf[cur]
-        fwd.reverse()
-        cur = pb[meet]
-        while cur is not None:
-            fwd.append(cur)
-            cur = pb[cur]
-        return self._unpack_local(fwd, edges), mu
-
-    def _unpack_local(self, path, edges):
-        out = [path[0]]
-        for a, b in zip(path, path[1:]):
-            out.extend(self._expand_pair_local(a, b, edges))
-        return out
-
-    def _expand_pair_local(self, a, b, edges):
-        # iterative (explicit stack): shortcut nesting depth is
-        # unbounded on degenerate contraction orders (a path graph
-        # contracted sequentially nests linearly), so recursion would
-        # hit Python's limit around depth ~1000
-        out = []
-        stack = [(a, b)]
-        while stack:
-            u, v = stack.pop()
-            _w, mid = edges[(u, v)]
-            if mid is None:
-                out.append(v)
-            else:
-                stack.append((mid, v))
-                stack.append((u, mid))
-        return out
+        path = _pred_walk(pf, meet)[::-1] + _pred_walk(pb, meet)[1:]
+        return _unpack(path, mids), df[meet] + db[meet]
 
     # -------------------------------------------------- distributed
-    def _expansion(self) -> DataFrame:
-        """Side-tagged expansion table ``(side, _k, _t, w)`` shared by
-        the bidirectional searches: forward rows are ``up`` arcs keyed
-        by their tail, backward rows are ``down`` arcs keyed by their
-        head.  A round joins the broadcast frontier to it ONCE on
-        ``(side, _k)`` — per-side ``filter`` + join pairs get the side
+    def _search(self, arcs, seed, what, **kw):
+        """One :func:`_relax_wavefront` search (``kw``: its options)
+        from ``seed`` over ``arcs`` ``(..., _u, _v, _w)``, persisted for
+        the search: ``(dist, the probe row that ended it)``.  Raises
+        ``what`` at the iteration cap."""
+        arcs = arcs.persist()
+        try:
+            dist, row = _relax_wavefront(arcs, seed, **kw)
+        finally:
+            arcs.unpersist()
+        if row is None:
+            raise RuntimeError(f"{what}; raise max_iterations")
+        return dist, row
+
+    def _cones(self, sources, targets, what, *, batched, carry=None, **kw):
+        """Both upward searches as ONE wavefront state ``(side,
+        [origin,] _n, dist[, pred])``: forward rows (side ``f``) from
+        ``sources`` over the up arcs, backward rows (``b``) from
+        ``targets`` over the down arcs reversed.  ``batched`` adds the
+        ``origin`` key (the many-to-many searches).  The arcs are ONE
+        side-tagged table ``(side, _u, _v, _w)`` that the frontier joins
+        on ``(side, _u)``: per-side ``filter`` + join pairs get the side
         filter pushed under the broadcast hint, so the frontier would be
         broadcast once per side."""
         up, down = self._up_down()
-        return (
-            up.select(
-                F.lit("f").alias("side"),
-                F.col("_u").alias("_k"),
-                F.col("_v").alias("_t"),
-                "w",
+        arcs = up.select(
+            F.lit("f").alias("side"), "_u", "_v", F.col("w").alias("_w")
+        ).unionByName(
+            down.select(
+                F.lit("b").alias("side"),
+                F.col("_v").alias("_u"),
+                F.col("_u").alias("_v"),
+                F.col("w").alias("_w"),
             )
-            .unionByName(
-                down.select(
-                    F.lit("b").alias("side"),
-                    F.col("_v").alias("_k"),
-                    F.col("_u").alias("_t"),
-                    "w",
-                )
-            )
-            .persist()
         )
-
-    def _bidirectional(
-        self, init, batched, pred, probe, probe_every, max_iterations, what
-    ):
-        """Run both upward searches as ONE state frame ``(side,
-        [origin,] _n, dist[, pred])`` until ``probe`` reports
-        convergence.  ``batched`` adds the ``origin`` key (the
-        many-to-many searches), ``pred`` carries the predecessor
-        through the merge.  Each round is one broadcast join against
-        :meth:`_expansion` and one fused union+groupBy merge.  Every
-        ``probe_every``-th round checkpoints LAZILY and ``probe(merged)``
-        runs on it: its aggregate scans every partition, so its one job
-        both materializes the round and answers the probe (other rounds
-        checkpoint eagerly).  ``probe`` returns None to continue, or a
-        result row, returned with the settled state."""
-        idt = self.ranks.schema["_n"].dataType
-        keys = ["side"] + (["origin"] if batched else [])
-        vals = ["dist"] + (["pred"] if pred else [])
-        schema = T.StructType(
-            [T.StructField("side", T.StringType(), False)]
-            + ([T.StructField("origin", idt, False)] if batched else [])
-            + [
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-            + ([T.StructField("pred", idt, True)] if pred else [])
+        keys = ["side", "origin"] if batched else ["side"]
+        carry = carry or {}
+        seed = self.spark.createDataFrame(
+            [
+                (side, *([n] if batched else []), n, 0.0, *[None] * len(carry))
+                for side, ns in (("f", sources), ("b", targets))
+                for n in dict.fromkeys(ns)
+            ],
+            T.StructType(
+                [T.StructField("side", T.StringType(), False)]
+                + _dist_schema(
+                    self.ranks.schema["_n"].dataType, keys[1:], carry
+                ).fields
+            ),
         )
-        expk = self._expansion()
-        try:
-            dist = self.spark.createDataFrame(init, schema)
-            frontier = dist
-            for it in range(max_iterations):
-                probed = (it + 1) % probe_every == 0 or it == max_iterations - 1
-                fr = frontier.select(
-                    *keys, F.col("_n").alias("_k"), F.col("dist").alias("_fd")
-                ).hint("broadcast")
-                msgs = fr.join(expk, ["side", "_k"]).select(
-                    *keys,
-                    F.col("_t").alias("_n"),
-                    (F.col("_fd") + F.col("w")).alias("dist"),
-                    *([F.col("_k").alias("pred")] if pred else []),
-                )
-                merged = (
-                    dist.withColumn("_new", F.lit(False))
-                    .unionByName(msgs.withColumn("_new", F.lit(True)))
-                    .groupBy(*keys, "_n")
-                    .agg(F.min(F.struct("dist", "_new", *vals[1:])).alias("b"))
-                    .select(
-                        *keys,
-                        "_n",
-                        *(F.col(f"b.{c}").alias(c) for c in vals),
-                        F.col("b._new").alias("_imp"),
-                    )
-                    .localCheckpoint(eager=not probed)
-                )
-                dist = merged.drop("_imp")
-                frontier = merged.filter(F.col("_imp")).select(
-                    *keys, "_n", "dist"
-                )
-                if probed:
-                    st = probe(merged)
-                    if st is not None:
-                        return dist, st
-        finally:
-            expk.unpersist()
-        raise RuntimeError(
-            f"{what} hit the iteration cap without converging; "
-            "raise max_iterations"
+        return self._search(
+            arcs,
+            seed,
+            f"{what} hit the iteration cap without converging",
+            keys=keys,
+            carry=carry,
+            **kw,
         )
-
-    @staticmethod
-    def _cones_exhausted(merged):
-        """Batched-search probe: done once no row improved; also
-        reports the settled row count for the driver cap."""
-        st = merged.agg(
-            F.count(F.when(F.col("_imp"), 1)).alias("n_front"),
-            F.count(F.lit(1)).alias("n_settled"),
-        ).collect()[0]
-        return st if st["n_front"] == 0 else None
 
     @staticmethod
     def _route_probe(merged):
-        """Route probe: stop once the frontier is empty or no frontier
-        f-value can undercut the best meeting cost μ.  The same job
-        returns the meeting node (min cost, then id as a string — the
-        deterministic tie-break) and the settled row count, so the
-        epilogue needs no further query for either."""
+        """Route probe: one job returning the frontier size ``_front``,
+        the least frontier distance ``f_min``, the meeting node (min
+        cost, then id as a string — the deterministic tie-break) and the
+        settled row count, so the epilogue needs no further query for
+        either."""
         cost = F.col("_df") + F.col("_db")
-        st = (
+        return (
             merged.groupBy("_n")
             .agg(
                 F.min(F.when(F.col("side") == "f", F.col("dist"))).alias("_df"),
@@ -1957,45 +1756,42 @@ class ContractionHierarchy:
                         ),
                     )
                 ).alias("meet"),
-                F.sum("_nf").alias("n_front"),
+                F.sum("_nf").alias("_front"),
                 F.min("_fmin").alias("f_min"),
                 F.sum("_rows").alias("n_settled"),
             )
             .collect()[0]
         )
-        meet = st["meet"]
-        if st["n_front"] == 0 or (
-            meet is not None
-            and st["f_min"] is not None
-            and st["f_min"] >= meet["mu"]
-        ):
-            return st
-        return None
 
     def _route_pregel(self, source, target, max_iterations):
-        dist, st = self._bidirectional(
-            [("f", source, 0.0, None), ("b", target, 0.0, None)],
+        # stop once no frontier f-value can undercut the best meeting
+        # cost μ (an empty frontier stops the search on its own)
+        dist, st = self._cones(
+            [source],
+            [target],
+            "CH route",
             batched=False,
-            pred=True,
+            carry={"pred": F.col("_u")},
             probe=self._route_probe,
-            probe_every=2,
+            on_probe=lambda st: (
+                st["meet"] is not None and st["f_min"] >= st["meet"]["mu"],
+                None,
+            ),
             max_iterations=max_iterations,
-            what="CH route",
+            check_every=2,
         )
         if st["meet"] is None:
             return None
-        mu, meet = st["meet"]["mu"], st["meet"]["_n"]
-        if st["n_settled"] <= self._TRACE_COLLECT_CAP:
+        mu, meet, n = st["meet"]["mu"], st["meet"]["_n"], st["n_settled"]
+        if n <= self._TRACE_COLLECT_CAP:
             preds: dict = {"f": {}, "b": {}}
             for r in dist.select("side", "_n", "pred").collect():
                 preds[r["side"]][r["_n"]] = r["pred"]
-            fwd_nodes = _pred_walk(preds["f"], meet)
-            bwd_nodes = _pred_walk(preds["b"], meet)
+            fwd, bwd = (_pred_walk(preds[side], meet) for side in "fb")
         else:
-            fwd_nodes = self._trace(dist, "f", meet, st["n_settled"])
-            bwd_nodes = self._trace(dist, "b", meet, st["n_settled"])
-        path = fwd_nodes[::-1] + bwd_nodes[1:]
-        return self._unpack_distributed(path), mu
+            fwd, bwd = (self._trace(dist, side, meet, n) for side in "fb")
+        path = fwd[::-1] + bwd[1:]
+        return _unpack(path, self._resolve_mids(set(zip(path, path[1:])))), mu
 
     # settled row count up to which a route's epilogue collects the
     # whole state; above it the pred walk falls back to filtered
@@ -2036,34 +1832,6 @@ class ContractionHierarchy:
             f"_trace: pred walk exceeded the settled row count ({limit}) "
             "without reaching the origin"
         )
-
-    def _unpack_distributed(self, path):
-        """Expand shortcut mids level-by-level: each level filters the
-        search table to the currently-needed (u, v) pairs (route-sized
-        isin lists) and splits any pair carrying a mid."""
-        pairs = list(zip(path, path[1:]))
-        if not pairs:
-            return list(path)
-        resolved = self._resolve_mids(set(pairs))
-
-        def expand(a, b):
-            # iterative: nesting depth can exceed the recursion limit
-            seq = []
-            stack = [(a, b)]
-            while stack:
-                u, v = stack.pop()
-                mid = resolved[(u, v)]
-                if mid is None:
-                    seq.append(v)
-                else:
-                    stack.append((mid, v))
-                    stack.append((u, mid))
-            return seq
-
-        out = [path[0]]
-        for a, b in pairs:
-            out.extend(expand(a, b))
-        return out
 
     def _resolve_mids(self, frontier: set) -> dict:
         """Shared shortcut resolver: map every needed (u, v) search

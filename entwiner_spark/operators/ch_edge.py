@@ -41,7 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from entwiner_spark.operators.ch import ContractionHierarchy
+from entwiner_spark.operators.ch import (
+    ContractionHierarchy,
+    _path_cost,
+    _penalized,
+)
 
 
 class EdgeBasedCH:
@@ -590,7 +594,6 @@ class EdgeBasedCH:
             return []
         base_minor = self.ch.orig_edges
         w0_orig = dict(srcs)
-        idt = self.ch.ranks.schema["_n"].dataType
         pen_arcs: dict = {}
         pen_first: dict = {}
         cur = self.ch
@@ -617,51 +620,18 @@ class EdgeBasedCH:
             node_path = self._decode(mpath)
             if tuple(node_path) not in seen:
                 seen.add(tuple(node_path))
-                pairs = list(zip(mpath, mpath[1:]))
-                if pairs:
-                    wrows = base_minor.filter(
-                        F.col("_u").isin([p[0] for p in pairs])
-                        & F.col("_v").isin([p[1] for p in pairs])
-                    ).collect()
-                    warc = {(x["_u"], x["_v"]): x["w"] for x in wrows}
-                    cost = w0_orig[mpath[0]] + sum(
-                        warc[p] for p in pairs
-                    )
-                else:
-                    cost = w0_orig[mpath[0]]
+                cost = w0_orig[mpath[0]] + _path_cost(
+                    base_minor, list(zip(mpath, mpath[1:]))
+                )
                 out.append((node_path, cost))
                 if len(out) >= k:
                     break
             pen_first[mpath[0]] = pen_first.get(mpath[0], 0) + 1
             for p in zip(mpath, mpath[1:]):
                 pen_arcs[p] = pen_arcs.get(p, 0) + 1
-            pen_df = self.spark.createDataFrame(
-                sorted(
-                    ((u, v, c) for (u, v), c in pen_arcs.items()),
-                    key=lambda t: (str(t[0]), str(t[1])),
-                ),
-                T.StructType(
-                    [
-                        T.StructField("_u", idt, False),
-                        T.StructField("_v", idt, False),
-                        T.StructField("_pc", T.IntegerType(), False),
-                    ]
-                ),
+            cur = self.ch.customize(
+                _penalized(base_minor, pen_arcs, penalty), strategy=strategy
             )
-            new_w = base_minor.join(
-                F.broadcast(pen_df), ["_u", "_v"], "left"
-            ).select(
-                "_u",
-                "_v",
-                (
-                    F.col("w")
-                    * F.pow(
-                        F.lit(float(penalty)),
-                        F.coalesce(F.col("_pc"), F.lit(0)),
-                    )
-                ).alias("w"),
-            )
-            cur = self.ch.customize(new_w, strategy=strategy)
         return out
 
     def time_profiles(

@@ -14,11 +14,11 @@ Scale notes:
 - lineage is truncated with ``localCheckpoint`` every few iterations
   (iterative-plan blowup is the classic Spark failure mode here);
 - the distributed Bellman-Ford searches (SSSP lengths, point-to-point
-  and A* routes, the CH PHAST upward and fixpoint down sweeps) run
-  their rounds in one helper, ``_relax_wavefront``: one expand join
-  plus one merge shuffle per round, and a convergence probe (one
-  aggregate counting the improved vertices) every ``check_every``
-  rounds, not every round.
+  and A* routes, the CH PHAST sweeps and the CH bidirectional
+  queries) run their rounds in one helper, ``_relax_wavefront``: one
+  expand join plus one merge shuffle per round, and a convergence
+  probe (one aggregate job, by default counting the improved
+  vertices) every ``check_every`` rounds, not every round.
 
 Known reference quirks NOT replicated (SURVEY.md §7): swapped
 successor/predecessor wiring in OuterAdjlistView defaults and
@@ -36,7 +36,7 @@ import time
 import networkx as nx
 from networkx.utils import UnionFind
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -225,9 +225,9 @@ def _relax_wavefront(
     max_iterations: int,
     check_every: int,
     stats: dict | None = None,
-    probe_aggs=(),
+    probe=None,
     on_probe=None,
-) -> tuple[DataFrame, bool]:
+) -> tuple[DataFrame, Row | None]:
     """Bellman-Ford wavefront rounds, shared by the distributed SSSP
     searches: each round is ONE expand join plus ONE merge shuffle.
 
@@ -241,23 +241,31 @@ def _relax_wavefront(
     each from its expand row (frontier ``_u`` and ``_fd``, arc ``_v``
     and ``_w``), and the merge keeps the values of the winning row.
 
+    The frontier joins ``adj`` on ``_u`` plus every key column that
+    ``adj`` also carries (a side-tagged arc table keyed ``(side, _u)``
+    expands each side of a bidirectional search over its own arcs).
+
     Convergence is probed every ``check_every`` rounds (and on the
     last): between probes the rounds stay lazy, so a D-hop search
     costs ~D/check_every probe jobs; an empty frontier only produces
-    empty frontiers, so the extra rounds are no-ops.  The probe is one
-    aggregate over the merged state (``_imp`` marks the improved rows):
-    the frontier size, plus ``probe_aggs``.  ``on_probe(row)`` returns
-    ``(stop, prune)``: ``stop`` ends the search as converged, and
-    ``prune`` (a Column or None) filters every later frontier before
-    its expand.  ``stats["rounds"]`` gets ``{"it", "frontier", "sec"}``
-    per probe (seconds since the previous probe).
+    empty frontiers, so the extra rounds are no-ops.  ``probe(merged)``
+    runs one aggregate job over the merged state (``_imp`` marks the
+    improved rows) and returns its row, whose ``_front`` is the
+    frontier size (default :func:`_count_frontier`).  ``on_probe(row)``
+    returns ``(stop, prune)``: ``stop`` ends the search as converged,
+    and ``prune`` (a Column or None) filters every later frontier
+    before its expand.  ``stats["rounds"]`` gets ``{"it", "frontier",
+    "sec"}`` per probe (seconds since the previous probe).
 
-    Returns ``(dist, converged)``; ``converged`` is False when
-    ``max_iterations`` rounds ran without an empty frontier or a stop.
+    Returns ``(dist, row)``: ``row`` is the probe row that ended the
+    search, None when ``max_iterations`` rounds ran without an empty
+    frontier or a stop.
     """
     keys = list(keys)
     carry = carry or {}
+    probe = probe or _count_frontier
     state_cols = [*keys, "_n", "dist", *carry]
+    on = ["_u", *(k for k in keys if k in adj.columns)]
     # Join-strategy hint, from the last probed frontier size.  The
     # checkpointed frontier has UNKNOWN stats, so the static planner
     # otherwise broadcasts the cached ADJACENCY — the whole edge table
@@ -274,7 +282,7 @@ def _relax_wavefront(
         stats["rounds"] = []
         t_probe = time.time()
     for it in range(max_iterations):
-        probe = (it + 1) % check_every == 0 or it == max_iterations - 1
+        probed = (it + 1) % check_every == 0 or it == max_iterations - 1
         # the round body builds as FEW DataFrames as possible: at small
         # frontiers the loop is driver-bound, and each one pays a py4j
         # hop plus an analysis pass (r16: fusing the renames into the
@@ -283,7 +291,7 @@ def _relax_wavefront(
         msgs = (
             frontier.select(*keys, F.col("_n").alias("_u"), F.col("dist").alias("_fd"))
             .hint("broadcast" if frontier_small else "shuffle_hash")
-            .join(adj, "_u")
+            .join(adj, on)
             .select(
                 *keys,
                 F.col("_v").alias("_n"),
@@ -313,18 +321,15 @@ def _relax_wavefront(
                 *[F.col(f"_b.{c}").alias(c) for c in ["dist", *carry]],
                 F.col("_b._new").alias("_imp"),
             )
-            .localCheckpoint(eager=not probe)
+            .localCheckpoint(eager=not probed)
         )
         dist = merged.select(*state_cols)
         frontier = merged.filter(F.col("_imp"))
         if prune is not None:
             frontier = frontier.filter(prune)
-        if not probe:
+        if not probed:
             continue
-        row = merged.agg(
-            F.coalesce(F.sum(F.when(F.col("_imp"), 1)), F.lit(0)).alias("_front"),
-            *probe_aggs,
-        ).collect()[0]
+        row = probe(merged)
         n_front = row["_front"]
         if stats is not None:
             now = time.time()
@@ -334,12 +339,20 @@ def _relax_wavefront(
             t_probe = now
         frontier_small = n_front < broadcast_frontier_rows
         if n_front == 0:
-            return dist, True
+            return dist, row
         if on_probe is not None:
             stop, prune = on_probe(row)
             if stop:
-                return dist, True
-    return dist, False
+                return dist, row
+    return dist, None
+
+
+def _count_frontier(merged: DataFrame, *aggs):
+    """The default wavefront probe: one aggregate of the improved-row
+    count ``_front`` plus ``aggs``, collected."""
+    return merged.agg(
+        F.count(F.when(F.col("_imp"), 1)).alias("_front"), *aggs
+    ).collect()[0]
 
 
 class SparkGraph:
@@ -1218,14 +1231,14 @@ class SparkGraph:
         self, source, adj, max_iterations=None, check_every=3, stats=None
     ) -> DataFrame:
         """Distributed SSSP over the persisted ``adj``: ``(_n, dist)``."""
-        dist, converged = _relax_wavefront(
+        dist, last = _relax_wavefront(
             adj,
             self.spark.createDataFrame([(source, 0.0)], _dist_schema(self._id_type())),
             max_iterations=200 if max_iterations is None else max_iterations,
             check_every=check_every,
             stats=stats,
         )
-        if not converged and max_iterations is None:
+        if last is None and max_iterations is None:
             raise RuntimeError(
                 "SSSP hit the 200-iteration safety cap without "
                 "converging; pass max_iterations explicitly for a "
@@ -1378,21 +1391,22 @@ class SparkGraph:
 
         adj = self._sssp_adj(weight)
         try:
-            dist, converged = _relax_wavefront(
+            dist, last = _relax_wavefront(
                 adj,
                 self.spark.createDataFrame([(source, 0.0, None)], schema),
                 carry={"pred": F.col("_u")},
                 max_iterations=200 if max_iterations is None else max_iterations,
                 check_every=3,
-                probe_aggs=[
+                probe=lambda merged: _count_frontier(
+                    merged,
                     F.min(F.when(F.col("_imp"), fkey)).alias("f_min"),
                     F.min(F.when(F.col("_n") == target, F.col("dist"))).alias("t_dist"),
-                ],
+                ),
                 on_probe=goal,
             )
         finally:
             adj.unpersist()
-        if not converged and max_iterations is None:
+        if last is None and max_iterations is None:
             # mirror shortest_path_lengths: a silently truncated path
             # is worse than an error (ADVICE.md r1)
             raise RuntimeError(

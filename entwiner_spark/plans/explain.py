@@ -65,21 +65,12 @@ def count_exchanges(df: DataFrame) -> int:
 
 def optimized_plan(df: DataFrame) -> str:
     """The Catalyst optimized logical plan as a string, untruncated
-    enough for expression-level auditing."""
-    spark = df.sparkSession
-    key = "spark.sql.debug.maxToStringFields"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "100000")
-    try:
-        return df._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        # an unset key must go back to unset, not stay at 100000 for
-        # the session's lifetime (every later plan/error rendering
-        # would lose truncation protection)
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
+    enough for expression-level auditing.  The field cap goes to
+    ``treeString`` as an argument (verbose, no suffix, 100000 fields,
+    no operator ids, no output columns), so the session's
+    ``spark.sql.debug.maxToStringFields`` is never touched."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.treeString(True, False, 100000, False, False)
 
 
 # Expensive per-row producers that must never be re-evaluated inside a

@@ -201,40 +201,31 @@ def test_ch_settled_cap_fallback(grid6, monkeypatch):
         ch.route_matrix([src], [dst], strategy="pregel")
 
 
-def _last_job_id(spark) -> int:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs."""
-    before = _last_job_id(spark)
-    fn()
-    return _last_job_id(spark) - before
-
-
-def test_ch_query_job_counts(spark):
-    """Distributed query job budgets on one fixed 4x4 grid: a round is
-    one frontier broadcast plus one merge, a route's meeting node and
-    settled count come from its probe, and its pred walk is one
-    collect.  A second broadcast per round or an extra epilogue query
-    fails here."""
+def test_ch_query_job_counts(spark, spark_cost):
+    """Distributed query (jobs, stages) budgets on one fixed 4x4 grid,
+    as they ran before the bidirectional searches moved onto the
+    shared wavefront round: a round is one frontier broadcast plus one
+    merge, a route's meeting node and settled count come from its
+    probe, and its pred walk is one collect.  A second broadcast per
+    round or an extra epilogue query fails here."""
     g = _grid_graph(spark, 4)
     ch = ContractionHierarchy.build(
         g, weight="w", strategy="pregel", local_finish=4, customizable=True
     )
     srcs, tgts = ["0:0", "3:0"], ["3:3", "0:3"]
-    assert _jobs(spark, lambda: ch.route("0:0", "3:3", strategy="pregel")) == 18
-    assert _jobs(
-        spark, lambda: ch.route_matrix(srcs, tgts, strategy="pregel").collect()
-    ) == 26
-    assert _jobs(
-        spark,
-        lambda: ch.distance_matrix(srcs, tgts, strategy="pregel").collect(),
-    ) == 26
+    assert spark_cost(
+        lambda: ch.route("0:0", "3:3", strategy="pregel")
+    ) == (18, 18)
+    assert spark_cost(
+        lambda: ch.route_matrix(srcs, tgts, strategy="pregel").collect()
+    ) == (26, 26)
+    assert spark_cost(
+        lambda: ch.distance_matrix(srcs, tgts, strategy="pregel").collect()
+    ) == (26, 26)
     new = g.edges.select("_u", "_v", "w")
-    assert _jobs(spark, lambda: ch.customize(new, strategy="pregel")) == 35
+    assert spark_cost(
+        lambda: ch.customize(new, strategy="pregel")
+    ) == (35, 35)
 
 
 def test_ch_core_cutoff_stays_exact(spark, grid6):
@@ -565,52 +556,16 @@ def test_ch_staleness_guard(spark, tmp_path, grid6):
         ch2.check_fresh(g, "w")
 
 
-def test_phast_leveled_down_sweep_parity_and_rounds(spark):
-    """r15-verdict task #7: the level-bucketed down-sweep runs EXACTLY
-    one pass per contraction level present in the down-DAG (measured
-    via stats) and equals (a) the probed-fixpoint sweep it replaces
-    and (b) raw pregel SSSP, per source, to the last double."""
+def test_phast_down_sweep_parity(spark):
+    """PHAST on a pregel-built hierarchy equals raw pregel SSSP to the
+    last double: ``sssp_multi`` per source, and ``sssp`` (its
+    one-source case)."""
     g = _grid_graph(spark, 6)
     ch = ContractionHierarchy.build(g, weight="w", strategy="pregel")
-    stats: dict = {}
-    lev = {
+    multi = {
         (r["src"], r["_n"]): r["dist"]
-        for r in ch.sssp_multi(
-            ["0:0", "5:5"], strategy="pregel", stats=stats
-        ).collect()
+        for r in ch.sssp_multi(["0:0", "5:5"], strategy="pregel").collect()
     }
-    assert stats["down_mode"] == "leveled"
-    n_levels = (
-        ch.search.filter(
-            (F.col("_ru") > F.col("_rv"))
-            | (F.col("_ru") == F.col("_rv"))
-        )
-        .select("_ru")
-        .distinct()
-        .count()
-    )
-    assert stats["down_rounds"] == n_levels  # height, by construction
-    # force the fixpoint fallback (the inflated-level-count guard) and
-    # compare — the two sweeps must agree exactly
-    old = ch.rounds
-    try:
-        ch._LEVELED_MIN_LEVELS = 0  # instance shadow
-        ch.rounds = 0
-        stats2: dict = {}
-        fix = {
-            (r["src"], r["_n"]): r["dist"]
-            for r in ch.sssp_multi(
-                ["0:0", "5:5"], strategy="pregel", stats=stats2
-            ).collect()
-        }
-        assert stats2["down_mode"] == "fixpoint"
-    finally:
-        ch.rounds = old
-        del ch._LEVELED_MIN_LEVELS
-    assert lev.keys() == fix.keys()
-    for k in fix:
-        assert lev[k] == pytest.approx(fix[k], rel=1e-12)
-    # and single-source sssp rides the same sweep
     raw = {
         r["_n"]: r["dist"]
         for r in g.shortest_path_lengths(
@@ -622,9 +577,10 @@ def test_phast_leveled_down_sweep_parity_and_rounds(spark):
         for r in ch.sssp("0:0", strategy="pregel").collect()
     }
     assert via.keys() == raw.keys()
+    assert {n for s, n in multi if s == "0:0"} == raw.keys()
     for k in raw:
         assert via[k] == pytest.approx(raw[k], rel=1e-12)
-        assert lev[("0:0", k)] == pytest.approx(via[k], rel=1e-12)
+        assert multi[("0:0", k)] == pytest.approx(via[k], rel=1e-12)
 
 
 def test_ch_load_old_fallback(spark, tmp_path, grid6):
@@ -888,24 +844,17 @@ def test_ch_customize_pregel_rejects_local_built(spark):
     assert ch.customize(new, strategy="local") is not None
 
 
-def test_phast_job_and_stage_counts(spark, spark_cost, monkeypatch):
-    """Forced-distributed PHAST on a fresh 6x6 grid hierarchy runs the
-    jobs and stages it ran before its rounds became the shared
-    wavefront helper, with the leveled down-sweep and with the probed
-    fixpoint down-sweep forced (the inflated-level-count fallback)."""
+def test_phast_job_and_stage_counts(spark, spark_cost):
+    """Forced-distributed PHAST on a fresh 6x6 grid hierarchy: both
+    phases are probed wavefront searches, so ``sssp`` and a 3-source
+    ``sssp_multi`` run the (jobs, stages) of the probed down-sweep,
+    without the level-count query that used to choose the sweep (2
+    jobs).  The removed one-pass-per-level down-sweep ran 169 each
+    here, and the probed one 53 and 77 with that query."""
     ch = ContractionHierarchy.build(_grid_graph(spark, 6), weight="w")
-
-    def costs():
-        return (
-            spark_cost(lambda: ch.sssp("0:0", strategy="pregel").collect()),
-            spark_cost(
-                lambda: ch.sssp_multi(
-                    ["0:0", "5:5", "2:4"], strategy="pregel"
-                ).collect()
-            ),
-        )
-
-    assert costs() == ((169, 169), (169, 169))
-    monkeypatch.setattr(ch, "_LEVELED_MIN_LEVELS", 0)
-    monkeypatch.setattr(ch, "rounds", 0)
-    assert costs() == ((53, 53), (77, 77))
+    assert spark_cost(
+        lambda: ch.sssp("0:0", strategy="pregel").collect()
+    ) == (51, 51)
+    assert spark_cost(
+        lambda: ch.sssp_multi(["0:0", "5:5", "2:4"], strategy="pregel").collect()
+    ) == (75, 75)

@@ -2651,14 +2651,19 @@ def _manhattan_to(tx, ty):
             ),
             {(93, 93), (94, 94)},
         ),
+        (
+            lambda g: g.connected_components(strategy="pregel").collect(),
+            {(57, 57)},
+        ),
     ],
-    ids=["lengths", "path", "astar"],
+    ids=["lengths", "path", "astar", "cc"],
 )
 def test_pregel_sssp_job_and_stage_counts(spark, spark_cost, op, expected):
     """Forced-distributed SSSP on a fresh 6x6 grid runs the jobs and
-    stages it ran before its round became the shared wavefront helper.
-    A route's count moves by one between repeated runs, so the pin is
-    the observed set."""
+    stages it ran before its round became the shared wavefront helper,
+    and the star-rewiring connected components the (jobs, stages) it
+    ran when first pinned.  A route's count moves by one between
+    repeated runs, so the pin is the observed set."""
     g = _grid(spark)
     assert spark_cost(lambda: op(g)) in expected
 

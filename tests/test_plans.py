@@ -308,6 +308,32 @@ def test_let_bound_staged_split_counts(spark):
     )
 
 
+def test_optimized_plan_untruncated_without_conf(spark):
+    """``optimized_plan`` renders a 60-column aggregate exactly as the
+    plan prints with ``spark.sql.debug.maxToStringFields`` raised to
+    100000, and leaves that key unset: the field cap is an argument,
+    not a session setting."""
+    from pyspark.sql import functions as F
+
+    from entwiner_spark.plans import optimized_plan
+
+    key = "spark.sql.debug.maxToStringFields"
+    df = (
+        spark.range(10)
+        .select(*[(F.col("id") + i).alias(f"c{i}") for i in range(60)])
+        .groupBy("c0")
+        .agg(*[F.sum(f"c{i}") for i in range(1, 60)])
+    )
+    spark.conf.set(key, "100000")
+    try:
+        want = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.unset(key)
+    assert "sum(c59)" in want
+    assert optimized_plan(df) == want
+    assert spark.conf.get(key, None) is None
+
+
 def test_props_json_store_roundtrip(spark, tiny_edges, tmp_path):
     """Serialized-properties storage mode (reference TODO.md
     "Alternative schemas"): write with properties_json=True, read back

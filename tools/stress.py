@@ -9,10 +9,18 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, for the driver AND for the Python
+# UDF workers Spark starts (they import entwiner_spark through
+# PYTHONPATH, not through this process's sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT, *filter(None, [os.environ.get("PYTHONPATH")])]
+)
 
 
 def main() -> None:
