@@ -846,11 +846,10 @@ def test_ch_customize_pregel_rejects_local_built(spark):
 
 def test_phast_job_and_stage_counts(spark, spark_cost):
     """Forced-distributed PHAST on a fresh 6x6 grid hierarchy: both
-    phases are probed wavefront searches, so ``sssp`` and a 3-source
-    ``sssp_multi`` run the (jobs, stages) of the probed down-sweep,
-    without the level-count query that used to choose the sweep (2
-    jobs).  The removed one-pass-per-level down-sweep ran 169 each
-    here, and the probed one 53 and 77 with that query."""
+    phases are wavefront searches probed every round, so ``sssp`` and
+    a 3-source ``sssp_multi`` run these (jobs, stages).  An unprobed
+    pass per contraction level (169 each here) or an extra query
+    fails."""
     ch = ContractionHierarchy.build(_grid_graph(spark, 6), weight="w")
     assert spark_cost(
         lambda: ch.sssp("0:0", strategy="pregel").collect()
