@@ -118,19 +118,19 @@ def _fanout(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet stores TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects by default; read ts as long nanos and truncate to
-    micros (exactly what DuckDB's nanos->timestamp coercion does).
-    Session TZ pinned to UTC so the NTZ conversion is deterministic
-    regardless of the host session's zone."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    reader rejects by default; ``get_spark`` sets
+    ``spark.sql.legacy.parquet.nanosAsLong``, so ts reads as long nanos,
+    truncated here to micros (exactly what DuckDB's nanos->timestamp
+    coercion does).  ``get_spark`` also pins the session TZ to UTC, so
+    the NTZ conversion is deterministic regardless of the host's zone.
+    A session built elsewhere needs both settings."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(ev.dtypes).get("ts") == "bigint":
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Newer driver parquet surfaces ts as TIMESTAMP_NTZ (timestamp[us]
     # with no zone); unix_millis/unix_micros and interval arithmetic in
-    # the event queries require TIMESTAMP (LTZ). Session TZ is pinned
-    # UTC above, so this cast is deterministic and oracle-stable.
+    # the event queries require TIMESTAMP (LTZ). get_spark pins the
+    # session TZ to UTC, so this cast is deterministic and oracle-stable.
     if dict(ev.dtypes).get("ts") == "timestamp_ntz":
         ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     return ev

@@ -119,18 +119,22 @@ def maneuver_cost(
     pay ``default``.  Drop the result straight into
     ``to_linegraph(turn_cost=lambda e1, e2: maneuver_cost(
     turn_angle_deg(e1("coordinates"), e2("coordinates")), {...}))`` —
-    one CASE expression, no UDF, whole-stage codegen keeps it free."""
+    one map lookup, no UDF.  The class expression appears once in it
+    (a CASE per profile entry would repeat it, and the generated code
+    of a priced linegraph then outgrew the 64 KB method limit)."""
     if costs is None:
         costs = {"right": 5.0, "left": 15.0, "uturn": 100.0}
+    if not costs:
+        return F.lit(float(default))
     cls = maneuver_class(
         angle_deg,
         straight_max_deg=straight_max_deg,
         uturn_min_deg=uturn_min_deg,
     )
-    expr = F.lit(float(default))
-    for name, c in costs.items():
-        expr = F.when(cls == name, F.lit(float(c))).otherwise(expr)
-    return expr
+    profile = F.create_map(
+        *[F.lit(x) for name, c in costs.items() for x in (name, float(c))]
+    )
+    return F.coalesce(F.try_element_at(profile, cls), F.lit(float(default)))
 
 
 def _pair_dist(a: Column, b: Column) -> Column:

@@ -46,7 +46,12 @@ rows collected, never the graph.
 
 from __future__ import annotations
 
+import contextlib
 import functools
+import json
+import os
+import shutil
+import tempfile
 
 import networkx as nx
 from pyspark.sql import DataFrame, SparkSession
@@ -101,6 +106,129 @@ CORE_RANK = 1 << 62
 
 #: Search-edge count below which route() collects and runs locally.
 LOCAL_THRESHOLD = 50_000
+
+#: Columns of a hierarchy's search rows.
+_SEARCH_COLS = ("_u", "_v", "w", "mid", "_ru", "_rv")
+
+#: Distributed customize rebases its arc frame every this many levels.
+_CUSTOMIZE_CHECKPOINT_EVERY = 4
+
+
+def _schema(idt, *cols: str) -> T.StructType:
+    """Schema of driver-built hierarchy rows: ``w`` and ``dist``
+    double, ``rank``/``_ru``/``_rv`` long, the penalty count ``_pc``
+    int, ``path`` an array of ids, and every other column (``_u``,
+    ``_v``, ``_n``, ``src``, ``dst``, and ``mid``, the only nullable
+    one) of the node id type ``idt``."""
+    types = {
+        "_pc": T.IntegerType(),
+        "w": T.DoubleType(),
+        "dist": T.DoubleType(),
+        "rank": T.LongType(),
+        "_ru": T.LongType(),
+        "_rv": T.LongType(),
+        "path": T.ArrayType(idt),
+    }
+    return T.StructType(
+        [T.StructField(c, types.get(c, idt), c == "mid") for c in cols]
+    )
+
+
+def _by_ids(row) -> tuple:
+    """Sort key of a driver-built row: its first two columns as
+    strings."""
+    return str(row[0]), str(row[1])
+
+
+def _relax_triangles(rows, floor: int) -> list:
+    """CCH customization on the driver: relax every lower triangle
+    ``w(u, x) = min(w(u, x), w(u, v) + w(v, x))`` of each node ``v``
+    ranked above ``floor`` and below ``CORE_RANK``, lowest rank first
+    (ties by id string), over ``(u, v, w, mid, ru, rv)`` arc rows (an
+    arc the metric leaves uncovered has ``w`` = +inf).  A strict
+    improvement re-points the arc's ``mid`` at ``v``; only arcs among
+    ``rows`` are relaxed, none is added.  Returns the finite rows,
+    sorted by endpoint strings."""
+    arcs = {(r[0], r[1]): list(r[2:]) for r in rows}  # [w, mid, ru, rv]
+    rank: dict = {}
+    inn: dict = {}
+    outn: dict = {}
+    for (u, v), (_w, _mid, ru, rv) in arcs.items():
+        rank[u], rank[v] = ru, rv
+        # equal ranks: a core-internal arc, in no lower triangle
+        if ru > rv:
+            inn.setdefault(v, []).append(u)
+        elif ru < rv:
+            outn.setdefault(u, []).append(v)
+    inf = float("inf")
+    order = sorted(
+        (n for n, rk in rank.items() if floor < rk < CORE_RANK),
+        key=lambda n: (rank[n], str(n)),
+    )
+    for v in order:
+        ins = [(u, arcs[(u, v)][0]) for u in inn.get(v, ())]
+        outs = [(x, arcs[(v, x)][0]) for x in outn.get(v, ())]
+        for u, w1 in ins:
+            for x, w2 in outs:
+                arc = arcs.get((u, x))
+                if arc is not None and w1 + w2 < arc[0]:
+                    arc[0], arc[1] = w1 + w2, v
+    return sorted(
+        ((u, v, *arc) for (u, v), arc in arcs.items() if arc[0] < inf),
+        key=_by_ids,
+    )
+
+
+@contextlib.contextmanager
+def _publish(store_dir: str, what: str, meta_name: str, meta: dict):
+    """Write a store through a temp dir beside ``store_dir`` (the
+    yielded path), then its ``meta_name`` JSON ``meta``, then publish
+    it replace-aside: the previous store is renamed away (atomic)
+    BEFORE the new one renames in.  A crash between the two renames
+    leaves the store path ABSENT with the previous store intact at
+    ``.old``, which :func:`_resolve_store` serves; no state ever
+    exposes a half-written store under the store path itself.
+    ``what`` names the store kind in the remote-path error."""
+    if "://" in store_dir:
+        raise ValueError(
+            f"{store_dir}: {what} publishes via local-FS rename; "
+            "use a local path"
+        )
+    parent = os.path.dirname(os.path.abspath(store_dir)) or "."
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="_chstore_tmp_", dir=parent)
+    try:
+        yield tmp
+        with open(os.path.join(tmp, meta_name), "w") as fh:
+            json.dump(meta, fh)
+        old = store_dir + ".old"
+        if os.path.exists(old):
+            shutil.rmtree(old)
+        if os.path.exists(store_dir):
+            os.rename(store_dir, old)
+        os.rename(tmp, store_dir)
+        shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _resolve_store(store_dir: str, meta_name: str, what: str) -> tuple:
+    """``(directory, meta)`` of a store written by :func:`_publish`: the
+    store path, or in the crash window between the publish's two
+    renames (no store dir, the previous store intact at ``.old``) that
+    last fully-published version.  Raises FileNotFoundError, naming
+    the store kind ``what``, when neither holds ``meta_name``."""
+    if not os.path.exists(os.path.join(store_dir, meta_name)):
+        old = store_dir + ".old"
+        if os.path.exists(store_dir) or not os.path.exists(
+            os.path.join(old, meta_name)
+        ):
+            raise FileNotFoundError(
+                f"{store_dir}: not {what} (no {meta_name})"
+            )
+        store_dir = old
+    with open(os.path.join(store_dir, meta_name)) as fh:
+        return store_dir, json.load(fh)
 
 
 def _min_edges(edges: DataFrame) -> DataFrame:
@@ -180,19 +308,9 @@ def _penalized(base: DataFrame, counts: dict, penalty: float) -> DataFrame:
     """The penalty method's re-metric: ``base`` ``(_u, _v, w)`` with the
     weight of every arc in ``counts`` (``{(u, v): n}``) multiplied by
     ``penalty`` ``n`` times."""
-    idt = base.schema["_u"].dataType
     pen = base.sparkSession.createDataFrame(
-        sorted(
-            ((u, v, c) for (u, v), c in counts.items()),
-            key=lambda t: (str(t[0]), str(t[1])),
-        ),
-        T.StructType(
-            [
-                T.StructField("_u", idt, False),
-                T.StructField("_v", idt, False),
-                T.StructField("_pc", T.IntegerType(), False),
-            ]
-        ),
+        sorted(((u, v, c) for (u, v), c in counts.items()), key=_by_ids),
+        _schema(base.schema["_u"].dataType, "_u", "_v", "_pc"),
     )
     return base.join(F.broadcast(pen), ["_u", "_v"], "left").select(
         "_u",
@@ -296,20 +414,14 @@ class ContractionHierarchy:
         hash-partitioned and sorted by ``_u`` so a reloaded artifact's
         upward expansions hit parquet min/max stats, same as the graph
         store's adjacency layout."""
-        import json
-        import os
-        import shutil
-        import tempfile
-
-        if "://" in store_dir:
-            raise ValueError(
-                f"{store_dir}: CH store publishes via local-FS rename; "
-                "use a local path"
-            )
-        parent = os.path.dirname(os.path.abspath(store_dir)) or "."
-        os.makedirs(parent, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="_chstore_tmp_", dir=parent)
-        try:
+        meta = {
+            "n_search_edges": self.n_search_edges,
+            "rounds": self.rounds,
+            "core_size": self.core_size,
+            "edge_fingerprint": self.edge_fingerprint,
+            "customizable": self.customizable,
+        }
+        with _publish(store_dir, "CH store", self._META, meta) as tmp:
             n = partitions or int(
                 self.spark.conf.get("spark.sql.shuffle.partitions")
             )
@@ -332,34 +444,6 @@ class ContractionHierarchy:
                     .write.mode("overwrite")
                     .parquet(f"{tmp}/orig.parquet")
                 )
-            with open(os.path.join(tmp, self._META), "w") as fh:
-                json.dump(
-                    {
-                        "n_search_edges": self.n_search_edges,
-                        "rounds": self.rounds,
-                        "core_size": self.core_size,
-                        "edge_fingerprint": self.edge_fingerprint,
-                        "customizable": self.customizable,
-                    },
-                    fh,
-                )
-            # replace-aside publish: the previous artifact is renamed
-            # away (atomic) BEFORE the new one renames in.  A crash
-            # between the two renames leaves the store path ABSENT with
-            # the previous artifact intact at .old — load() recovers
-            # that case by falling back to .old.  No state ever exposes
-            # a half-written artifact under the store path itself.
-            old = store_dir + ".old"
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            if os.path.exists(store_dir):
-                os.rename(store_dir, old)
-            os.rename(tmp, store_dir)
-            if os.path.exists(old):
-                shutil.rmtree(old, ignore_errors=True)
-        finally:
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
 
     @classmethod
     def load(
@@ -370,44 +454,23 @@ class ContractionHierarchy:
         weight: str | None = None,
     ) -> "ContractionHierarchy":
         """Reload a ``save()``d artifact into a routable hierarchy —
-        build once (hours at scale), route many, across sessions.
+        build once (hours at scale), route many, across sessions.  A
+        crash inside ``save()``'s publish leaves the previous artifact
+        at ``<store>.old``, which is served instead.
 
         Pass ``graph`` (and the build's ``weight``) to verify the
         artifact against the LIVE edge table before routing
         (:meth:`check_fresh`) — a keyed update since ``save()`` raises
         loudly instead of silently serving stale costs."""
-        import json
-        import os
-
-        meta_path = os.path.join(store_dir, cls._META)
-        if not os.path.exists(meta_path):
-            # crash-window recovery: save() publishes via two renames
-            # (store -> .old, tmp -> store); a crash between them
-            # leaves the previous artifact intact at .old with no
-            # store dir.  Serve that artifact rather than failing —
-            # it is the last fully-published version.
-            old = store_dir + ".old"
-            if not os.path.exists(store_dir) and os.path.exists(
-                os.path.join(old, cls._META)
-            ):
-                store_dir = old
-                meta_path = os.path.join(store_dir, cls._META)
-            else:
-                raise FileNotFoundError(
-                    f"{store_dir}: not a CH store (no {cls._META})"
-                )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        search = spark.read.parquet(f"{store_dir}/search.parquet")
-        ranks = spark.read.parquet(f"{store_dir}/ranks.parquet")
+        store_dir, meta = _resolve_store(store_dir, cls._META, "a CH store")
         customizable = bool(meta.get("customizable", False))
         orig = None
         if customizable and os.path.exists(f"{store_dir}/orig.parquet"):
             orig = spark.read.parquet(f"{store_dir}/orig.parquet")
         ch = cls(
             spark,
-            ranks,
-            search,
+            spark.read.parquet(f"{store_dir}/ranks.parquet"),
+            spark.read.parquet(f"{store_dir}/search.parquet"),
             int(meta["n_search_edges"]),
             int(meta["rounds"]),
             int(meta["core_size"]),
@@ -478,7 +541,7 @@ class ContractionHierarchy:
         nodes: set,
         start_rank: int = 0,
         full_witness: bool = True,
-    ) -> tuple[dict, dict]:
+    ) -> tuple[list, list]:
         """Driver-side contraction engine shared by the local build and
         the distributed build's LOCAL FINISH: classic CH (lazy priority
         queue on edge difference, witness search = Dijkstra bounded to
@@ -486,9 +549,10 @@ class ContractionHierarchy:
         shortcuts, never loses one, so exactness is preserved).
 
         ``emap``: ``{(u, v): w}`` parallel-min edges, no self loops.
-        Returns ``(ranks, updates)`` — ranks starting at
+        Returns ``(rank rows, shortcut rows)``, each sorted by id
+        strings: ``(_n, rank)`` with ranks starting at
         ``start_rank + 1``, and ONLY the new/improved shortcut edges
-        as ``{(u, v): (w, mid)}``.
+        as ``(_u, _v, w, mid)``.
 
         ``full_witness=False`` (customizable hierarchies): prune only
         on a dominating DIRECT arc, never on a multi-hop witness — the
@@ -577,7 +641,10 @@ class ContractionHierarchy:
                     if (u, x) not in best or sw < best[(u, x)]:
                         best[(u, x)] = sw
                         updates[(u, x)] = (sw, v)
-        return ranks, updates
+        return sorted(ranks.items(), key=_by_ids), sorted(
+            ((u, v, float(w), mid) for (u, v), (w, mid) in updates.items()),
+            key=_by_ids,
+        )
 
     @classmethod
     def _build_local(
@@ -600,61 +667,36 @@ class ContractionHierarchy:
             nodes.add(v)
             if (u, v) not in emap or w < emap[(u, v)]:
                 emap[(u, v)] = w
-        ranks, updates = cls._contract_core(
+        rank_rows, sc_rows = cls._contract_core(
             emap, nodes, full_witness=not customizable
         )
+        rank = dict(rank_rows)
         search = {k: (w, None) for k, w in emap.items()}
-        search.update(updates)
-        rows = [
-            (u, v, float(w), mid, ranks[u], ranks[v])
-            for (u, v), (w, mid) in sorted(
-                search.items(), key=lambda kv: (str(kv[0][0]), str(kv[0][1]))
-            )
-        ]
-        schema = T.StructType(
-            [
-                T.StructField("_u", idt, False),
-                T.StructField("_v", idt, False),
-                T.StructField("w", T.DoubleType(), False),
-                T.StructField("mid", idt, True),
-                T.StructField("_ru", T.LongType(), False),
-                T.StructField("_rv", T.LongType(), False),
-            ]
-        )
-        search_df = spark.createDataFrame(rows, schema)
-        ranks_df = spark.createDataFrame(
-            sorted(ranks.items(), key=lambda kv: str(kv[0])),
-            T.StructType(
-                [
-                    T.StructField("_n", idt, False),
-                    T.StructField("rank", T.LongType(), False),
-                ]
+        search.update(((u, v), (w, mid)) for u, v, w, mid in sc_rows)
+        rows = sorted(
+            (
+                (u, v, float(w), mid, rank[u], rank[v])
+                for (u, v), (w, mid) in search.items()
             ),
+            key=_by_ids,
         )
+        search_df = spark.createDataFrame(rows, _schema(idt, *_SEARCH_COLS))
+        ranks_df = spark.createDataFrame(rank_rows, _schema(idt, "_n", "rank"))
         orig = None
         if customizable:
             orig = spark.createDataFrame(
-                [
-                    (u, v, float(w))
-                    for (u, v), w in sorted(
-                        emap.items(),
-                        key=lambda kv: (str(kv[0][0]), str(kv[0][1])),
-                    )
-                ],
-                T.StructType(
-                    [
-                        T.StructField("_u", idt, False),
-                        T.StructField("_v", idt, False),
-                        T.StructField("w", T.DoubleType(), False),
-                    ]
+                sorted(
+                    ((u, v, float(w)) for (u, v), w in emap.items()),
+                    key=_by_ids,
                 ),
+                _schema(idt, "_u", "_v", "w"),
             )
         return cls(
             spark,
             ranks_df,
             search_df,
             len(rows),
-            len(ranks),
+            len(rank_rows),
             0,
             cls._graph_fingerprint(graph, weight),
             customizable=customizable,
@@ -700,18 +742,9 @@ class ContractionHierarchy:
             .unionByName(active.select(F.col("_v").alias("_n")))
             .distinct()
         )
-        rank_schema = T.StructType(
-            [
-                T.StructField("_n", idt, False),
-                T.StructField("rank", T.LongType(), False),
-            ]
-        )
+        rank_schema = _schema(idt, "_n", "rank")
         search_parts = [active]
         rank_parts: list[DataFrame] = []
-        import os
-        import time as _time
-
-        debug = os.environ.get("CH_BUILD_DEBUG") == "1"
         # lazy checkpoint + count fold: the count materializes the
         # checkpoint and returns the probe value in one scheduled job
         unranked = all_nodes.localCheckpoint(eager=False)
@@ -721,7 +754,6 @@ class ContractionHierarchy:
             if n_left == 0 or n_left <= local_finish:
                 break
             rounds = r
-            _t0 = _time.time()
             outd = active.groupBy("_u").agg(F.count(F.lit(1)).alias("_od"))
             ind = active.groupBy("_v").agg(F.count(F.lit(1)).alias("_id"))
             prio = (
@@ -891,56 +923,22 @@ class ContractionHierarchy:
             unranked = rebase_checkpoint(
                 unranked.join(isdf, "_n", "left_anti")
             )
-            if debug:
-                print(
-                    f"[ch build] round {r}: left={n_left} "
-                    f"active={active.count()} {_time.time() - _t0:.1f}s",
-                    flush=True,
-                )
-        from functools import reduce
-
         core_size = 0
         if n_left > 0 and n_left <= local_finish:
             # LOCAL FINISH: contract the small remainder driver-side
             # with the shared core, ranks stacked ABOVE every
             # distributed round (these are the hierarchy's top nodes)
-            emap = {
-                (rw["_u"], rw["_v"]): rw["w"] for rw in active.collect()
-            }
-            rem_nodes = {rw["_n"] for rw in unranked.collect()}
-            lranks, lupdates = cls._contract_core(
-                emap,
-                rem_nodes,
+            rank_rows, sc_rows = cls._contract_core(
+                {(rw["_u"], rw["_v"]): rw["w"] for rw in active.collect()},
+                {rw["_n"] for rw in unranked.collect()},
                 start_rank=rounds,
                 full_witness=not customizable,
             )
-            rank_parts.append(
-                spark.createDataFrame(
-                    sorted(lranks.items(), key=lambda kv: str(kv[0])),
-                    rank_schema,
-                )
-            )
-            if lupdates:
+            rank_parts.append(spark.createDataFrame(rank_rows, rank_schema))
+            if sc_rows:
                 search_parts.append(
                     spark.createDataFrame(
-                        [
-                            (u, v, float(w), mid)
-                            for (u, v), (w, mid) in sorted(
-                                lupdates.items(),
-                                key=lambda kv: (
-                                    str(kv[0][0]),
-                                    str(kv[0][1]),
-                                ),
-                            )
-                        ],
-                        T.StructType(
-                            [
-                                T.StructField("_u", idt, False),
-                                T.StructField("_v", idt, False),
-                                T.StructField("w", T.DoubleType(), False),
-                                T.StructField("mid", idt, True),
-                            ]
-                        ),
+                        sc_rows, _schema(idt, *_SEARCH_COLS[:4])
                     )
                 )
         elif n_left > 0:
@@ -951,12 +949,14 @@ class ContractionHierarchy:
                     "_n", F.lit(CORE_RANK).cast("long").alias("rank")
                 )
             )
-        ranks = reduce(
+        ranks = functools.reduce(
             lambda a, b: a.unionByName(b),
             rank_parts,
             spark.createDataFrame([], rank_schema),
         )
-        search = _min_edges(reduce(lambda a, b: a.unionByName(b), search_parts))
+        search = _min_edges(
+            functools.reduce(lambda a, b: a.unionByName(b), search_parts)
+        )
         ru = ranks.select(
             F.col("_n").alias("_u"), F.col("rank").alias("_ru")
         )
@@ -981,10 +981,7 @@ class ContractionHierarchy:
     # ------------------------------------ customization (CCH re-metric)
     @_scaled_shuffle
     def customize(
-        self,
-        new_edges: DataFrame,
-        strategy: str = "auto",
-        checkpoint_every: int = 4,
+        self, new_edges: DataFrame, strategy: str = "auto"
     ) -> "ContractionHierarchy":
         """Re-derive EXACT arc weights for a NEW positive metric
         without recontracting — the customization phase of
@@ -1001,11 +998,16 @@ class ContractionHierarchy:
 
         ``new_edges``: ``(_u, _v, w)`` covering EVERY original edge
         (pairs are parallel-min'd; uncovered originals disconnect).
-        Returns a NEW hierarchy over the same ranks whose queries are
-        exact for the new metric — shortcut ``mid``s re-point at each
-        triangle's argmin so unpacking stays consistent.
+        Metric pairs that are not arcs of the hierarchy are ignored,
+        on both paths.  Returns a NEW hierarchy over the same ranks
+        whose queries are exact for the new metric — shortcut
+        ``mid``s re-point at each triangle's argmin so unpacking stays
+        consistent.
 
-        Scale shape: the distributed path is one (ins ⋈ outs → relax)
+        Both paths start from the search arcs joined to the metric
+        (uncovered arcs at +inf).  The local path collects them once
+        and relaxes every level driver-side (:func:`_relax_triangles`).
+        Scale shape of the distributed path: one (ins ⋈ outs → relax)
         join pass per BUILD LEVEL (same-round IS nodes relax together;
         their triangles cannot interact because same-level nodes are
         never adjacent), then the dense top block (the local-finish
@@ -1025,123 +1027,6 @@ class ContractionHierarchy:
             .groupBy("_u", "_v")
             .agg(F.min("w").alias("w"))
         )
-        if self._local(strategy):
-            return self._customize_local(base)
-        if self.rounds > 1024:
-            # a LOCAL-built hierarchy assigns every node its own rank
-            # (rounds == node count), so the per-level distributed loop
-            # would run one join pass PER NODE — pregel customization
-            # is only sensible over pregel-built level structure
-            # (rounds ≤ max_rounds, default 32)
-            raise ValueError(
-                f"{self.rounds} contraction levels — this hierarchy "
-                "was built driver-locally (one rank per node), so "
-                "per-level distributed customization would run one "
-                "join per node; use strategy='local' or rebuild with "
-                "build(strategy='pregel')"
-            )
-        return self._customize_pregel(base, checkpoint_every)
-
-    def _customized_result(
-        self, search: DataFrame, base: DataFrame
-    ) -> "ContractionHierarchy":
-        out = ContractionHierarchy(
-            self.spark,
-            self.ranks,
-            search,
-            self.n_search_edges,
-            self.rounds,
-            self.core_size,
-            None,
-            customizable=True,
-            orig_edges=base,
-        )
-        return out
-
-    def _customize_local(self, base: DataFrame) -> "ContractionHierarchy":
-        """Driver twin: in-memory bottom-up triangle relaxation.
-        Dynamically inserts any missing closing arc (never needed on a
-        customizable build by the closure invariant, but it makes the
-        local path robust to hand-built artifacts)."""
-        rank = {r["_n"]: r["rank"] for r in self.ranks.collect()}
-        arcs = {
-            (r["_u"], r["_v"])
-            for r in self.search.select("_u", "_v").collect()
-        }
-        w = {}
-        mid = {}
-        for a in arcs:
-            w[a] = float("inf")
-            mid[a] = None
-        for r in base.collect():
-            k = (r["_u"], r["_v"])
-            if k in arcs:
-                w[k] = r["w"]
-            else:
-                arcs.add(k)
-                w[k], mid[k] = r["w"], None
-        inn: dict = {}
-        outn: dict = {}
-        for u, v in arcs:
-            if rank.get(u, 0) > rank.get(v, 0):
-                inn.setdefault(v, set()).add(u)
-            elif rank.get(u, 0) < rank.get(v, 0):
-                outn.setdefault(u, set()).add(v)
-            # equal ranks: core-internal arc — never part of a lower
-            # triangle (nothing ranks above the core), skip
-        order = sorted(
-            (n for n, rk in rank.items() if rk < CORE_RANK),
-            key=lambda n: (rank[n], str(n)),
-        )
-        for v in order:
-            ins = [
-                (u, w[(u, v)]) for u in inn.get(v, ()) if w[(u, v)] < float("inf")
-            ]
-            outs = [
-                (x, w[(v, x)]) for x in outn.get(v, ()) if w[(v, x)] < float("inf")
-            ]
-            for u, w1 in ins:
-                for x, w2 in outs:
-                    if u == x:
-                        continue
-                    k = (u, x)
-                    c = w1 + w2
-                    if k not in w:
-                        arcs.add(k)
-                        w[k], mid[k] = c, v
-                        if rank.get(u, 0) > rank.get(x, 0):
-                            inn.setdefault(x, set()).add(u)
-                        elif rank.get(u, 0) < rank.get(x, 0):
-                            outn.setdefault(u, set()).add(x)
-                    elif c < w[k]:
-                        w[k], mid[k] = c, v
-        idt = self.ranks.schema["_n"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("_u", idt, False),
-                T.StructField("_v", idt, False),
-                T.StructField("w", T.DoubleType(), False),
-                T.StructField("mid", idt, True),
-                T.StructField("_ru", T.LongType(), False),
-                T.StructField("_rv", T.LongType(), False),
-            ]
-        )
-        rows = [
-            (u, v, w[(u, v)], mid[(u, v)], rank[u], rank[v])
-            for (u, v) in sorted(arcs, key=lambda p: (str(p[0]), str(p[1])))
-            if w[(u, v)] < float("inf")
-        ]
-        return self._customized_result(
-            self.spark.createDataFrame(rows, schema), base
-        )
-
-    def _customize_pregel(
-        self, base: DataFrame, checkpoint_every: int
-    ) -> "ContractionHierarchy":
-        """Distributed customization: one relax pass per distributed
-        build level (ranks 1..rounds are per-round independent sets),
-        then the dense top block (ranks above ``rounds`` — the
-        local-finish remainder plus core) relaxes driver-side."""
         idt = self.ranks.schema["_n"].dataType
         arcs = (
             self.search.select("_u", "_v", "_ru", "_rv")
@@ -1154,8 +1039,45 @@ class ContractionHierarchy:
                 "_ru",
                 "_rv",
             )
-            .localCheckpoint(eager=True)
         )
+        if self._local(strategy):
+            search = self.spark.createDataFrame(
+                _relax_triangles(arcs.collect(), 0),
+                _schema(idt, *_SEARCH_COLS),
+            )
+        elif self.rounds > 1024:
+            # a LOCAL-built hierarchy assigns every node its own rank
+            # (rounds == node count), so the per-level distributed loop
+            # would run one join pass PER NODE — pregel customization
+            # is only sensible over pregel-built level structure
+            # (rounds ≤ max_rounds, default 32)
+            raise ValueError(
+                f"{self.rounds} contraction levels — this hierarchy "
+                "was built driver-locally (one rank per node), so "
+                "per-level distributed customization would run one "
+                "join per node; use strategy='local' or rebuild with "
+                "build(strategy='pregel')"
+            )
+        else:
+            search = self._customize_pregel(arcs.localCheckpoint(eager=True))
+        return ContractionHierarchy(
+            self.spark,
+            self.ranks,
+            search,
+            self.n_search_edges,
+            self.rounds,
+            self.core_size,
+            None,
+            customizable=True,
+            orig_edges=base,
+        )
+
+    def _customize_pregel(self, arcs: DataFrame) -> DataFrame:
+        """Distributed customization of the ``(_u, _v, w, mid, _ru,
+        _rv)`` arcs: one relax pass per distributed build level (ranks
+        1..rounds are per-round independent sets), then the dense top
+        block (ranks above ``rounds`` — the local-finish remainder plus
+        core) relaxes driver-side.  Returns the new search frame."""
         for lvl in range(1, self.rounds + 1):
             ins = arcs.filter(
                 (F.col("_rv") == lvl) & (F.col("_ru") > lvl)
@@ -1192,99 +1114,28 @@ class ContractionHierarchy:
                     F.col("b.m").alias("_m"),
                 )
             )
-            arcs = (
-                arcs.join(cand, ["_u", "_v"], "left")
-                .select(
-                    "_u",
-                    "_v",
-                    F.when(
-                        F.col("_wc").isNotNull()
-                        & (F.col("_wc") < F.col("w")),
-                        F.col("_wc"),
-                    )
-                    .otherwise(F.col("w"))
-                    .alias("w"),
-                    F.when(
-                        F.col("_wc").isNotNull()
-                        & (F.col("_wc") < F.col("w")),
-                        F.col("_m"),
-                    )
-                    .otherwise(F.col("mid"))
-                    .alias("mid"),
-                    "_ru",
-                    "_rv",
-                )
+            better = F.col("_wc").isNotNull() & (F.col("_wc") < F.col("w"))
+            arcs = arcs.join(cand, ["_u", "_v"], "left").select(
+                "_u",
+                "_v",
+                F.when(better, F.col("_wc")).otherwise(F.col("w")).alias("w"),
+                F.when(better, F.col("_m")).otherwise(F.col("mid")).alias("mid"),
+                "_ru",
+                "_rv",
             )
-            if lvl % checkpoint_every == 0 or lvl == self.rounds:
+            if lvl % _CUSTOMIZE_CHECKPOINT_EVERY == 0 or lvl == self.rounds:
                 arcs = rebase_checkpoint(arcs)
-        # top block: both endpoints above the distributed rounds
-        top_pred = (F.col("_ru") > self.rounds) & (
-            F.col("_rv") > self.rounds
-        )
-        top_rows = arcs.filter(top_pred).collect()
-        # a top node without a top arc relaxes nothing, so the ranks
-        # the top arcs carry are all the relaxation needs
-        rank = {}
-        for r in top_rows:
-            rank[r["_u"]], rank[r["_v"]] = r["_ru"], r["_rv"]
-        w = {}
-        mid = {}
-        inn: dict = {}
-        outn: dict = {}
-        for r in top_rows:
-            k = (r["_u"], r["_v"])
-            w[k], mid[k] = r["w"], r["mid"]
-            if r["_ru"] > r["_rv"]:
-                inn.setdefault(r["_v"], set()).add(r["_u"])
-            elif r["_ru"] < r["_rv"]:
-                outn.setdefault(r["_u"], set()).add(r["_v"])
-        order = sorted(
-            (n for n, rk in rank.items() if rk < CORE_RANK),
-            key=lambda n: (rank[n], str(n)),
-        )
-        for v in order:
-            ins = [
-                (u, w[(u, v)]) for u in inn.get(v, ()) if w[(u, v)] < float("inf")
-            ]
-            outs = [
-                (x, w[(v, x)]) for x in outn.get(v, ()) if w[(v, x)] < float("inf")
-            ]
-            for u, w1 in ins:
-                for x, w2 in outs:
-                    if u == x:
-                        continue
-                    k = (u, x)
-                    c = w1 + w2
-                    if k in w and c < w[k]:
-                        w[k], mid[k] = c, v
-        schema = T.StructType(
-            [
-                T.StructField("_u", idt, False),
-                T.StructField("_v", idt, False),
-                T.StructField("w", T.DoubleType(), False),
-                T.StructField("mid", idt, True),
-                T.StructField("_ru", T.LongType(), False),
-                T.StructField("_rv", T.LongType(), False),
-            ]
-        )
+        top = (F.col("_ru") > self.rounds) & (F.col("_rv") > self.rounds)
         top_df = self.spark.createDataFrame(
-            sorted(
-                (
-                    (u, v, w[(u, v)], mid[(u, v)], rank[u], rank[v])
-                    for (u, v) in w
-                    if w[(u, v)] < float("inf")
-                ),
-                key=lambda r: (str(r[0]), str(r[1])),
-            ),
-            schema,
+            _relax_triangles(arcs.filter(top).collect(), self.rounds),
+            _schema(self.ranks.schema["_n"].dataType, *_SEARCH_COLS),
         )
-        out_search = (
-            arcs.filter(~top_pred)
+        return (
+            arcs.filter(~top)
             .filter(F.col("w") < float("inf"))
             .unionByName(top_df)
             .localCheckpoint(eager=True)
         )
-        return self._customized_result(out_search, base)
 
     @_scaled_shuffle
     def alternatives(
@@ -1489,7 +1340,7 @@ class ContractionHierarchy:
             for r in self._sssp_local(s).collect():
                 rows.append((s, r["_n"], r["dist"]))
         return self.spark.createDataFrame(
-            sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
+            sorted(rows, key=_by_ids),
             _dist_schema(self.ranks.schema["_n"].dataType, keys=["src"]),
         )
 
@@ -1548,14 +1399,8 @@ class ContractionHierarchy:
         driver-side assembly is not a scale compromise."""
         if not sources or not targets:
             raise ValueError("sources and targets must be non-empty")
-        idt = self.ranks.schema["_n"].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("src", idt, False),
-                T.StructField("dst", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-                T.StructField("path", T.ArrayType(idt), False),
-            ]
+        out_schema = _schema(
+            self.ranks.schema["_n"].dataType, "src", "dst", "dist", "path"
         )
         if self._local(strategy):
             rows = []
@@ -1569,7 +1414,7 @@ class ContractionHierarchy:
                     if r is not None:
                         rows.append((s, t, r[1], r[0]))
             return self.spark.createDataFrame(
-                sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
+                sorted(rows, key=_by_ids),
                 out_schema,
             )
         dist, st = self._cones(
@@ -1611,7 +1456,7 @@ class ContractionHierarchy:
         )
         rows = [(s, t, mu, _unpack(walk, mids)) for s, t, mu, walk in walks]
         return self.spark.createDataFrame(
-            sorted(rows, key=lambda r: (str(r[0]), str(r[1]))),
+            sorted(rows, key=_by_ids),
             out_schema,
         )
 
@@ -1625,16 +1470,9 @@ class ContractionHierarchy:
                 meet = _meet(df, db)
                 if meet is not None:
                     rows.append((s, t, df[meet] + db[meet]))
-        idt = self.ranks.schema["_n"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("src", idt, False),
-                T.StructField("dst", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-        )
         return self.spark.createDataFrame(
-            sorted(rows, key=lambda r: (str(r[0]), str(r[1]))), schema
+            sorted(rows, key=_by_ids),
+            _schema(self.ranks.schema["_n"].dataType, "src", "dst", "dist"),
         )
 
     # ------------------------------------------------------ local twin

@@ -37,6 +37,8 @@ terminal lookups plus one batched CH matrix query.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,6 +47,9 @@ from entwiner_spark.operators.ch import (
     ContractionHierarchy,
     _path_cost,
     _penalized,
+    _publish,
+    _resolve_store,
+    _schema,
 )
 
 
@@ -270,20 +275,12 @@ class EdgeBasedCH:
         """Persist hierarchy + terminal registry with the same
         replace-aside temp→rename publish as
         :meth:`ContractionHierarchy.save`."""
-        import json
-        import os
-        import shutil
-        import tempfile
-
-        if "://" in store_dir:
-            raise ValueError(
-                f"{store_dir}: edge-based CH store publishes via "
-                "local-FS rename; use a local path"
-            )
-        parent = os.path.dirname(os.path.abspath(store_dir)) or "."
-        os.makedirs(parent, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="_chedge_tmp_", dir=parent)
-        try:
+        meta = {
+            "kind": "edge_based_ch",
+            "base_fingerprint": self.base_fingerprint,
+            "turn_fingerprint": self.turn_fingerprint,
+        }
+        with _publish(store_dir, "edge-based CH store", self._META, meta) as tmp:
             self.ch.save(os.path.join(tmp, "ch"), partitions=partitions)
             n = partitions or int(
                 self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -294,26 +291,6 @@ class EdgeBasedCH:
                 .write.mode("overwrite")
                 .parquet(f"{tmp}/terminals.parquet")
             )
-            with open(os.path.join(tmp, self._META), "w") as fh:
-                json.dump(
-                    {
-                        "kind": "edge_based_ch",
-                        "base_fingerprint": self.base_fingerprint,
-                        "turn_fingerprint": self.turn_fingerprint,
-                    },
-                    fh,
-                )
-            old = store_dir + ".old"
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            if os.path.exists(store_dir):
-                os.rename(store_dir, old)
-            os.rename(tmp, store_dir)
-            if os.path.exists(old):
-                shutil.rmtree(old, ignore_errors=True)
-        finally:
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
 
     @classmethod
     def load(
@@ -323,35 +300,17 @@ class EdgeBasedCH:
         graph=None,
         weight: str | None = None,
     ) -> "EdgeBasedCH":
-        """Reload; pass ``graph`` (and the build's ``weight``) to
-        verify the artifact against the live BASE edge table before
-        routing (:meth:`check_fresh`)."""
-        import json
-        import os
-
-        meta_path = os.path.join(store_dir, cls._META)
-        if not os.path.exists(meta_path):
-            # crash-window recovery (mirrors ContractionHierarchy.load):
-            # a crash between the publish's two renames leaves the
-            # previous artifact at .old with no store dir — serve it.
-            old = store_dir + ".old"
-            if not os.path.exists(store_dir) and os.path.exists(
-                os.path.join(old, cls._META)
-            ):
-                store_dir = old
-                meta_path = os.path.join(store_dir, cls._META)
-            else:
-                raise FileNotFoundError(
-                    f"{store_dir}: not an edge-based CH store "
-                    f"(no {cls._META})"
-                )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        ch = ContractionHierarchy.load(spark, os.path.join(store_dir, "ch"))
-        terminals = spark.read.parquet(f"{store_dir}/terminals.parquet")
+        """Reload (falling back to ``<store>.old`` after a crash inside
+        ``save()``'s publish, like :meth:`ContractionHierarchy.load`);
+        pass ``graph`` (and the build's ``weight``) to verify the
+        artifact against the live BASE edge table before routing
+        (:meth:`check_fresh`)."""
+        store_dir, meta = _resolve_store(
+            store_dir, cls._META, "an edge-based CH store"
+        )
         eb = cls(
-            ch,
-            terminals,
+            ContractionHierarchy.load(spark, os.path.join(store_dir, "ch")),
+            spark.read.parquet(f"{store_dir}/terminals.parquet"),
             meta.get("base_fingerprint"),
             meta.get("turn_fingerprint"),
         )
@@ -485,14 +444,9 @@ class EdgeBasedCH:
             raise ValueError("sources and targets must be non-empty")
         sources = list(dict.fromkeys(sources))
         targets = list(dict.fromkeys(targets))
-        idt = self.terminals.schema["_edge_u"].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("src", idt, False),
-                T.StructField("dst", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-                T.StructField("path", T.ArrayType(idt), False),
-            ]
+        out_schema = _schema(
+            self.terminals.schema["_edge_u"].dataType,
+            "src", "dst", "dist", "path",
         )
         trivial = [
             (s, s, 0.0, [s]) for s in sources if s in set(targets)
@@ -754,12 +708,8 @@ class EdgeBasedCH:
         restricted wheelchair/"how far in N minutes" query the
         maneuver model exists for."""
         srcs = self._source_terminals(source)
-        idt = self.terminals.schema["_edge_u"].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("_n", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
+        out_schema = _schema(
+            self.terminals.schema["_edge_u"].dataType, "_n", "dist"
         )
         self_row = [(source, 0.0)]
         if not srcs or budget < 0:
@@ -832,13 +782,7 @@ class EdgeBasedCH:
             .select("_n", "_edge_v")
             .collect()
         ]
-        out_schema = T.StructType(
-            [
-                T.StructField("src", idt, False),
-                T.StructField("dst", idt, False),
-                T.StructField("dist", T.DoubleType(), False),
-            ]
-        )
+        out_schema = _schema(idt, "src", "dst", "dist")
         trivial = [
             (s, s, 0.0) for s in sources if s in set(targets)
         ]

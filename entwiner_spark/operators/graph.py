@@ -1149,7 +1149,6 @@ class SparkGraph:
         source: str,
         weight: str | None = None,
         max_iterations: int | None = None,
-        checkpoint_every: int = 5,
         strategy: str = "auto",
         check_every: int = 3,
         stats: dict | None = None,

@@ -5,6 +5,9 @@ Defaults chosen for correctness-at-scale:
   partition coalescing) — replaces every hand-coded physical tactic the
   reference used (SURVEY.md §4).
 - UTC session timezone so DuckDB-oracle comparisons are deterministic.
+- TIMESTAMP(NANOS) parquet columns read as long nanos
+  (``spark.sql.legacy.parquet.nanosAsLong``); ``catalog._events``
+  truncates them to micros.
 - ANSI mode is left at Spark 4's default (ON): every oracle-verified
   query passes under it, and it surfaces real errors (divide-by-zero,
   bad casts) instead of silent NULLs; inputs that would trip ANSI on
@@ -37,6 +40,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
+        # TIMESTAMP(NANOS) parquet columns (the events table) read as
+        # long nanos instead of failing the scan
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

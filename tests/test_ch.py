@@ -226,6 +226,12 @@ def test_ch_query_job_counts(spark, spark_cost):
     assert spark_cost(
         lambda: ch.customize(new, strategy="pregel")
     ) == (35, 35)
+    # the driver twin collects the search arcs joined to the metric
+    # once and runs nothing else (separate ranks, search and metric
+    # collects ran 4 jobs and stages)
+    assert spark_cost(
+        lambda: ch.customize(new, strategy="local")
+    ) == (3, 3)
 
 
 def test_ch_core_cutoff_stays_exact(spark, grid6):
@@ -828,6 +834,38 @@ def test_ch_customizable_save_load_alternatives(spark, tmp_path):
     assert [(p, round(c, 12)) for p, c in got] == [
         (p, round(c, 12)) for p, c in want
     ]
+
+
+@pytest.mark.parametrize("n,local_finish", [(5, 6), (6, 4)])
+def test_ch_customize_local_rows_equal_pregel(spark, n, local_finish):
+    """Both customize paths relax the same triangles in the same
+    order, so on a distributed-built hierarchy the driver twin's search
+    rows (weights, re-pointed mids, ranks) equal the distributed
+    path's, under a metric that changes weights."""
+    g = _grid_graph(spark, n)
+    ch = ContractionHierarchy.build(
+        g, weight="w", strategy="pregel", local_finish=local_finish,
+        customizable=True,
+    )
+    new = g.edges.select(
+        "_u",
+        "_v",
+        F.when(F.col("_u").startswith("0"), F.col("w") * 4)
+        .otherwise(F.col("w"))
+        .alias("w"),
+    )
+    cols = ["_u", "_v", "w", "mid", "_ru", "_rv"]
+    rows = {
+        strat: sorted(
+            tuple(r)
+            for r in ch.customize(new, strategy=strat)
+            .search.select(*cols)
+            .collect()
+        )
+        for strat in ("local", "pregel")
+    }
+    assert len(rows["local"]) == ch.n_search_edges
+    assert rows["local"] == rows["pregel"]
 
 
 def test_ch_customize_pregel_rejects_local_built(spark):

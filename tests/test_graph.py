@@ -2404,19 +2404,36 @@ def test_maneuver_classes_and_cost_profile(spark):
     assert got[("B|A", "A|B")] == "uturn"
 
     profile = {"right": 5.0, "left": 15.0, "uturn": 100.0}
-    priced = g.to_linegraph(
-        weight="w",
-        turn_cost=lambda e1, e2: maneuver_cost(
-            turn_angle_deg(e1("coordinates"), e2("coordinates")), profile
-        ),
-    )
-    w = {
-        (r["_u"], r["_v"]): r["w"] for r in priced.edges.collect()
-    }
+    # the priced linegraph must compile: with the interpreted fallback
+    # off, generated code past the 64 KB method limit raises
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        priced = g.to_linegraph(
+            weight="w",
+            turn_cost=lambda e1, e2: maneuver_cost(
+                turn_angle_deg(e1("coordinates"), e2("coordinates")), profile
+            ),
+        )
+        w = {
+            (r["_u"], r["_v"]): r["w"] for r in priced.edges.collect()
+        }
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
     assert w[("A|B", "B|C")] == pytest.approx(16.0)   # 1 + left 15
     assert w[("A|B", "B|D")] == pytest.approx(1.0)    # straight free
     assert w[("A|B", "B|A")] == pytest.approx(101.0)  # 1 + uturn 100
     assert w[("B|C", "C|E")] == pytest.approx(6.0)    # 1 + right 5
+    # an empty profile and a NULL class (degenerate geometry) pay the
+    # default
+    angles = spark.createDataFrame([(None,), (90.0,)], "a double")
+    got = [
+        tuple(r)
+        for r in angles.select(
+            maneuver_cost(F.col("a"), {}, default=2.0),
+            maneuver_cost(F.col("a"), profile, default=3.0),
+        ).collect()
+    ]
+    assert got == [(2.0, 3.0), (2.0, 5.0)]
 
 
 def test_astar_equals_raw_sssp_on_uw(uwG):
