@@ -13,8 +13,8 @@ Distributed decomposition — the batched-IS form the PHAST/distributed
 CH literature uses, expressed as DataFrame fixpoints:
 
 * **build** — per round: (1) node priority = edge difference
-  (in·out − in − out) from two cheap degree aggregates; (2) contract
-  the INDEPENDENT SET of local priority minima (no two adjacent, so
+  (in·out − in − out) from one degree aggregate; (2) contract the
+  INDEPENDENT SET of local priority minima (no two adjacent, so
   simultaneous contractions cannot interact — the standard batched
   rule; ties broken by xxhash64 then id, so the set is deterministic);
   (3) shortcuts = in-edges × out-edges of each contracted node (one
@@ -23,7 +23,13 @@ CH literature uses, expressed as DataFrame fixpoints:
   CORRECT, just less minimal, so the cheap witness keeps the build
   join-only); (4) survivors ∪ shortcuts become the next round's
   active graph.  Every round preserves all pairwise distances among
-  still-active nodes, which is the CH exactness invariant.
+  still-active nodes, which is the CH exactness invariant.  A round
+  checkpoints two frames: the node state ``(_n, _is)``, whose filters
+  are the independent set and the next round's unranked nodes, and
+  the next active arc frame, whose ``_new`` flag marks the round's
+  shortcuts for the search graph.  The first checkpoint, the
+  canonical arcs, is materialized by the one aggregate that reads the
+  edge fingerprint and the arc count.
 * **core cutoff** — after ``max_rounds`` the remaining active nodes
   (if any) become an uncontracted CORE sharing the top rank; queries
   treat core-internal edges as upward for BOTH searches (the
@@ -231,12 +237,12 @@ def _resolve_store(store_dir: str, meta_name: str, what: str) -> tuple:
         return store_dir, json.load(fh)
 
 
-def _min_edges(edges: DataFrame) -> DataFrame:
+def _min_edges(edges: DataFrame, *carry: str) -> DataFrame:
     """Parallel-edge min: one row per (u, v) keeping the cheapest
     weight (mid rides along in the struct-min, deterministically —
     NULL mid, i.e. an original edge, sorts FIRST on ties, so an
     equal-weight original beats a shortcut and unpacking stays
-    shallow)."""
+    shallow).  The ``carry`` columns ride along last, after ``mid``."""
     return (
         edges.groupBy("_u", "_v")
         .agg(
@@ -245,10 +251,187 @@ def _min_edges(edges: DataFrame) -> DataFrame:
                     F.col("w"),
                     F.col("mid").isNotNull().alias("_is_sc"),
                     F.col("mid"),
+                    *carry,
                 )
             ).alias("b")
         )
-        .select("_u", "_v", F.col("b.w").alias("w"), F.col("b.mid").alias("mid"))
+        .select(
+            "_u",
+            "_v",
+            F.col("b.w").alias("w"),
+            F.col("b.mid").alias("mid"),
+            *(F.col(f"b.{c}").alias(c) for c in carry),
+        )
+    )
+
+
+def _routable_arcs(graph, weight) -> DataFrame:
+    """The canonical routable arc frame a hierarchy is built from:
+    ``graph``'s edges with self-loops dropped (they never route), the
+    ``weight`` column cast to double as ``w``, parallel-min'd, and a
+    NULL ``mid`` (every arc is an original edge)."""
+    w = graph._weight_col(weight)
+    return _min_edges(
+        graph.edges.select("_u", "_v", w.cast("double").alias("w"))
+        .filter(F.col("_u") != F.col("_v"))
+        .withColumn("mid", F.lit(None).cast(graph._id_type()))
+    )
+
+
+def _fingerprint(arcs: DataFrame) -> tuple[str, int]:
+    """``(count:bit_xor(xxhash64(u, v, w)), count)`` of an arc frame,
+    read with one aggregate.  The xor-fold is order-independent and
+    overflow-free (ANSI-safe, unlike a sum over int64 hashes)."""
+    row = arcs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(
+            F.xxhash64(*(F.col(c).cast("string") for c in ("_u", "_v", "w")))
+        ).alias("h"),
+    ).collect()[0]
+    return f"{row['n']}:{row['h']}", row["n"]
+
+
+def _independent_set(active: DataFrame, unranked: DataFrame) -> DataFrame:
+    """``(_n, _is)`` over the ``unranked`` nodes of one build round:
+    ``_is`` marks the INDEPENDENT SET of local priority minima over the
+    ``active`` arcs.  Priority is the edge difference (in·out − in −
+    out) from one degree aggregate; ties break by xxhash64 then id, so
+    the set is deterministic and no two members are adjacent."""
+    deg = (
+        active.select(F.col("_u").alias("_n"), F.lit(True).alias("_out"))
+        .unionByName(
+            active.select(F.col("_v").alias("_n"), F.lit(False).alias("_out"))
+        )
+        .groupBy("_n")
+        .agg(
+            F.count_if("_out").alias("_od"),
+            F.count_if(~F.col("_out")).alias("_id"),
+        )
+    )
+    od = F.coalesce(F.col("_od"), F.lit(0))
+    ind = F.coalesce(F.col("_id"), F.lit(0))
+    prio = unranked.join(deg, "_n", "left").select(
+        "_n",
+        F.struct(
+            (od * ind - od - ind).alias("p"),
+            F.xxhash64(F.col("_n").cast("string")).alias("h"),
+            F.col("_n").alias("n"),
+        ).alias("_key"),
+    )
+    # neighbor relation (both directions), then min neighbor key
+    nbr = (
+        active.select(F.col("_u").alias("_a"), F.col("_v").alias("_b"))
+        .unionByName(
+            active.select(F.col("_v").alias("_a"), F.col("_u").alias("_b"))
+        )
+        .join(
+            prio.select(F.col("_n").alias("_b"), F.col("_key").alias("_bkey")),
+            "_b",
+        )
+        .groupBy("_a")
+        .agg(F.min("_bkey").alias("_minnbr"))
+    )
+    return prio.join(nbr.withColumnRenamed("_a", "_n"), "_n", "left").select(
+        "_n",
+        (
+            F.col("_minnbr").isNull() | (F.col("_key") < F.col("_minnbr"))
+        ).alias("_is"),
+    )
+
+
+def _contract_set(
+    active: DataFrame, isdf: DataFrame, customizable: bool
+) -> DataFrame:
+    """The next round's active arcs ``(_u, _v, w, mid, _new)`` after
+    contracting the independent set ``isdf`` (``_n``): shortcuts =
+    in-arcs × out-arcs of each contracted node (one equi-join), pruned
+    by witnesses, merged with the surviving arcs by one struct-min.
+    ``_new`` flags the rows that are this round's shortcuts — a
+    shortcut that survives the direct-arc witness is strictly cheaper
+    than the surviving arc on its pair, so it always wins the min."""
+    inc = active.join(isdf.withColumnRenamed("_n", "_v"), "_v").select(
+        F.col("_u").alias("_su"),
+        F.col("_v").alias("_mid"),
+        F.col("w").alias("_w1"),
+    )
+    out = active.join(isdf.withColumnRenamed("_n", "_u"), "_u").select(
+        F.col("_u").alias("_mid"),
+        F.col("_v").alias("_sv"),
+        F.col("w").alias("_w2"),
+    )
+    sc = (
+        inc.join(out, "_mid")
+        .filter(F.col("_su") != F.col("_sv"))
+        .select(
+            F.col("_su").alias("_u"),
+            F.col("_sv").alias("_v"),
+            (F.col("_w1") + F.col("_w2")).alias("w"),
+            F.col("_mid").alias("mid"),
+        )
+    )
+    survivors = active.join(
+        isdf.withColumnRenamed("_n", "_u"), "_u", "left_anti"
+    ).join(isdf.withColumnRenamed("_n", "_v"), "_v", "left_anti")
+    # witness pruning — without it grid-like graphs blow up in
+    # shortcuts (the classic CH failure mode; measured: the 64x64
+    # probe ground 20+ min in round joins before the 2-hop witness
+    # landed): (1) a surviving direct edge at least as cheap
+    # dominates; (2) a cheaper-or-equal 2-hop path through a SURVIVING
+    # mid dominates (its edges outlive the round, so distance
+    # preservation holds; cheap 2-hop paths through OTHER IS mids need
+    # no witness — their own shortcut is generated this same round and
+    # the parallel-min keeps the best).  Dropping only dominated
+    # shortcuts never loses a needed one: exactness untouched.
+    direct = survivors.select("_u", "_v", F.col("w").alias("_wd"))
+    sc = (
+        sc.join(direct, ["_u", "_v"], "left")
+        .filter(F.col("_wd").isNull() | (F.col("w") < F.col("_wd")))
+        .drop("_wd")
+    )
+    if not customizable:
+        # multi-hop witness: customizable builds MUST keep these
+        # shortcuts — a 2-hop witness path can get worse under a
+        # re-metric and the pruned shortcut would then be missing
+        # (direct-arc dominance is safe: the dominating arc itself
+        # survives into the search graph and customize() re-relaxes
+        # its weight).  The 2-path enumeration only takes legs that
+        # can matter: the first leg starts at an in-neighbour of the
+        # independent set, the second ends at an out-neighbour of it.
+        # Every shortcut runs from the one to the other, so the
+        # restricted min is the full min on every shortcut pair.
+        leg_a = survivors.join(
+            inc.select(F.col("_su").alias("_u")), "_u", "left_semi"
+        )
+        leg_b = survivors.join(
+            out.select(F.col("_sv").alias("_v")), "_v", "left_semi"
+        )
+        p2 = (
+            leg_a.select(
+                F.col("_u").alias("_pu"),
+                F.col("_v").alias("_pm"),
+                F.col("w").alias("_wa"),
+            )
+            .join(
+                leg_b.select(
+                    F.col("_u").alias("_pm"),
+                    F.col("_v").alias("_pv"),
+                    F.col("w").alias("_wb"),
+                ),
+                "_pm",
+            )
+            .filter(F.col("_pu") != F.col("_pv"))
+            .groupBy(F.col("_pu").alias("_u"), F.col("_pv").alias("_v"))
+            .agg(F.min(F.col("_wa") + F.col("_wb")).alias("_w2h"))
+        )
+        sc = (
+            sc.join(p2, ["_u", "_v"], "left")
+            .filter(F.col("_w2h").isNull() | (F.col("w") < F.col("_w2h")))
+            .drop("_w2h")
+        )
+    return _min_edges(
+        survivors.select("_u", "_v", "w", "mid", F.lit(False).alias("_new"))
+        .unionByName(sc.withColumn("_new", F.lit(True))),
+        "_new",
     )
 
 
@@ -354,32 +537,13 @@ class ContractionHierarchy:
     # ------------------------------------------------------ freshness
     @staticmethod
     def _graph_fingerprint(graph, weight) -> str:
-        """Order-independent digest of the canonical routable edge
-        frame (self-loops dropped, parallel-min'd, weight projected) —
-        ``count:bit_xor(xxhash64(u, v, w))``.  Cheap (one aggregate scan)
-        and exactly the frame ``build`` contracts, so any keyed edge
+        """Order-independent digest of the canonical routable arc frame
+        (:func:`_routable_arcs`) — ``count:bit_xor(xxhash64(u, v, w))``
+        over exactly the frame ``build`` contracts, so any keyed edge
         mutation (M1/M2), weight change, or added/dropped edge flips
-        it."""
-        w = graph._weight_col(weight)
-        e = (
-            graph.edges.select("_u", "_v", w.cast("double").alias("w"))
-            .filter(F.col("_u") != F.col("_v"))
-            .groupBy("_u", "_v")
-            .agg(F.min("w").alias("w"))
-        )
-        row = e.select(
-            F.xxhash64(
-                F.col("_u").cast("string"),
-                F.col("_v").cast("string"),
-                F.col("w").cast("string"),
-            ).alias("_h")
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            # xor-fold: order-independent and overflow-free (ANSI-safe,
-            # unlike sum over int64 hashes)
-            F.expr("bit_xor(_h)").alias("h"),
-        ).collect()[0]
-        return f"{row['n']}:{row['h']}"
+        it.  Three Spark jobs; the distributed build reads the same
+        value off its first checkpoint instead."""
+        return _fingerprint(_routable_arcs(graph, weight))[0]
 
     def check_fresh(self, graph, weight: str | None = None) -> None:
         """Raise unless ``graph``'s edge table still matches the one
@@ -516,24 +680,30 @@ class ContractionHierarchy:
         exact arc weights for ANY positive metric without
         recontracting (the penalty-method :meth:`alternatives`
         lifecycle).  Costs more shortcuts than a witness-pruned build
-        (the standard CCH trade)."""
+        (the standard CCH trade).
+
+        The distributed build scopes ``spark.sql.shuffle.partitions``
+        (:func:`scoped_shuffle_partitions`) around its round loop and
+        result assembly, sized by the canonical arc count (self-loops
+        dropped, parallel arcs min'd) read off its first checkpoint,
+        not by the raw edge count; ``strategy="pregel"`` counts no raw
+        edges.  The scope restores the session value on exit, also
+        when the build raises, but it is still a read-set-restore of a
+        session-global conf: concurrent scopes with different values
+        can interleave."""
         if strategy == "local" or (
             strategy == "auto" and graph._edge_count() < LOCAL_THRESHOLD
         ):
             return cls._build_local(
                 graph, weight, max_rounds, customizable=customizable
             )
-        # scope the build loop's shuffles to the graph's size (exact
-        # memoized count; see _scaled_shuffle — same rationale, but the
-        # artifact doesn't exist yet so the basis is the input edges)
-        with scoped_shuffle_partitions(graph.spark, graph._edge_count()):
-            return cls._build_pregel(
-                graph,
-                weight,
-                max_rounds,
-                local_finish=local_finish,
-                customizable=customizable,
-            )
+        return cls._build_pregel(
+            graph,
+            weight,
+            max_rounds,
+            local_finish=local_finish,
+            customizable=customizable,
+        )
 
     @staticmethod
     def _contract_core(
@@ -720,18 +890,19 @@ class ContractionHierarchy:
         25-node DAG spends most of its wall on the last 5 single-node
         rounds).  The top of a CH is small and dense by construction,
         so this is the standard hybrid; set 0 to disable (remainder
-        past max_rounds then becomes the exact CORE)."""
+        past max_rounds then becomes the exact CORE).
+
+        Each round materializes two frames: the node state ``(_n,
+        _is)`` (:func:`_independent_set`), whose filters are the
+        round's independent set and the next round's unranked nodes,
+        and the next active arc frame (:func:`_contract_set`)."""
         spark = graph.spark
         idt = graph._id_type()
-        w = graph._weight_col(weight)
-        active = (
-            graph.edges.select(
-                F.col("_u"), F.col("_v"), w.cast("double").alias("w")
-            )
-            .filter(F.col("_u") != F.col("_v"))  # self loops never route
-            .withColumn("mid", F.lit(None).cast(idt))
-        )
-        active = _min_edges(active).localCheckpoint(eager=True)
+        # lazy checkpoint + fingerprint fold: the one aggregate that
+        # materializes the canonical arcs also answers the fingerprint
+        # and the arc count that scopes the loop's shuffles
+        active = _routable_arcs(graph, weight).localCheckpoint(eager=False)
+        fingerprint, n_arcs = _fingerprint(active)
         orig0 = active.select("_u", "_v", "w") if customizable else None
         # endpoints may reference nodes absent from the nodes table
         # (partial loads); every endpoint MUST get a rank or the final
@@ -745,238 +916,92 @@ class ContractionHierarchy:
         rank_schema = _schema(idt, "_n", "rank")
         search_parts = [active]
         rank_parts: list[DataFrame] = []
-        # lazy checkpoint + count fold: the count materializes the
-        # checkpoint and returns the probe value in one scheduled job
-        unranked = all_nodes.localCheckpoint(eager=False)
-        n_left = unranked.count()
-        rounds = 0
-        for r in range(1, max_rounds + 1):
-            if n_left == 0 or n_left <= local_finish:
-                break
-            rounds = r
-            outd = active.groupBy("_u").agg(F.count(F.lit(1)).alias("_od"))
-            ind = active.groupBy("_v").agg(F.count(F.lit(1)).alias("_id"))
-            prio = (
-                unranked.join(
-                    outd.withColumnRenamed("_u", "_n"), "_n", "left"
+        # scope the build loop's shuffles to the graph's size (see
+        # _scaled_shuffle — same rationale, but the artifact doesn't
+        # exist yet so the basis is the canonical arc count)
+        with scoped_shuffle_partitions(spark, n_arcs):
+            # lazy checkpoint + count fold: the count materializes the
+            # checkpoint and returns the probe value in one scheduled job
+            unranked = all_nodes.localCheckpoint(eager=False)
+            n_left = unranked.count()
+            rounds = 0
+            for r in range(1, max_rounds + 1):
+                if n_left == 0 or n_left <= local_finish:
+                    break
+                rounds = r
+                # lazy rebase + count fold (the conditional count is the
+                # first and only action before the state is re-referenced)
+                state = rebase_checkpoint(
+                    _independent_set(active, unranked), eager=False
                 )
-                .join(ind.withColumnRenamed("_v", "_n"), "_n", "left")
-                .select(
-                    "_n",
-                    F.struct(
-                        (
-                            F.coalesce(F.col("_od"), F.lit(0))
-                            * F.coalesce(F.col("_id"), F.lit(0))
-                            - F.coalesce(F.col("_od"), F.lit(0))
-                            - F.coalesce(F.col("_id"), F.lit(0))
-                        ).alias("p"),
-                        F.xxhash64(F.col("_n").cast("string")).alias("h"),
-                        F.col("_n").alias("n"),
-                    ).alias("_key"),
+                n_left = state.agg(F.count_if(~F.col("_is"))).first()[0]
+                isdf = state.filter("_is").select("_n")
+                unranked = state.filter(~F.col("_is")).select("_n")
+                # EAGER: a lazy localCheckpoint here nests every prior
+                # round's plan into this one and Catalyst analysis goes
+                # exponential (measured: 33s rounds on a 25-node graph
+                # by round 9 — the r13 build-loop lesson)
+                active = rebase_checkpoint(
+                    _contract_set(active, isdf, customizable)
                 )
-            )
-            # neighbor relation (both directions), then min neighbor key
-            nbr = (
-                active.select(F.col("_u").alias("_a"), F.col("_v").alias("_b"))
-                .unionByName(
-                    active.select(
-                        F.col("_v").alias("_a"), F.col("_u").alias("_b")
-                    )
-                )
-                .join(
-                    prio.select(
-                        F.col("_n").alias("_b"), F.col("_key").alias("_bkey")
-                    ),
-                    "_b",
-                )
-                .groupBy("_a")
-                .agg(F.min("_bkey").alias("_minnbr"))
-            )
-            # EAGER checkpoints throughout: a lazy localCheckpoint here
-            # nests every prior round's plan into this one and Catalyst
-            # analysis goes exponential (measured: 33s rounds on a
-            # 25-node graph by round 9 — the r13 build-loop lesson)
-            isdf = (
-                prio.join(nbr.withColumnRenamed("_a", "_n"), "_n", "left")
-                .filter(
-                    F.col("_minnbr").isNull()
-                    | (F.col("_key") < F.col("_minnbr"))
-                )
-                .select("_n")
-            )
-            # lazy rebase + count fold (one job; the count is the
-            # first and only action before isdf is re-referenced)
-            isdf = rebase_checkpoint(isdf, eager=False)
-            n_left -= isdf.count()
-            inc = active.join(
-                isdf.withColumnRenamed("_n", "_v"), "_v"
-            ).select(
-                F.col("_u").alias("_su"),
-                F.col("_v").alias("_mid"),
-                F.col("w").alias("_w1"),
-            )
-            out = active.join(
-                isdf.withColumnRenamed("_n", "_u"), "_u"
-            ).select(
-                F.col("_u").alias("_mid"),
-                F.col("_v").alias("_sv"),
-                F.col("w").alias("_w2"),
-            )
-            sc = (
-                inc.join(out, "_mid")
-                .filter(F.col("_su") != F.col("_sv"))
-                .select(
-                    F.col("_su").alias("_u"),
-                    F.col("_sv").alias("_v"),
-                    (F.col("_w1") + F.col("_w2")).alias("w"),
-                    F.col("_mid").alias("mid"),
-                )
-            )
-            # checkpoint: the witness stage references sc three times
-            # (candidates + two endpoint semi-joins) — don't recompute
-            # the generation join per reference
-            sc = rebase_checkpoint(_min_edges(sc))
-            survivors = active.join(
-                isdf.withColumnRenamed("_n", "_u"), "_u", "left_anti"
-            ).join(isdf.withColumnRenamed("_n", "_v"), "_v", "left_anti")
-            # witness pruning — without it grid-like graphs blow up in
-            # shortcuts (the classic CH failure mode; measured: the
-            # 64x64 probe ground 20+ min in round joins before the
-            # 2-hop witness landed): (1) a surviving direct edge at
-            # least as cheap dominates; (2) a cheaper-or-equal 2-hop
-            # path through a SURVIVING mid dominates (its edges
-            # outlive the round, so distance preservation holds;
-            # cheap 2-hop paths through OTHER IS mids need no witness
-            # — their own shortcut is generated this same round and
-            # the parallel-min keeps the best).  Dropping only
-            # dominated shortcuts never loses a needed one: exactness
-            # untouched.
-            direct = survivors.select("_u", "_v", F.col("w").alias("_wd"))
-            sc = (
-                sc.join(direct, ["_u", "_v"], "left")
-                .filter(F.col("_wd").isNull() | (F.col("w") < F.col("_wd")))
-                .drop("_wd")
-            )
-            if not customizable:
-                # multi-hop witness: customizable builds MUST keep
-                # these shortcuts — a 2-hop witness path can get worse
-                # under a re-metric and the pruned shortcut would then
-                # be missing (direct-arc dominance is safe: the
-                # dominating arc itself survives into the search graph
-                # and customize() re-relaxes its weight).
-                # Restrict the 2-path enumeration to legs that can
-                # matter: first leg starts at a shortcut source,
-                # second leg ends at a shortcut target (two semi-joins
-                # against the round-sized candidate endpoint sets)
-                leg_a = survivors.join(
-                    sc.select("_u").distinct(), "_u", "left_semi"
-                )
-                leg_b = survivors.join(
-                    sc.select("_v").distinct(), "_v", "left_semi"
-                )
-                p2 = (
-                    leg_a.select(
-                        F.col("_u").alias("_pu"),
-                        F.col("_v").alias("_pm"),
-                        F.col("w").alias("_wa"),
-                    )
-                    .join(
-                        leg_b.select(
-                            F.col("_u").alias("_pm"),
-                            F.col("_v").alias("_pv"),
-                            F.col("w").alias("_wb"),
-                        ),
-                        "_pm",
-                    )
-                    .filter(F.col("_pu") != F.col("_pv"))
-                    .groupBy(
-                        F.col("_pu").alias("_u"), F.col("_pv").alias("_v")
-                    )
-                    .agg(F.min(F.col("_wa") + F.col("_wb")).alias("_w2h"))
-                )
-                sc = (
-                    sc.join(p2, ["_u", "_v"], "left")
-                    .filter(
-                        F.col("_w2h").isNull()
-                        | (F.col("w") < F.col("_w2h"))
-                    )
-                    .drop("_w2h")
-                )
-            active = rebase_checkpoint(
-                _min_edges(
-                    survivors.select("_u", "_v", "w", "mid").unionByName(sc)
-                )
-            )
-            search_parts.append(
-                active.join(
-                    # only the NEW shortcuts need appending; survivors
-                    # are already in earlier parts.  Re-derive them by
-                    # mid∈IS (a shortcut's mid is its creation round's
-                    # contracted node, unique to this round).
-                    isdf.withColumnRenamed("_n", "mid"),
-                    "mid",
-                ).select("_u", "_v", "w", "mid")
-            )
-            rank_parts.append(
-                isdf.select("_n", F.lit(r).cast("long").alias("rank"))
-            )
-            unranked = rebase_checkpoint(
-                unranked.join(isdf, "_n", "left_anti")
-            )
-        core_size = 0
-        if n_left > 0 and n_left <= local_finish:
-            # LOCAL FINISH: contract the small remainder driver-side
-            # with the shared core, ranks stacked ABOVE every
-            # distributed round (these are the hierarchy's top nodes)
-            rank_rows, sc_rows = cls._contract_core(
-                {(rw["_u"], rw["_v"]): rw["w"] for rw in active.collect()},
-                {rw["_n"] for rw in unranked.collect()},
-                start_rank=rounds,
-                full_witness=not customizable,
-            )
-            rank_parts.append(spark.createDataFrame(rank_rows, rank_schema))
-            if sc_rows:
                 search_parts.append(
-                    spark.createDataFrame(
-                        sc_rows, _schema(idt, *_SEARCH_COLS[:4])
+                    active.filter("_new").select(*_SEARCH_COLS[:4])
+                )
+                rank_parts.append(
+                    isdf.select("_n", F.lit(r).cast("long").alias("rank"))
+                )
+            core_size = 0
+            if n_left > 0 and n_left <= local_finish:
+                # LOCAL FINISH: contract the small remainder driver-side
+                # with the shared core, ranks stacked ABOVE every
+                # distributed round (these are the hierarchy's top nodes)
+                rank_rows, sc_rows = cls._contract_core(
+                    {(rw["_u"], rw["_v"]): rw["w"] for rw in active.collect()},
+                    {rw["_n"] for rw in unranked.collect()},
+                    start_rank=rounds,
+                    full_witness=not customizable,
+                )
+                rank_parts.append(spark.createDataFrame(rank_rows, rank_schema))
+                if sc_rows:
+                    search_parts.append(
+                        spark.createDataFrame(
+                            sc_rows, _schema(idt, *_SEARCH_COLS[:4])
+                        )
+                    )
+            elif n_left > 0:
+                # core: whatever outlasted max_rounds shares the top rank
+                core_size = n_left
+                rank_parts.append(
+                    unranked.select(
+                        "_n", F.lit(CORE_RANK).cast("long").alias("rank")
                     )
                 )
-        elif n_left > 0:
-            # core: whatever outlasted max_rounds shares the top rank
-            core_size = n_left
-            rank_parts.append(
-                unranked.select(
-                    "_n", F.lit(CORE_RANK).cast("long").alias("rank")
-                )
+            ranks = functools.reduce(
+                lambda a, b: a.unionByName(b),
+                rank_parts,
+                spark.createDataFrame([], rank_schema),
             )
-        ranks = functools.reduce(
-            lambda a, b: a.unionByName(b),
-            rank_parts,
-            spark.createDataFrame([], rank_schema),
-        )
-        search = _min_edges(
-            functools.reduce(lambda a, b: a.unionByName(b), search_parts)
-        )
-        ru = ranks.select(
-            F.col("_n").alias("_u"), F.col("rank").alias("_ru")
-        )
-        rv = ranks.select(
-            F.col("_n").alias("_v"), F.col("rank").alias("_rv")
-        )
-        search = (
-            search.join(ru, "_u").join(rv, "_v").persist()
-        )
-        return cls(
-            spark,
-            ranks.localCheckpoint(eager=True),
-            search,
-            search.count(),
-            rounds,
-            core_size,
-            cls._graph_fingerprint(graph, weight),
-            customizable=customizable,
-            orig_edges=orig0,
-        )
+            search = _min_edges(
+                functools.reduce(lambda a, b: a.unionByName(b), search_parts)
+            )
+            ru = ranks.select(
+                F.col("_n").alias("_u"), F.col("rank").alias("_ru")
+            )
+            rv = ranks.select(
+                F.col("_n").alias("_v"), F.col("rank").alias("_rv")
+            )
+            search = search.join(ru, "_u").join(rv, "_v").persist()
+            return cls(
+                spark,
+                ranks.localCheckpoint(eager=True),
+                search,
+                search.count(),
+                rounds,
+                core_size,
+                fingerprint,
+                customizable=customizable,
+                orig_edges=orig0,
+            )
 
     # ------------------------------------ customization (CCH re-metric)
     @_scaled_shuffle

@@ -5,13 +5,19 @@ cutoff, and local==pregel query parity."""
 
 from __future__ import annotations
 
+import hashlib
 import heapq
 
 import networkx as nx
 import pytest
 from pyspark.sql import functions as F
 
-from entwiner_spark.operators.ch import CORE_RANK, ContractionHierarchy
+from entwiner_spark.operators import ch as ch_module
+from entwiner_spark.operators.ch import (
+    _SEARCH_COLS,
+    CORE_RANK,
+    ContractionHierarchy,
+)
 from entwiner_spark.operators.graph import SparkGraph
 
 
@@ -895,3 +901,133 @@ def test_phast_job_and_stage_counts(spark, spark_cost):
     assert spark_cost(
         lambda: ch.sssp_multi(["0:0", "5:5", "2:4"], strategy="pregel").collect()
     ) == (75, 75)
+
+
+def _rows_digest(rows) -> str:
+    """Order-independent digest of collected rows: sha256 of the repr of
+    their value tuples, sorted by repr (first 16 hex digits)."""
+    return hashlib.sha256(
+        repr(sorted((tuple(r) for r in rows), key=repr)).encode()
+    ).hexdigest()[:16]
+
+
+# ContractionHierarchy.build(_grid_graph(spark, 6), weight="w",
+# strategy="pregel", **kwargs) before the build loop materialized one
+# node state and one arc frame per round: (search rows digest, ranks rows
+# digest, rounds, core_size, n_search_edges).
+PREGEL_BUILD_GOLDENS = {
+    "customizable": (
+        dict(local_finish=4, customizable=True),
+        ("2609feeb4bd999fa", "c5d49e3dc716e797", 11, 0, 260),
+    ),
+    "witness": (
+        dict(local_finish=4),
+        ("5059f66d70f0900f", "600d972651d45563", 10, 0, 184),
+    ),
+    "core": (
+        dict(max_rounds=1, local_finish=0),
+        ("51058373962acdbc", "42f1fd9f7f35230a", 1, 28, 144),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PREGEL_BUILD_GOLDENS))
+def test_ch_pregel_build_rows_match_goldens(spark, case):
+    """The distributed build returns the same hierarchy, row for row,
+    as it did with four materializations per round: both pruning modes
+    on a 6x6 grid, and a one-round core cutoff."""
+    kwargs, want = PREGEL_BUILD_GOLDENS[case]
+    g = _grid_graph(spark, 6)
+    ch = ContractionHierarchy.build(g, weight="w", strategy="pregel", **kwargs)
+    got = (
+        _rows_digest(ch.search.select(*_SEARCH_COLS).collect()),
+        _rows_digest(ch.ranks.select("_n", "rank").collect()),
+        ch.rounds,
+        ch.core_size,
+        ch.n_search_edges,
+    )
+    assert got == want
+
+
+def test_ch_pregel_build_fingerprint_from_first_checkpoint(spark):
+    """The fingerprint the distributed build reads off its first
+    checkpoint equals the standalone one, on a graph with parallel
+    arcs, a self-loop and a node that only the node table names."""
+    edges = spark.createDataFrame(
+        [
+            ("a", "b", 2.0),
+            ("a", "b", 1.0),
+            ("b", "c", 1.0),
+            ("c", "c", 5.0),
+            ("c", "a", 3.0),
+            ("c", "a", 3.0),
+        ],
+        "_u string, _v string, w double",
+    )
+    nodes = spark.createDataFrame([("a",), ("b",), ("c",), ("z",)], "_n string")
+    g = SparkGraph(nodes, edges)
+    ch = ContractionHierarchy.build(
+        g, weight="w", strategy="pregel", local_finish=0
+    )
+    assert ch.edge_fingerprint == ContractionHierarchy._graph_fingerprint(g, "w")
+    assert ch.edge_fingerprint.startswith("3:")
+    assert {r["_n"] for r in ch.ranks.collect()} == {"a", "b", "c", "z"}
+
+
+def test_ch_pregel_build_restores_shuffle_partitions(spark, monkeypatch):
+    """The build loop runs with the shuffle width scoped to its arc
+    count, and the session's width is back afterwards, also when the
+    build raises inside the loop."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    g = _grid_graph(spark, 4)
+    ContractionHierarchy.build(g, weight="w", strategy="pregel", local_finish=4)
+    assert spark.conf.get(key) == width
+
+    seen = []
+
+    def boom(*args):
+        seen.append(spark.conf.get(key))
+        raise RuntimeError("round failed")
+
+    monkeypatch.setattr(ch_module, "_contract_set", boom)
+    with pytest.raises(RuntimeError, match="round failed"):
+        ContractionHierarchy.build(
+            g, weight="w", strategy="pregel", local_finish=4
+        )
+    assert seen == ["1"]  # 48 arcs: one partition inside the loop
+    assert spark.conf.get(key) == width
+
+
+@pytest.mark.parametrize(
+    "customizable, jobs",
+    [(True, range(99, 106)), (False, range(110, 120))],
+    ids=["customizable", "witness"],
+)
+def test_ch_pregel_build_job_and_stage_counts(
+    spark, spark_cost, customizable, jobs
+):
+    """Distributed build of the 4x4 grid (``local_finish=4``): two
+    materializations per round, the fingerprint and arc count read off
+    the first checkpoint.  Before, four materializations per round plus
+    a separate fingerprint and edge count ran 178-181 jobs
+    (customizable) and 172-175 (witness-pruned).  Every job is one
+    stage.  The count moves
+    by a few between identical calls: AQE plans the joins against the
+    checkpointed frames, whose size is unknown at planning time, as
+    shuffle joins and turns them into broadcast joins once a side's
+    stage reports its size.  Whether a shuffle exchange above such a
+    join has already been submitted as a stage by then depends on which
+    stage finished first, so the pin is a range."""
+    g = _grid_graph(spark, 4)
+    n_jobs, n_stages = spark_cost(
+        lambda: ContractionHierarchy.build(
+            g,
+            weight="w",
+            strategy="pregel",
+            local_finish=4,
+            customizable=customizable,
+        )
+    )
+    assert n_jobs == n_stages
+    assert n_jobs in jobs

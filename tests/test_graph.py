@@ -2680,7 +2680,15 @@ def test_pregel_sssp_job_and_stage_counts(spark, spark_cost, op, expected):
     stages it ran before its round became the shared wavefront helper,
     and the star-rewiring connected components the (jobs, stages) it
     ran when first pinned.  A route's count moves by one between
-    repeated runs, so the pin is the observed set."""
+    repeated runs, so the pin is the observed set.  The extra job is
+    an AQE stage race, seen in one round of the ancestor closure that
+    ``_reconstruct_path`` checkpoints lazily and counts: joins against
+    checkpointed frames are planned as shuffle joins (their size is
+    unknown at planning time) and turned into broadcast joins once a
+    side's stage reports its size; when the shuffle exchange above
+    such a join has already been submitted as a stage by then, it runs
+    as one more job, otherwise it never runs.  Which stage finishes
+    first decides it."""
     g = _grid(spark)
     assert spark_cost(lambda: op(g)) in expected
 
